@@ -4,8 +4,12 @@ import java.lang.ref.WeakReference
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.commons.codec.digest.DigestUtils
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -20,6 +24,12 @@ import org.apache.spark.storage.StorageLevel
   * round until the ContextCleaner happens to collect the RDD — in a
   * long session (or a bench run) those stack up and tax every query
   * that follows with eviction and GC pressure.
+  *
+  * Also the one home of the build-once lifecycle every memoized
+  * artifact shares: [[memo]] for session-keyed in-memory frames,
+  * [[perContext]] for context-keyed values, [[store]] for the
+  * persisted `graft_*` catalog tables, and [[sweepStoppedKeys]] for
+  * the irregular caches in between.
   */
 object Lineage {
 
@@ -61,16 +71,17 @@ object Lineage {
   // tests) keep today's ContextCleaner behavior instead of accumulating
   // strong refs the GC could otherwise reclaim.
 
-  /** Drop a session-keyed cache's entries whose SparkSession has
-    * stopped — shared by every memoization catalog (GraphCatalog, the
-    * PQ index cache, WikiDump, the stream feed cache, this registry): a
+  /** Drop a cache's entries whose SparkContext has stopped — the one
+    * sweep behind every memoization catalog and persisted store: a
     * stopped context's block-store state is already gone, so a stale
-    * entry only pins the dead session's object graph on the driver
-    * (ADVICE r8 leak class). One implementation, five users — the
-    * code-review r9 note on the copy-pasted sweep. */
-  def sweepStoppedKeys[K, V](m: TrieMap[K, V])(session: K => SparkSession): Unit =
+    * entry only pins the dead context's object graph on the driver
+    * (ADVICE r8 leak class). `ctx` maps a key to its context
+    * (`_._1` for context-keyed caches, `_._1.sparkContext` for
+    * session-keyed ones). */
+  def sweepStoppedKeys[K, V](m: TrieMap[K, V])(
+      ctx: K => SparkContext): Unit =
     m.keys.foreach { k =>
-      if (session(k).sparkContext.isStopped) m.remove(k)
+      if (ctx(k).isStopped) m.remove(k)
     }
 
   private val scratch =
@@ -119,7 +130,7 @@ object Lineage {
     * the block store until its session stops. */
   def memo[K](cache: TrieMap[(SparkSession, K), DataFrame],
               s: SparkSession, key: K)(build: => DataFrame): DataFrame = {
-    sweepStoppedKeys(cache)(_._1)
+    sweepStoppedKeys(cache)(_._1.sparkContext)
     once(cache, (s, key)) {
       val a = build.persist(StorageLevel.MEMORY_AND_DISK)
       a.count()
@@ -136,12 +147,70 @@ object Lineage {
     * fast path stays lock-free; only a key's FIRST build takes the
     * cache lock (distinct keys of one cache serialize their first
     * builds, fine for rare driver-side events). Every memoizing
-    * catalog (this file, GraphCatalog, WikiDump, the query caches)
-    * funnels through here. */
+    * catalog funnels through here: directly (GraphCatalog, WikiDump),
+    * through [[memo]] for session-keyed frames, and through
+    * [[perContext]] / [[store]] for context-keyed values and persisted
+    * catalog tables. */
   def once[K, V](cache: TrieMap[K, V], key: K)(build: => V): V =
     cache.get(key).getOrElse(cache.synchronized {
       cache.getOrElseUpdate(key, build)
     })
+
+  /** Context-keyed build-once: sweep the cache's stopped contexts, then
+    * [[once]] on `(s.sparkContext, key)` — the scalar / name caches
+    * whose value outlives any one session of the context (see
+    * [[store]] for why the key is the context). */
+  def perContext[K, V](cache: TrieMap[(SparkContext, K), V],
+                       s: SparkSession, key: K)(build: => V): V = {
+    sweepStoppedKeys(cache)(_._1)
+    once(cache, (s.sparkContext, key))(build)
+  }
+
+  /** The physical name of corpus `d`'s store: `prefix` + the first 8
+    * hex digits of md5(d). The commit manifest derives its names
+    * through here too, so a pointer can never drift from the table its
+    * builder wrote. */
+  def storeTable(prefix: String, d: String): String =
+    prefix + DigestUtils.md5Hex(d).take(8)
+
+  /** Build-once PERSISTED catalog table over corpus `d`: on the first
+    * call per (context, d), clear `storeTable(prefix, d)` — drop the
+    * catalog entry AND delete any orphaned managed location — then
+    * run `write(tbl)` and return `tbl`; later calls return the name
+    * without writing. The caller owns the write (bucketed or plain,
+    * overwrite then appends), its guards and its read path.
+    *
+    * The store contract, stated once for every `graft_*` store:
+    *  - Keyed by SparkContext, not SparkSession: the table is a
+    *    CATALOG artifact, and sibling sessions of one context share the
+    *    catalog. A per-session key would have the second session DROP
+    *    and rewrite the store the first is serving (FileNotFoundException
+    *    mid-probe, or silently partial results). Stopped contexts are
+    *    swept so dead drivers don't pin.
+    *  - The orphaned location is deleted because the catalog is
+    *    per-JVM while the table FILES persist: a previous JVM may have
+    *    left the managed location on disk without this catalog knowing
+    *    the table, and `saveAsTable` refuses to adopt it.
+    *  - An entry is NEVER invalidated when files under `d` change
+    *    within the context's lifetime: the store assumes an immutable
+    *    corpus (ADVICE r20). Keying on an input fingerprint is the fix
+    *    (the artifact-registry item on the ROADMAP).
+    *
+    * Each store keeps its OWN cache so first builds serialize per
+    * store, and a build that reads another store (the compacted store
+    * reading the standing one) takes the two locks in a fixed order. */
+  def store(cache: TrieMap[(SparkContext, String), String], s: SparkSession,
+            d: String, prefix: String)(write: String => Unit): String =
+    perContext(cache, s, d) {
+      val tbl = storeTable(prefix, d)
+      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      val loc = new Path(
+        s.sessionState.catalog.defaultTablePath(TableIdentifier(tbl)))
+      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
+      if (fs.exists(loc)) fs.delete(loc, true)
+      write(tbl)
+      tbl
+    }
 
   /** Exempt a memoized, session-shared result (a GraphCatalog entry)
     * from scratch freeing — permanently. Freeing a truncated-lineage
@@ -165,7 +234,7 @@ object Lineage {
       if (r != null && !pinned(spark, r.id))
         r.unpersist(blocking = false)
     })
-    sweepStoppedKeys(pinnedIds)(_._1)
-    sweepStoppedKeys(scratch)(identity)
+    sweepStoppedKeys(pinnedIds)(_._1.sparkContext)
+    sweepStoppedKeys(scratch)(_.sparkContext)
   }
 }

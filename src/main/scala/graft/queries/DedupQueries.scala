@@ -583,23 +583,11 @@ object DedupQueries {
     * kept). */
   private[graft] def cleanedStore(s: SparkSession, d: String)
       : DataFrame = {
-    cleanStoreCache.keys.foreach { k =>
-      if (k._1.isStopped) cleanStoreCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(cleanStoreCache,
-        (s.sparkContext, d)) {
-      val tbl = "graft_clean_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(cleanStoreCache, s, d,
+        "graft_clean_") { tbl =>
       substringKeptFrame(s, d)
         .write.bucketBy(8, "doc_id").sortBy("doc_id")
         .mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     s.table(name)
   }
@@ -778,12 +766,6 @@ object DedupQueries {
     * standing corpus's signatures — only the (small) new dump's. */
   private val IncBuckets = 8
 
-  /** Keyed by SparkContext, not SparkSession: the persisted table is a
-    * CATALOG artifact — sibling sessions of one context share the
-    * catalog, and a per-session key would have the second session
-    * destructively DROP + rewrite the store the first is serving
-    * (FileNotFoundException mid-probe, or silently partial pairs).
-    * Stopped contexts are swept so dead drivers don't pin. */
   private val sigStoreCache =
     scala.collection.concurrent.TrieMap
       .empty[(org.apache.spark.SparkContext, String), String]
@@ -847,31 +829,17 @@ object DedupQueries {
     * against the store without re-reading or re-sketching a byte of
     * standing text (the BucketedJoinSpec zero-shuffle machinery; at
     * 100 TB the store is the only copy of the corpus the dedup path
-    * ever touches again). Built once per (session, dir); in production
+    * ever touches again). Built once per (context, dir); in production
     * the table outlives the session — the store IS the state. The `hs`
     * sketch rides along so candidate verification stays exact without
     * a corpus lookup. */
   private[graft] def signatureStore(s: SparkSession, d: String): DataFrame = {
-    sigStoreCache.keys.foreach { k =>
-      if (k._1.isStopped) sigStoreCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(sigStoreCache, (s.sparkContext, d)) {
-      val tbl = "graft_sig_store_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      // a previous JVM may have left the managed LOCATION on disk
-      // without this session's catalog knowing the table — saveAsTable
-      // refuses to adopt an orphaned location, so drop both halves
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(sigStoreCache, s, d,
+        "graft_sig_store_") { tbl =>
       bandedSigs(Tables.documents(s, d)
           .filter(col("source") =!= IncNewSource))
         .write.bucketBy(IncBuckets, "band", "bkey").sortBy("band", "bkey")
         .mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     // the production read path: resolve through the committed manifest
     // pointer once a pass has published (VERDICT r19 item 1)
@@ -893,10 +861,7 @@ object DedupQueries {
     * the probe). One 1-row agg, memoized; integer floor division on
     * both engines. */
   private[graft] def incMidpoint(s: SparkSession, d: String): Long = {
-    incMidCache.keys.foreach { k =>
-      if (k._1.isStopped) incMidCache.remove(k)
-    }
-    graft.plans.Lineage.once(incMidCache, (s.sparkContext, d)) {
+    graft.plans.Lineage.perContext(incMidCache, s, d) {
       val r = Tables.documents(s, d)
         .filter(col("source") === IncNewSource)
         .agg(min("doc_id"), max("doc_id")).head
@@ -918,18 +883,8 @@ object DedupQueries {
     * untouched. */
   private[graft] def sigStoreAppended(s: SparkSession, d: String)
       : DataFrame = {
-    sigAppCache.keys.foreach { k =>
-      if (k._1.isStopped) sigAppCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(sigAppCache, (s.sparkContext, d)) {
-      val tbl = "graft_sig_app_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(sigAppCache, s, d,
+        "graft_sig_app_") { tbl =>
       val docs = Tables.documents(s, d)
       bandedSigs(docs.filter(col("source") =!= IncNewSource))
         .write.bucketBy(IncBuckets, "band", "bkey").sortBy("band", "bkey")
@@ -938,7 +893,6 @@ object DedupQueries {
           && col("doc_id") <= lit(incMidpoint(s, d))))
         .write.bucketBy(IncBuckets, "band", "bkey").sortBy("band", "bkey")
         .mode("append").saveAsTable(tbl)
-      tbl
     }
     s.table(name)
   }
@@ -958,18 +912,8 @@ object DedupQueries {
     * untouched. */
   private[graft] def sigStoreAppended2(s: SparkSession, d: String)
       : DataFrame = {
-    sigApp2Cache.keys.foreach { k =>
-      if (k._1.isStopped) sigApp2Cache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(sigApp2Cache, (s.sparkContext, d)) {
-      val tbl = "graft_sig_app2_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(sigApp2Cache, s, d,
+        "graft_sig_app2_") { tbl =>
       val docs = Tables.documents(s, d)
       val mid = incMidpoint(s, d)
       bandedSigs(docs.filter(col("source") =!= IncNewSource))
@@ -983,7 +927,6 @@ object DedupQueries {
           && col("doc_id") > lit(mid)))
         .write.bucketBy(IncBuckets, "band", "bkey").sortBy("band", "bkey")
         .mode("append").saveAsTable(tbl)
-      tbl
     }
     PipelineCommit.resolveOr(s, d, "dedup", 2L, name)
   }
@@ -1036,23 +979,11 @@ object DedupQueries {
     * [[signatureStore]] is left untouched. */
   private[graft] def sigStoreCompacted(s: SparkSession, d: String)
       : DataFrame = {
-    sigCompactCache.keys.foreach { k =>
-      if (k._1.isStopped) sigCompactCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(sigCompactCache,
-        (s.sparkContext, d)) {
-      val tbl = "graft_sig_cmp_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(sigCompactCache, s, d,
+        "graft_sig_cmp_") { tbl =>
       signatureStore(s, d).filter(!DedupDeleteRule)
         .write.bucketBy(IncBuckets, "band", "bkey").sortBy("band", "bkey")
         .mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     s.table(name)
   }
@@ -1074,19 +1005,8 @@ object DedupQueries {
     * q_pipeline_mixed oracle restates from `documents` alone. */
   private[graft] def sigStoreMixed(s: SparkSession, d: String)
       : DataFrame = {
-    sigMixedCache.keys.foreach { k =>
-      if (k._1.isStopped) sigMixedCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(sigMixedCache,
-        (s.sparkContext, d)) {
-      val tbl = "graft_sig_mx_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(sigMixedCache, s, d,
+        "graft_sig_mx_") { tbl =>
       signatureStore(s, d).filter(!DedupDeleteRule)
         .write.bucketBy(IncBuckets, "band", "bkey").sortBy("band", "bkey")
         .mode("overwrite").saveAsTable(tbl)
@@ -1094,7 +1014,6 @@ object DedupQueries {
           .filter(col("source") === IncNewSource))
         .write.bucketBy(IncBuckets, "band", "bkey").sortBy("band", "bkey")
         .mode("append").saveAsTable(tbl)
-      tbl
     }
     s.table(name)
   }

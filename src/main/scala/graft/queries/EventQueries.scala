@@ -64,8 +64,7 @@ object EventQueries {
       .empty[(org.apache.spark.SparkContext, String), Long]
 
   private[graft] def eventsTsThreshold(s: SparkSession, d: String): Long = {
-    evThrCache.keys.foreach { k => if (k._1.isStopped) evThrCache.remove(k) }
-    graft.plans.Lineage.once(evThrCache, (s.sparkContext, d)) {
+    graft.plans.Lineage.perContext(evThrCache, s, d) {
       val r = Tables.events(s, d)
         .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
         .head
@@ -171,8 +170,7 @@ object EventQueries {
       .empty[(org.apache.spark.SparkContext, String), Long]
 
   private[graft] def eventsTsMid(s: SparkSession, d: String): Long = {
-    evMidCache.keys.foreach { k => if (k._1.isStopped) evMidCache.remove(k) }
-    graft.plans.Lineage.once(evMidCache, (s.sparkContext, d)) {
+    graft.plans.Lineage.perContext(evMidCache, s, d) {
       val hi = Tables.events(s, d)
         .agg(max(unix_micros(col("ts")))).head.getLong(0)
       val thr = eventsTsThreshold(s, d)
@@ -191,23 +189,12 @@ object EventQueries {
       .empty[(org.apache.spark.SparkContext, String), String]
 
   private[graft] def scdStore(s: SparkSession, d: String): DataFrame = {
-    scdStoreCache.keys.foreach { k =>
-      if (k._1.isStopped) scdStoreCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(scdStoreCache, (s.sparkContext, d)) {
-      val tbl = "graft_scd_store_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(scdStoreCache, s, d,
+        "graft_scd_store_") { tbl =>
       scdOf(Tables.events(s, d).filter(col("ts") <
           timestamp_micros(lit(eventsTsThreshold(s, d)))))
         .write.bucketBy(8, "user_id").sortBy("user_id", "version")
         .mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     // the production read path: resolve through the committed manifest
     // pointer once a pass has published (VERDICT r19 item 1)
@@ -236,18 +223,8 @@ object EventQueries {
       .empty[(org.apache.spark.SparkContext, String), String]
 
   private[graft] def scdStore2(s: SparkSession, d: String): DataFrame = {
-    scdStore2Cache.keys.foreach { k =>
-      if (k._1.isStopped) scdStore2Cache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(scdStore2Cache, (s.sparkContext, d)) {
-      val tbl = "graft_scd_store2_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(scdStore2Cache, s, d,
+        "graft_scd_store2_") { tbl =>
       val mark = eventsTsThreshold(s, d)
       val mid = eventsTsMid(s, d)
       require(mark < mid,
@@ -256,7 +233,6 @@ object EventQueries {
       scdMergeOf(scdStore(s, d), eventSlice(s, d, mark, Some(mid)))
         .write.bucketBy(8, "user_id").sortBy("user_id", "version")
         .mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     PipelineCommit.resolveOr(s, d, "scd", 2L, name)
   }
@@ -274,24 +250,13 @@ object EventQueries {
     * q_pipeline_mixed oracle restates. */
   private[graft] def scdStoreMixed(s: SparkSession, d: String)
       : DataFrame = {
-    scdMixedCache.keys.foreach { k =>
-      if (k._1.isStopped) scdMixedCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(scdMixedCache, (s.sparkContext, d)) {
-      val tbl = "graft_scd_mx_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(scdMixedCache, s, d,
+        "graft_scd_mx_") { tbl =>
       scdMergeOf(scdStore(s, d).filter(!ScdDeleteRule),
           eventSlice(s, d, eventsTsThreshold(s, d), None)
             .filter(!ScdDeleteRule))
         .write.bucketBy(8, "user_id").sortBy("user_id", "version")
         .mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     s.table(name)
   }
@@ -309,18 +274,8 @@ object EventQueries {
     * deliberately unpublishable). */
   private[graft] def scdStoreStreamed(s: SparkSession, d: String)
       : DataFrame = {
-    scdStreamCache.keys.foreach { k =>
-      if (k._1.isStopped) scdStreamCache.remove(k)
-    }
-    graft.plans.Lineage.once(scdStreamCache, (s.sparkContext, d)) {
-      val tbl = "graft_scd_st_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    graft.plans.Lineage.store(scdStreamCache, s, d,
+        "graft_scd_st_") { tbl =>
       import s.implicits._
       val chunks = cachedChunks(s, d, "commit")(sortedFeed(
         eventSlice(s, d, eventsTsThreshold(s, d), None)
@@ -331,7 +286,6 @@ object EventQueries {
         .write.bucketBy(8, "user_id").sortBy("user_id", "version")
         .mode("overwrite").saveAsTable(tbl)
       PipelineCommit.publish(s, d, 4L, Seq("scd" -> tbl))
-      tbl
     }
     PipelineCommit.resolveOr(s, d, "scd", 4L, "graft_stream_unpublished")
   }
@@ -347,10 +301,7 @@ object EventQueries {
       .empty[(org.apache.spark.SparkContext, String), Boolean]
 
   private def requireUniqueUserTs(s: SparkSession, d: String): Unit = {
-    tsUniqCache.keys.foreach { k =>
-      if (k._1.isStopped) tsUniqCache.remove(k)
-    }
-    val unique = graft.plans.Lineage.once(tsUniqCache, (s.sparkContext, d)) {
+    val unique = graft.plans.Lineage.perContext(tsUniqCache, s, d) {
       Tables.events(s, d).groupBy(col("user_id"), col("ts"))
         .count().filter(col("count") > 1).isEmpty
     }
@@ -455,7 +406,7 @@ object EventQueries {
     // a stopped session can never replay again — evict its feeds so the
     // cache cannot pin dead sessions or their heap (ADVICE r8: strong
     // keys + no eviction grew linearly across suite sessions)
-    graft.plans.Lineage.sweepStoppedKeys(feedCache)(_._1)
+    graft.plans.Lineage.sweepStoppedKeys(feedCache)(_._1.sparkContext)
     feedCache.get((s, d, gate)) match {
       case Some((_, v)) => v.asInstanceOf[Vector[Vector[A]]]
       case None =>
@@ -510,7 +461,7 @@ object EventQueries {
 
   private[queries] def sharedEventStream(s: SparkSession, d: String,
       gate: String): DataFrame = {
-    graft.plans.Lineage.sweepStoppedKeys(sharedStreamCache)(_._1)
+    graft.plans.Lineage.sweepStoppedKeys(sharedStreamCache)(_._1.sparkContext)
     graft.plans.Lineage.once(sharedStreamCache, (s, d)) {
       buildSharedEventStreams(s, d)
     }(gate)

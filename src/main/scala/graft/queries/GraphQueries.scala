@@ -62,10 +62,7 @@ object GraphQueries {
     * edge-churn fraction exceeds [[ChurnBound]]. Two 1-row counts
     * (N-counter contract), memoized per (context, dir). */
   private[graft] def maintainRebuild(s: SparkSession, d: String): Boolean = {
-    churnCache.keys.foreach { k =>
-      if (k._1.isStopped) churnCache.remove(k)
-    }
-    graft.plans.Lineage.once(churnCache, (s.sparkContext, d)) {
+    graft.plans.Lineage.perContext(churnCache, s, d) {
       val g = GraphCatalog.tpch(s, d)
       val thr = GraphCatalog.tpchOrderThreshold(s, d)
       val ns = LinkGraph.removeRedLinks(
@@ -148,19 +145,8 @@ object GraphQueries {
     * page set it is given). Final population = survivor pages. */
   private[graft] def rankStoreMixed(s: SparkSession, d: String)
       : DataFrame = {
-    rankMixedCache.keys.foreach { k =>
-      if (k._1.isStopped) rankMixedCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(rankMixedCache,
-        (s.sparkContext, d)) {
-      val tbl = "graft_rank_mx_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(rankMixedCache, s, d,
+        "graft_rank_mx_") { tbl =>
       val g = GraphCatalog.tpch(s, d)
       val survivorPages = g.pages.filter(!graphTombstoned(col("page")))
       val survivorFull = GraphCatalog.symmetrized(g.edges).filter(
@@ -171,7 +157,6 @@ object GraphQueries {
             .filter(!graphTombstoned(col("page")))))
         .write.bucketBy(8, "page").sortBy("page")
         .mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     s.table(name)
   }
@@ -302,7 +287,7 @@ object GraphQueries {
   private def supplierCount(s: SparkSession, d: String): Long = {
     // stopped-session sweep (ADVICE r20 low — the feedCache leak class;
     // same pattern as triCache below)
-    graft.plans.Lineage.sweepStoppedKeys(suppCountCache)(_._1)
+    graft.plans.Lineage.sweepStoppedKeys(suppCountCache)(_._1.sparkContext)
     graft.plans.Lineage.once(suppCountCache, (s, d))(
       graft.Tables.supplier(s, d).count())
   }
@@ -403,7 +388,7 @@ object GraphQueries {
     * second's read. */
   private def triangleCountsMemo(s: SparkSession, d: String,
       minQty: Int): DataFrame = {
-    graft.plans.Lineage.sweepStoppedKeys(triCache)(_._1)
+    graft.plans.Lineage.sweepStoppedKeys(triCache)(_._1.sparkContext)
     graft.plans.Lineage.once(triCache, (s, d, minQty))({
       val t = triangleCounts(coEdges(s, d, minQty))
       graft.plans.Lineage.pin(t)

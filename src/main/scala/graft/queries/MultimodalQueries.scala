@@ -107,8 +107,6 @@ object MultimodalQueries {
         col("sb.blk").as("blk"), col("sb.bval").as("bval"))
   }
 
-  /** Context-keyed like [[DedupQueries.signatureStore]] (the persisted
-    * table is a catalog artifact; sibling sessions share it). */
   private val phashStoreCache =
     scala.collection.concurrent.TrieMap
       .empty[(org.apache.spark.SparkContext, String), String]
@@ -124,25 +122,13 @@ object MultimodalQueries {
     * asset bytes). `bs` rides along so the Hamming verify needs no
     * corpus lookup. */
   private[graft] def phashStore(s: SparkSession, d: String): DataFrame = {
-    phashStoreCache.keys.foreach { k =>
-      if (k._1.isStopped) phashStoreCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(phashStoreCache,
-        (s.sparkContext, d)) {
-      val tbl = "graft_phash_store_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(phashStoreCache, s, d,
+        "graft_phash_store_") { tbl =>
       val standing = Multimodal.assets(s, d)
         .filter(col("meta.origin") =!= DedupQueries.IncNewSource)
       tier2Rows(Multimodal.aHashBands(standing, 32))
         .write.bucketBy(8, "band", "bkey").sortBy("band", "bkey")
         .mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     // the production read path: resolve through the committed manifest
     // pointer once a pass has published (VERDICT r19 item 1)
@@ -231,19 +217,8 @@ object MultimodalQueries {
     * standing [[phashStore]] stays untouched. */
   private[graft] def phashStoreAppended2(s: SparkSession, d: String)
       : DataFrame = {
-    phashApp2Cache.keys.foreach { k =>
-      if (k._1.isStopped) phashApp2Cache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(phashApp2Cache,
-        (s.sparkContext, d)) {
-      val tbl = "graft_phash_app2_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(phashApp2Cache, s, d,
+        "graft_phash_app2_") { tbl =>
       val assets = Multimodal.assets(s, d)
       val mid = DedupQueries.incMidpoint(s, d)
       def slice(f: DataFrame) = tier2Rows(Multimodal.aHashBands(f, 32))
@@ -258,7 +233,6 @@ object MultimodalQueries {
           && col("doc_id") > lit(mid)))
         .write.bucketBy(8, "band", "bkey").sortBy("band", "bkey")
         .mode("append").saveAsTable(tbl)
-      tbl
     }
     PipelineCommit.resolveOr(s, d, "phash", 2L, name)
   }
@@ -272,23 +246,11 @@ object MultimodalQueries {
     * (the sigStoreCompacted pattern; never a re-decode or re-hash). */
   private[graft] def phashStoreCompacted(s: SparkSession, d: String)
       : DataFrame = {
-    phashCompactCache.keys.foreach { k =>
-      if (k._1.isStopped) phashCompactCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(phashCompactCache,
-        (s.sparkContext, d)) {
-      val tbl = "graft_phash_cmp_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(phashCompactCache, s, d,
+        "graft_phash_cmp_") { tbl =>
       phashStore(s, d).filter(!DedupQueries.DedupDeleteRule)
         .write.bucketBy(8, "band", "bkey").sortBy("band", "bkey")
         .mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     s.table(name)
   }
@@ -304,19 +266,8 @@ object MultimodalQueries {
     * the image index (64 rows per surviving/new ≥256-byte asset). */
   private[graft] def phashStoreMixed(s: SparkSession, d: String)
       : DataFrame = {
-    phashMixedCache.keys.foreach { k =>
-      if (k._1.isStopped) phashMixedCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(phashMixedCache,
-        (s.sparkContext, d)) {
-      val tbl = "graft_phash_mx_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(phashMixedCache, s, d,
+        "graft_phash_mx_") { tbl =>
       phashStore(s, d).filter(!DedupQueries.DedupDeleteRule)
         .write.bucketBy(8, "band", "bkey").sortBy("band", "bkey")
         .mode("overwrite").saveAsTable(tbl)
@@ -324,7 +275,6 @@ object MultimodalQueries {
           .filter(col("meta.origin") === DedupQueries.IncNewSource), 32))
         .write.bucketBy(8, "band", "bkey").sortBy("band", "bkey")
         .mode("append").saveAsTable(tbl)
-      tbl
     }
     s.table(name)
   }

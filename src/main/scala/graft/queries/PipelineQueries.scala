@@ -77,6 +77,8 @@ import graft.multimodal.Multimodal
   */
 object PipelineCommit {
 
+  import graft.plans.Lineage.storeTable
+
   /** The seven families and their standing-store physical names —
     * the SAME name each family's own builder writes (verified
     * against the catalog at commit time: a renamed store fails the
@@ -90,11 +92,10 @@ object PipelineCommit {
     * generation's visibility atomic at job commit. */
   private[graft] val CommitSentinel = "__commit__"
 
-  private def h(d: String): String =
-    org.apache.commons.codec.digest.DigestUtils.md5Hex(d).take(8)
+  private val ManifestPrefix = "graft_manifest_"
 
   private[graft] def manifestTable(d: String): String =
-    "graft_manifest_" + h(d)
+    storeTable(ManifestPrefix, d)
 
   /** The versioned physical store name: version 1 IS the unsuffixed
     * standing table each family builds; later passes write
@@ -110,7 +111,7 @@ object PipelineCommit {
       case "phash"  => "graft_phash_store_"
       case "scd"    => "graft_scd_store_"
     }
-    base + h(d) + (if (version == 1L) "" else s"_v$version")
+    storeTable(base, d) + (if (version == 1L) "" else s"_v$version")
   }
 
   /** The six families with a generation-2 (post-second-merge) store
@@ -118,18 +119,18 @@ object PipelineCommit {
     * artifacts (curate has no dump-keyed store; its weight vector is
     * sample-trained, not accreted). */
   private[graft] def families2(d: String): Seq[(String, String)] = Seq(
-    "ann"   -> ("graft_ann_app2_" + h(d)),
-    "dedup" -> ("graft_sig_app2_" + h(d)),
-    "graph" -> ("graft_rank_store2_" + h(d)),
-    "mv"    -> ("graft_agg_store2_" + h(d)),
-    "phash" -> ("graft_phash_app2_" + h(d)),
-    "scd"   -> ("graft_scd_store2_" + h(d)))
+    "ann"   -> storeTable("graft_ann_app2_", d),
+    "dedup" -> storeTable("graft_sig_app2_", d),
+    "graph" -> storeTable("graft_rank_store2_", d),
+    "mv"    -> storeTable("graft_agg_store2_", d),
+    "phash" -> storeTable("graft_phash_app2_", d),
+    "scd"   -> storeTable("graft_scd_store2_", d))
 
   // ---- manifest storage ------------------------------------------------
   //
   // The catalog is per-JVM (only table FILES persist across JVMs), so
   // the manifest table is (re)initialized empty once per (context,
-  // corpus) — the usual DROP + delete-location dance clears a prior
+  // corpus) by [[graft.plans.Lineage.store]], which clears a prior
   // JVM's orphaned files. From then on it only ever gains rows.
   // Because this JVM's publish() is thereby the table's ONLY writer,
   // a driver-side mirror of the committed generations is exact, and
@@ -149,24 +150,15 @@ object PipelineCommit {
         scala.collection.immutable.SortedMap[Long, Map[String, String]]]
 
   private def ensureManifest(s: SparkSession, d: String): String = {
-    manifestInitCache.keys.foreach { k =>
-      if (k._1.isStopped) { manifestInitCache.remove(k); mirror.remove(k) }
-    }
-    graft.plans.Lineage.once(manifestInitCache, (s.sparkContext, d)) {
+    graft.plans.Lineage.sweepStoppedKeys(mirror)(_._1)
+    graft.plans.Lineage.store(manifestInitCache, s, d,
+        ManifestPrefix) { tbl =>
       import s.implicits._
-      val tbl = manifestTable(d)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
       Seq.empty[(Long, String, String)]
         .toDF("generation", "family", "store_table")
         .coalesce(1).write.mode("overwrite").saveAsTable(tbl)
       mirror.put((s.sparkContext, d),
         scala.collection.immutable.SortedMap.empty[Long, Map[String, String]])
-      tbl
     }
   }
 
@@ -250,9 +242,7 @@ object PipelineCommit {
     * memoized (pointers are immutable once committed). */
   private[graft] def resolveOr(s: SparkSession, d: String,
       family: String, gen: Long, fallback: String): DataFrame = {
-    resolveCache.keys.foreach { k =>
-      if (k._1.isStopped) resolveCache.remove(k)
-    }
+    graft.plans.Lineage.sweepStoppedKeys(resolveCache)(_._1)
     val key = (s.sparkContext, d, family, gen)
     resolveCache.get(key) match {
       case Some(t) => s.table(t)
@@ -275,10 +265,7 @@ object PipelineCommit {
     * the durable table. */
   private[graft] def commitStanding(s: SparkSession, d: String)
       : DataFrame = {
-    commitCache.keys.foreach { k =>
-      if (k._1.isStopped) commitCache.remove(k)
-    }
-    graft.plans.Lineage.once(commitCache, (s.sparkContext, d)) {
+    graft.plans.Lineage.perContext(commitCache, s, d) {
       SimilarityQueries.annStore(s, d)
       TextQueries.clfWeightsStore(s, d)
       DedupQueries.signatureStore(s, d)
@@ -303,10 +290,7 @@ object PipelineCommit {
     * Generation 1 stays readable (append-only). */
   private[graft] def commitSecond(s: SparkSession, d: String)
       : DataFrame = {
-    commit2Cache.keys.foreach { k =>
-      if (k._1.isStopped) commit2Cache.remove(k)
-    }
-    graft.plans.Lineage.once(commit2Cache, (s.sparkContext, d)) {
+    graft.plans.Lineage.perContext(commit2Cache, s, d) {
       SimilarityQueries.annStoreAppended2(s, d)
       DedupQueries.sigStoreAppended2(s, d)
       GraphCatalog.tpchStandingRanks2(s, d)
@@ -323,12 +307,12 @@ object PipelineCommit {
     * dump boundary) store and those stores' physical names
     * (q_pipeline_mixed — curate again has no dump-keyed store). */
   private[graft] def familiesMixed(d: String): Seq[(String, String)] = Seq(
-    "ann"   -> ("graft_ann_mx_" + h(d)),
-    "dedup" -> ("graft_sig_mx_" + h(d)),
-    "graph" -> ("graft_rank_mx_" + h(d)),
-    "mv"    -> ("graft_agg_mx_" + h(d)),
-    "phash" -> ("graft_phash_mx_" + h(d)),
-    "scd"   -> ("graft_scd_mx_" + h(d)))
+    "ann"   -> storeTable("graft_ann_mx_", d),
+    "dedup" -> storeTable("graft_sig_mx_", d),
+    "graph" -> storeTable("graft_rank_mx_", d),
+    "mv"    -> storeTable("graft_agg_mx_", d),
+    "phash" -> storeTable("graft_phash_mx_", d),
+    "scd"   -> storeTable("graft_scd_mx_", d))
 
   private val commitMixedCache =
     scala.collection.concurrent.TrieMap
@@ -344,10 +328,7 @@ object PipelineCommit {
     * construction). */
   private[graft] def commitMixed(s: SparkSession, d: String)
       : DataFrame = {
-    commitMixedCache.keys.foreach { k =>
-      if (k._1.isStopped) commitMixedCache.remove(k)
-    }
-    graft.plans.Lineage.once(commitMixedCache, (s.sparkContext, d)) {
+    graft.plans.Lineage.perContext(commitMixedCache, s, d) {
       SimilarityQueries.annStoreMixed(s, d)
       DedupQueries.sigStoreMixed(s, d)
       GraphQueries.rankStoreMixed(s, d)

@@ -653,8 +653,7 @@ object RelationalQueries {
       .empty[(org.apache.spark.SparkContext, String), Long]
 
   private[graft] def retentionThreshold(s: SparkSession, d: String): Long = {
-    retThrCache.keys.foreach { k => if (k._1.isStopped) retThrCache.remove(k) }
-    graft.plans.Lineage.once(retThrCache, (s.sparkContext, d)) {
+    graft.plans.Lineage.perContext(retThrCache, s, d) {
       val r = Tables.lineitem(s, d)
         .agg(min("l_orderkey"), max("l_orderkey")).head
       r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 20
@@ -665,24 +664,14 @@ object RelationalQueries {
     * high-water mark): UNROUNDED partial sums + counts per group,
     * written once as a catalog table (the signature-store pattern for
     * the relational family — in production a nightly job maintains
-    * this table instead of recomputing the corpus). Context-keyed. */
+    * this table instead of recomputing the corpus). */
   private val aggStoreCache =
     scala.collection.concurrent.TrieMap
       .empty[(org.apache.spark.SparkContext, String), String]
 
   private[graft] def aggStore(s: SparkSession, d: String): DataFrame = {
-    aggStoreCache.keys.foreach { k =>
-      if (k._1.isStopped) aggStoreCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(aggStoreCache, (s.sparkContext, d)) {
-      val tbl = "graft_agg_store_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(aggStoreCache, s, d,
+        "graft_agg_store_") { tbl =>
       Tables.lineitem(s, d)
         .filter(col("l_orderkey") < lit(lineitemThreshold(s, d)))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -692,7 +681,6 @@ object RelationalQueries {
             .as("p_disc"),
           count(lit(1)).as("p_n"))
         .write.mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     // the production read path: resolve through the committed manifest
     // pointer once a pass has published (VERDICT r19 item 1)
@@ -710,18 +698,8 @@ object RelationalQueries {
     * composed merge law (the reason the gate exists); parquet doubles
     * round-trip exactly, so pass 2 merges bit-identical partials. */
   private[graft] def aggStore2(s: SparkSession, d: String): DataFrame = {
-    aggStore2Cache.keys.foreach { k =>
-      if (k._1.isStopped) aggStore2Cache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(aggStore2Cache, (s.sparkContext, d)) {
-      val tbl = "graft_agg_store2_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(aggStore2Cache, s, d,
+        "graft_agg_store2_") { tbl =>
       val thr = lineitemThreshold(s, d)
       val mid = lineitemMid(s, d)
       require(thr < mid,
@@ -742,7 +720,6 @@ object RelationalQueries {
           sum(col("p_disc")).as("p_disc"),
           sum(col("p_n")).as("p_n"))
         .write.mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     PipelineCommit.resolveOr(s, d, "mv", 2L, name)
   }
@@ -760,18 +737,8 @@ object RelationalQueries {
     * retention cut. */
   private[graft] def aggStoreMixed(s: SparkSession, d: String)
       : DataFrame = {
-    aggMixedCache.keys.foreach { k =>
-      if (k._1.isStopped) aggMixedCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(aggMixedCache, (s.sparkContext, d)) {
-      val tbl = "graft_agg_mx_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(aggMixedCache, s, d,
+        "graft_agg_mx_") { tbl =>
       val thr = lineitemThreshold(s, d)
       val ret = retentionThreshold(s, d)
       require(ret < thr,
@@ -795,7 +762,6 @@ object RelationalQueries {
           sum(col("p_n")).as("p_n"))
         .filter(col("p_n") > 0)
         .write.mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     s.table(name)
   }

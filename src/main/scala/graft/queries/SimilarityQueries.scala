@@ -57,11 +57,12 @@ object SimilarityQueries {
     * posting, so candidates stay linear in corpus size). */
   private val HybridMaxDf = 10
 
-  /** Context-keyed + swept (the [[annStoreCache]] pattern): values are
-    * the (shingle table, postings table) catalog names. */
-  private val hybridLexCache =
+  private val lexShinglesCache =
     scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), (String, String)]
+      .empty[(org.apache.spark.SparkContext, String), String]
+  private val lexPostsCache =
+    scala.collection.concurrent.TrieMap
+      .empty[(org.apache.spark.SparkContext, String), String]
 
   /** The lexical leg's SERVE over any (doc_id, hs) shingle table and
     * (g, doc_id) postings table: candidate generation from the
@@ -102,38 +103,20 @@ object SimilarityQueries {
     * — the candidate self-join's key, so the store sides of all three
     * serve joins arrive pre-partitioned and never exchange. The corpus
     * is shingled ONCE: the postings derive from the written shingle
-    * table, not a second corpus pass. Corpus-immutability (ADVICE r20):
-    * like every store in the repo (annStore, the signature store, the
-    * rank store), the artifact is built once per (context, dir) and
-    * assumes the documents under `d` don't change within the context's
-    * lifetime; a production deployment would key rebuilds on the
-    * commit-manifest generation. */
+    * table, not a second corpus pass. */
   private def hybridLexStore(s: SparkSession, d: String): (String, String) = {
     graft.GraftFunctions.register(s)
-    hybridLexCache.keys.foreach { k =>
-      if (k._1.isStopped) hybridLexCache.remove(k)
-    }
-    graft.plans.Lineage.once(hybridLexCache, (s.sparkContext, d)) {
-      val suffix = org.apache.commons.codec.digest.DigestUtils
-        .md5Hex(d).take(8)
-      val ht = "graft_lex_shingles_" + suffix
-      val pt = "graft_lex_posts_" + suffix
-      for (tbl <- Seq(ht, pt)) {
-        // clear a stale catalog entry AND an orphaned managed location
-        // from a previous JVM (the signature-store lesson)
-        s.sql(s"DROP TABLE IF EXISTS $tbl")
-        val loc = new org.apache.hadoop.fs.Path(
-          s.sessionState.catalog.defaultTablePath(
-            org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-      }
+    val ht = graft.plans.Lineage.store(lexShinglesCache, s, d,
+        "graft_lex_shingles_") { tbl =>
       hybridLexShingles(s, d).write.bucketBy(8, "doc_id").sortBy("doc_id")
-        .mode("overwrite").saveAsTable(ht)
-      hybridLexPostings(s.table(ht)).write.bucketBy(8, "g").sortBy("g")
-        .mode("overwrite").saveAsTable(pt)
-      (ht, pt)
+        .mode("overwrite").saveAsTable(tbl)
     }
+    val pt = graft.plans.Lineage.store(lexPostsCache, s, d,
+        "graft_lex_posts_") { tbl =>
+      hybridLexPostings(s.table(ht)).write.bucketBy(8, "g").sortBy("g")
+        .mode("overwrite").saveAsTable(tbl)
+    }
+    (ht, pt)
   }
 
   private def hybridLexShingles(s: SparkSession, d: String): DataFrame =
@@ -809,7 +792,7 @@ object SimilarityQueries {
     * between queries cannot poison the second consumer's re-read. */
   private def pcaSetup(s: SparkSession, d: String)
       : (DataFrame, Array[Array[Double]], Array[Double]) = {
-    graft.plans.Lineage.sweepStoppedKeys(pcaCache)(_._1)
+    graft.plans.Lineage.sweepStoppedKeys(pcaCache)(_._1.sparkContext)
     graft.plans.Lineage.once(pcaCache, (s, d)) {
       val r = pcaSetupBuild(s, d)
       graft.plans.Lineage.pin(r._1)
@@ -1771,7 +1754,6 @@ object SimilarityQueries {
     scala.collection.concurrent.TrieMap
       .empty[(SparkSession, String), DataFrame]
 
-  /** Context-keyed + swept — see [[annStandingCache]]. */
   private val annStoreCache =
     scala.collection.concurrent.TrieMap
       .empty[(org.apache.spark.SparkContext, String), String]
@@ -1789,29 +1771,16 @@ object SimilarityQueries {
     * FAISS-with-metadata): q_ann_filtered's per-query constraint
     * evaluates inside the already-pruned scan instead of joining a
     * corpus-sized side table at serve time. Built once per
-    * (session, dir); in production the table outlives the session. */
+    * (context, dir); in production the table outlives the session. */
   private[graft] def annStore(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.register(s) // the encode/assign exprs need them
-    annStoreCache.keys.foreach { k =>
-      if (k._1.isStopped) annStoreCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(annStoreCache, (s.sparkContext, d)) {
-      val tbl = "graft_ann_store_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      // clear a stale catalog entry AND an orphaned managed location
-      // from a previous JVM (the signature-store lesson)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(annStoreCache, s, d,
+        "graft_ann_store_") { tbl =>
       val e = Tables.embeddings(s, d)
       pqIndex(s, d).join(ivfAssign(e, ivfCentroids(e)), "vec_id")
         .join(e.select(col("vec_id"), col("label")), "vec_id")
         .write.bucketBy(8, "cell").sortBy("cell")
         .mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     // the production read path: resolve through the committed manifest
     // pointer once a pass has published (VERDICT r19 item 1)
@@ -1829,28 +1798,16 @@ object SimilarityQueries {
     * quantizers and the vector alone), so the rewrite is ONE
     * index-sized filtered pass, and the serve path (q_ann_ivfpq_stored
     * strategy) regains its pre-delete shape: no per-probe tombstone
-    * filter, buckets prune identically. Built once per (session, dir);
+    * filter, buckets prune identically. Built once per (context, dir);
     * in production the compacted table atomically replaces the
     * tombstoned one on the maintenance cadence. */
   private[graft] def annStoreCompacted(s: SparkSession, d: String)
       : DataFrame = {
-    annCompactCache.keys.foreach { k =>
-      if (k._1.isStopped) annCompactCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(annCompactCache,
-        (s.sparkContext, d)) {
-      val tbl = "graft_ann_compact_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(annCompactCache, s, d,
+        "graft_ann_compact_") { tbl =>
       annStore(s, d).filter(!AnnDeleteRule)
         .write.bucketBy(8, "cell").sortBy("cell")
         .mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     s.table(name)
   }
@@ -1867,10 +1824,7 @@ object SimilarityQueries {
       .empty[(org.apache.spark.SparkContext, String), Long]
 
   private[graft] def incVecThreshold(s: SparkSession, d: String): Long = {
-    incVecThrCache.keys.foreach { k =>
-      if (k._1.isStopped) incVecThrCache.remove(k)
-    }
-    graft.plans.Lineage.once(incVecThrCache, (s.sparkContext, d)) {
+    graft.plans.Lineage.perContext(incVecThrCache, s, d) {
       val hi = Tables.embeddings(s, d).agg(max("vec_id")).head.getLong(0)
       hi - hi / 10
     }
@@ -2003,10 +1957,7 @@ object SimilarityQueries {
     * contract. Memoized per (context, dir) because both the gate and
     * the forced-branch spec entries consult it. */
   private[graft] def maintainRetrain(s: SparkSession, d: String): Boolean = {
-    maintainDecCache.keys.foreach { k =>
-      if (k._1.isStopped) maintainDecCache.remove(k)
-    }
-    graft.plans.Lineage.once(maintainDecCache, (s.sparkContext, d)) {
+    graft.plans.Lineage.perContext(maintainDecCache, s, d) {
       // a corpus where no label has BOTH standing and new vectors
       // yields an empty drift frame → NULL max; default to APPEND,
       // matching maintainOracle's COALESCE(max(..) > bound, FALSE)
@@ -2032,25 +1983,14 @@ object SimilarityQueries {
     * retrain produce materially different indexes. */
   private[graft] def annStoreMaint(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.register(s)
-    annMaintCache.keys.foreach { k =>
-      if (k._1.isStopped) annMaintCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(annMaintCache, (s.sparkContext, d)) {
-      val tbl = "graft_ann_maint_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(annMaintCache, s, d,
+        "graft_ann_maint_") { tbl =>
       val e = Tables.embeddings(s, d)
       val standing = e.filter(col("vec_id") < incVecThreshold(s, d))
       pqEncode(standing, PqSeedRule, cbFrom = Some(standing))
         .join(ivfAssign(standing, ivfCentroids(standing)), "vec_id")
         .write.bucketBy(8, "cell").sortBy("cell")
         .mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     s.table(name)
   }
@@ -2106,10 +2046,7 @@ object SimilarityQueries {
     * (q_ann_append2): thr + (max − thr)/2 on vec_id — the shared
     * midpoint idiom, one 1-row agg, integer floor division. */
   private[graft] def incVecMid(s: SparkSession, d: String): Long = {
-    vecMidCache.keys.foreach { k =>
-      if (k._1.isStopped) vecMidCache.remove(k)
-    }
-    graft.plans.Lineage.once(vecMidCache, (s.sparkContext, d)) {
+    graft.plans.Lineage.perContext(vecMidCache, s, d) {
       val hi = Tables.embeddings(s, d)
         .agg(max("vec_id")).head.getLong(0)
       val thr = incVecThreshold(s, d)
@@ -2132,18 +2069,8 @@ object SimilarityQueries {
   private[graft] def annStoreAppended2(s: SparkSession, d: String)
       : DataFrame = {
     graft.GraftFunctions.register(s)
-    annApp2Cache.keys.foreach { k =>
-      if (k._1.isStopped) annApp2Cache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(annApp2Cache, (s.sparkContext, d)) {
-      val tbl = "graft_ann_app2_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(annApp2Cache, s, d,
+        "graft_ann_app2_") { tbl =>
       val e = Tables.embeddings(s, d)
       val thr = incVecThreshold(s, d)
       val mid = incVecMid(s, d)
@@ -2161,15 +2088,10 @@ object SimilarityQueries {
       enc(e.filter(col("vec_id") >= lit(mid)))
         .write.bucketBy(8, "cell").sortBy("cell")
         .mode("append").saveAsTable(tbl)
-      tbl
     }
     PipelineCommit.resolveOr(s, d, "ann", 2L, name)
   }
 
-  /** Context-keyed like [[DedupQueries.signatureStore]]: the persisted
-    * table is a catalog artifact shared by sibling sessions — a
-    * per-session key would destructively rebuild it under a live
-    * reader. Stopped contexts swept. */
   private val annStandingCache =
     scala.collection.concurrent.TrieMap
       .empty[(org.apache.spark.SparkContext, String), String]
@@ -2183,25 +2105,14 @@ object SimilarityQueries {
     * encode(full), which only holds under one codebook). */
   private[graft] def annStoreStanding(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.register(s) // the encode/assign exprs need them
-    annStandingCache.keys.foreach { k =>
-      if (k._1.isStopped) annStandingCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(annStandingCache, (s.sparkContext, d)) {
-      val tbl = "graft_ann_standing_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(annStandingCache, s, d,
+        "graft_ann_standing_") { tbl =>
       val e = Tables.embeddings(s, d)
       val standing = e.filter(col("vec_id") < incVecThreshold(s, d))
       pqEncode(standing, PqSeedRule, cbFrom = Some(e))
         .join(ivfAssign(standing, ivfCentroids(e)), "vec_id")
         .write.bucketBy(8, "cell").sortBy("cell")
         .mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     s.table(name)
   }
@@ -2220,18 +2131,8 @@ object SimilarityQueries {
   private[graft] def annStoreMixed(s: SparkSession, d: String)
       : DataFrame = {
     graft.GraftFunctions.register(s)
-    annMixedCache.keys.foreach { k =>
-      if (k._1.isStopped) annMixedCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(annMixedCache, (s.sparkContext, d)) {
-      val tbl = "graft_ann_mx_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(annMixedCache, s, d,
+        "graft_ann_mx_") { tbl =>
       val e = Tables.embeddings(s, d)
       val dump = e.filter(col("vec_id") >= incVecThreshold(s, d))
       annStoreStanding(s, d).filter(!AnnDeleteRule)
@@ -2241,7 +2142,6 @@ object SimilarityQueries {
         .join(ivfAssign(dump, ivfCentroids(e)), "vec_id")
         .write.bucketBy(8, "cell").sortBy("cell")
         .mode("append").saveAsTable(tbl)
-      tbl
     }
     s.table(name)
   }

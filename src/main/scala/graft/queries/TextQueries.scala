@@ -149,31 +149,21 @@ object TextQueries {
     * pattern brought to the classifier): train the 8-epoch perceptron
     * on the md5-half sample ONCE, write the ClfB (b, w) rows as a
     * catalog table — the production artifact a nightly curation job
-    * reads instead of retraining. Context-keyed (a catalog table is
-    * shared by sibling sessions). */
+    * reads instead of retraining. */
   private val clfWCache =
     scala.collection.concurrent.TrieMap
       .empty[(org.apache.spark.SparkContext, String), String]
 
   private[graft] def clfWeightsStore(s: SparkSession, d: String)
       : DataFrame = {
-    clfWCache.keys.foreach { k => if (k._1.isStopped) clfWCache.remove(k) }
-    val name = graft.plans.Lineage.once(clfWCache, (s.sparkContext, d)) {
-      val tbl = "graft_clf_w_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(clfWCache, s, d,
+        "graft_clf_w_") { tbl =>
       val w = perceptronWeights(
         clfFeatures(Tables.documents(s, d).filter(ClfSampleRule)))
       import s.implicits._
       w.toSeq.zipWithIndex.map { case (wv, b) => (b.toLong, wv) }
         .toDF("b", "w")
         .coalesce(1).write.mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     // the production read path: resolve through the committed manifest
     // pointer once a pass has published (VERDICT r19 item 1)
@@ -269,7 +259,7 @@ object TextQueries {
     * contaminated) over the non-src0 corpus. Physical-plan and
     * exactness notes live on the gate entry. */
   private def decontBloom(s: SparkSession, d: String): DataFrame = {
-    graft.plans.Lineage.sweepStoppedKeys(decontCache)(_._1)
+    graft.plans.Lineage.sweepStoppedKeys(decontCache)(_._1.sparkContext)
     graft.plans.Lineage.once(decontCache, (s, d)) {
       val fin = decontBloomBuild(s, d)
       graft.plans.Lineage.pin(fin)
@@ -293,7 +283,7 @@ object TextQueries {
     // a stopped session's artifacts can never serve again — evict, so
     // the cache can't pin dead sessions, their checkpoint or the bloom
     // bytes (the ADVICE r8 strong-key lesson)
-    graft.plans.Lineage.sweepStoppedKeys(decontEvalCache)(_._1)
+    graft.plans.Lineage.sweepStoppedKeys(decontEvalCache)(_._1.sparkContext)
     graft.plans.Lineage.once(decontEvalCache, (s, d)) {
       graft.GraftFunctions.register(s)
       // persisted: the window pass feeds TWO consumers (the distinct
@@ -875,22 +865,10 @@ object TextQueries {
     * pins stored ≡ freshly-trained rule-for-rule. */
   private[graft] def trainedRulesStore(s: SparkSession,
       d: String): DataFrame = {
-    rulesStoreCache.keys.foreach { k =>
-      if (k._1.isStopped) rulesStoreCache.remove(k)
-    }
-    val name = graft.plans.Lineage.once(rulesStoreCache,
-        (s.sparkContext, d)) {
-      val tbl = "graft_bpe_rules_" + org.apache.commons.codec.digest
-        .DigestUtils.md5Hex(d).take(8)
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+    val name = graft.plans.Lineage.store(rulesStoreCache, s, d,
+        "graft_bpe_rules_") { tbl =>
       bpeTrain(Tables.documents(s, d), BpeTrainK)
         .write.mode("overwrite").saveAsTable(tbl)
-      tbl
     }
     s.table(name)
   }
@@ -902,9 +880,7 @@ object TextQueries {
     * the loaded table. Consumed by the train→apply roundtrip gate. */
   private[graft] def trainedRules(s: SparkSession,
       d: String): IndexedSeq[(String, String)] = {
-    trainedRulesCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) trainedRulesCache.remove(k)
-    }
+    graft.plans.Lineage.sweepStoppedKeys(trainedRulesCache)(_._1.sparkContext)
     graft.plans.Lineage.once(trainedRulesCache, (s, d)) {
       trainedRulesStore(s, d).collect()
         .sortBy(_.getInt(0))
@@ -1102,9 +1078,6 @@ object TextQueries {
   private[graft] def bpeTrainLoop(vocab0: DataFrame, k: Int,
       batchM: Int,
       onSyms: (Int, DataFrame) => Unit = (_, _) => ()): DataFrame = {
-    bpeAlphabetCache.keys.foreach { key =>
-      if (key._1.isStopped) bpeAlphabetCache.remove(key)
-    }
     val s = vocab0.sparkSession
     import s.implicits._
     val SEP = BpeSep
@@ -1145,8 +1118,8 @@ object TextQueries {
     // overflows the cap falls back to batchM = 1, where the selection
     // degenerates to the literal argmax and the universe is never
     // needed for soundness.
-    val alphabet = graft.plans.Lineage.once(bpeAlphabetCache,
-        (s.sparkContext, vocab0.queryExecution.analyzed.semanticHash())) {
+    val alphabet = graft.plans.Lineage.perContext(bpeAlphabetCache, s,
+        vocab0.queryExecution.analyzed.semanticHash()) {
       vocab.select(explode(split(col("sym"), SEP)).as("u"))
         .filter(col("u") =!= "").distinct()
         .limit(UniverseCap + 1).collect().map(_.getString(0))

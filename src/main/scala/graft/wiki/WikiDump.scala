@@ -85,7 +85,7 @@ object WikiDump {
   def materializedDump(spark: SparkSession, dir: String): String = {
     // stale-session sweep (ADVICE-r8 feedCache leak class); the temp
     // dirs themselves are OS-cleaned, only the map entry pins memory
-    graft.plans.Lineage.sweepStoppedKeys(dumps)(_._1)
+    graft.plans.Lineage.sweepStoppedKeys(dumps)(_._1.sparkContext)
     graft.plans.Lineage.once(dumps, (spark, dir))({
       val out = java.nio.file.Files
         .createTempDirectory("graft-wikidump").toString

@@ -66,4 +66,45 @@ class ArtifactStoreSpec extends SparkSpec {
       spec.get.bucketColumnNames == Seq("doc_id"),
       s"cleaned store lost its doc_id bucketing: $spec")
   }
+
+  test("Lineage.store clears an orphaned managed location, then writes " +
+      "once per SparkContext — sibling sessions reuse the table") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val prefix = "graft_lifecycle_probe_"
+    val tbl = graft.plans.Lineage.storeTable(prefix, dir)
+    // a previous JVM's leftovers: files at the managed location, no
+    // catalog entry — saveAsTable alone refuses to adopt them
+    val loc = new Path(spark.sessionState.catalog
+      .defaultTablePath(TableIdentifier(tbl)))
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(loc)
+    val junk = new Path(loc, "junk.txt")
+    fs.create(junk).close()
+    assert(!spark.catalog.tableExists(tbl) && fs.exists(junk))
+
+    val cache = scala.collection.concurrent.TrieMap
+      .empty[(org.apache.spark.SparkContext, String), String]
+    var writes = 0
+    def build(s: org.apache.spark.sql.SparkSession): String =
+      graft.plans.Lineage.store(cache, s, dir, prefix) { t =>
+        writes += 1
+        graft.Tables.documents(s, dir).select("doc_id")
+          .write.mode("overwrite").saveAsTable(t)
+      }
+
+    assert(build(spark) == tbl)
+    assert(writes == 1)
+    assert(!fs.exists(junk), "the orphaned file survived the build")
+    val ids = spark.table(tbl).collect().map(_.getLong(0)).sorted.toSeq
+    val want = graft.Tables.documents(spark, dir).select("doc_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids.nonEmpty && ids == want)
+
+    assert(build(spark) == tbl && writes == 1,
+      "a second call in the same context re-ran the write")
+    assert(build(spark.newSession()) == tbl && writes == 1,
+      "a sibling session of the same context re-ran the write")
+    spark.sql(s"DROP TABLE $tbl")
+  }
 }
