@@ -1,7 +1,5 @@
 package graft.graph
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
@@ -30,32 +28,10 @@ object GraphCatalog {
 
   final case class LinkGraphData(pages: DataFrame, edges: DataFrame, n: Long)
 
-  private val graphs = TrieMap.empty[(SparkSession, String), LinkGraphData]
-  private val ranks = TrieMap.empty[(SparkSession, String, Int), DataFrame]
-
-  /** Drop entries whose session has stopped
-    * ([[graft.plans.Lineage.sweepStoppedKeys]] — the ADVICE-r8 feedCache
-    * leak class, applied catalog-wide). Runs on every catalog access;
-    * the maps hold a handful of keys. */
-  private def sweepStopped(): Unit = {
-    import graft.plans.Lineage.sweepStoppedKeys
-    sweepStoppedKeys(graphs)(_._1.sparkContext)
-    sweepStoppedKeys(ranks)(_._1.sparkContext)
-    sweepStoppedKeys(orderThr)(_._1.sparkContext)
-    sweepStoppedKeys(pranks)(_._1.sparkContext)
-    sweepStoppedKeys(wranks)(_._1.sparkContext)
-    sweepStoppedKeys(hitsCache)(_._1.sparkContext)
-    sweepStoppedKeys(wikiGraphs)(_._1.sparkContext)
-    sweepStoppedKeys(wikiRankCache)(_._1.sparkContext)
-  }
-
   /** Cleaned TPC-H citation graph (customers → suppliers they bought
-    * from), pages ∪ edges persisted, N counted — built once per dir.
-    * Every other catalog entry point funnels through here or [[wiki]],
-    * so the stale-session sweep lives in these two. */
-  def tpch(spark: SparkSession, dir: String): LinkGraphData = {
-    sweepStopped()
-    graft.plans.Lineage.once(graphs, (spark, dir))({
+    * from), pages ∪ edges persisted, N counted — built once per dir. */
+  def tpch(spark: SparkSession, dir: String): LinkGraphData =
+    graft.plans.Lineage.perSession("tpchGraph", spark, dir) {
       val pages = LinkGraph.tpchPages(spark, dir)
         .persist(StorageLevel.MEMORY_AND_DISK)
       val edges = LinkGraph
@@ -63,40 +39,28 @@ object GraphCatalog {
         .persist(StorageLevel.MEMORY_AND_DISK)
       val n = pages.count()
       LinkGraphData(pages, edges, n)
-    })
-  }
+    }
 
   /** Reference-convention rank vector after `iters` iterations —
     * computed once per (session, dir, iters), persisted. */
   def tpchRanks(spark: SparkSession, dir: String,
                 iters: Int = PageRank.DefaultIters): DataFrame =
-    graft.plans.Lineage.once(ranks, (spark, dir, iters))({
+    graft.plans.Lineage.memo("tpchRanks", spark, (dir, iters)) {
       val g = tpch(spark, dir)
-      val r = PageRank.run(g.pages, g.edges, iters)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      r.count()
-      // memoized across queries: exempt from harness scratch freeing
-      graft.plans.Lineage.pin(r)
-      r
-    })
-
-  private val rankStoreCache =
-    TrieMap.empty[(org.apache.spark.SparkContext, String), String]
-  private val orderThr = TrieMap.empty[(SparkSession, String), Long]
+      PageRank.run(g.pages, g.edges, iters)
+    }
 
   /** High-water mark for the incremental gate: orders at/above
     * `max − max/10` are "the new dump" (the incVecThreshold idiom —
     * appends get new keys, and a RANGE predicate pushes to the scan).
     * 1-row max agg, memoized — the N-counter contract. */
   def tpchOrderThreshold(spark: SparkSession, dir: String): Long =
-    graft.plans.Lineage.once(orderThr, (spark, dir))({
+    graft.plans.Lineage.perSession("tpchOrderThreshold", spark, dir) {
       val hi = graft.Tables.orders(spark, dir)
         .agg(org.apache.spark.sql.functions.max("o_orderkey"))
         .first().getLong(0)
       hi - hi / 10
-    })
-
-  private val orderMid = TrieMap.empty[(SparkSession, String), Long]
+    }
 
   /** The SECOND high-water mark (round-19 re-entrancy): the dump's
     * order-key midpoint `thr + (max − thr)/2`, splitting the dump into
@@ -108,13 +72,13 @@ object GraphCatalog {
     * shared by the MV family by delegation (the tpchOrderThreshold
     * one-boundary discipline). */
   def tpchOrderMid(spark: SparkSession, dir: String): Long =
-    graft.plans.Lineage.once(orderMid, (spark, dir))({
+    graft.plans.Lineage.perSession("tpchOrderMid", spark, dir) {
       val hi = graft.Tables.orders(spark, dir)
         .agg(org.apache.spark.sql.functions.max("o_orderkey"))
         .first().getLong(0)
       val thr = tpchOrderThreshold(spark, dir)
       thr + (hi - thr) / 2
-    })
+    }
 
   /** Both directions of every edge — the SYMMETRIZED co-engagement
     * graph (BiRank / co-visitation ranking: a bipartite purchase graph
@@ -141,7 +105,7 @@ object GraphCatalog {
     * first iteration's contribution join. The standing edge build
     * reads only pre-threshold orders (range-pruned scan). */
   def tpchStandingRanks(spark: SparkSession, dir: String): DataFrame = {
-    val name = graft.plans.Lineage.store(rankStoreCache, spark, dir,
+    val name = graft.plans.Lineage.store(spark, dir,
         "graft_rank_store_") { tbl =>
       val g = tpch(spark, dir)
       val thr = tpchOrderThreshold(spark, dir)
@@ -159,9 +123,6 @@ object GraphCatalog {
     graft.queries.PipelineCommit.resolveOr(spark, dir, "graph", 1L, name)
   }
 
-  private val rankStore2Cache =
-    TrieMap.empty[(org.apache.spark.SparkContext, String), String]
-
   /** The rank store AFTER the FIRST dump slice's warm merge
     * (q_pagerank_inc2's intermediate artifact — round-19 re-entrancy):
     * the standing 8-iteration vector ([[tpchStandingRanks]]) seeds
@@ -175,7 +136,7 @@ object GraphCatalog {
     * "store written rounded" failure class this artifact exists to
     * catch is caught by the gate's hash. */
   def tpchStandingRanks2(spark: SparkSession, dir: String): DataFrame = {
-    val name = graft.plans.Lineage.store(rankStore2Cache, spark, dir,
+    val name = graft.plans.Lineage.store(spark, dir,
         "graft_rank_store2_") { tbl =>
       val g = tpch(spark, dir)
       val mid = tpchOrderMid(spark, dir)
@@ -193,26 +154,18 @@ object GraphCatalog {
     graft.queries.PipelineCommit.resolveOr(spark, dir, "graph", 2L, name)
   }
 
-  private val pranks = TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** Personalized rank vector seeded at the deterministic MIN(src) page
     * — computed once per (session, dir), persisted. The seed collect is
     * a 1-row scalar aggregate (the same driver-side role as the N
     * counter), not a data collect. */
   def tpchPersonalizedRanks(spark: SparkSession, dir: String): DataFrame =
-    graft.plans.Lineage.once(pranks, (spark, dir))({
+    graft.plans.Lineage.memo("tpchPersonalizedRanks", spark, dir) {
       val g = tpch(spark, dir)
       val src = g.edges
         .agg(org.apache.spark.sql.functions.min("src").as("s"))
         .first().getString(0)
-      val r = PageRank.run(g.pages, g.edges, teleportTo = Some(src))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      r.count()
-      graft.plans.Lineage.pin(r)
-      r
-    })
-
-  private val wranks = TrieMap.empty[(SparkSession, String), DataFrame]
+      PageRank.run(g.pages, g.edges, teleportTo = Some(src))
+    }
 
   /** Weighted rank vector (edge weight = purchase-line multiplicity,
     * [[LinkGraph.tpchWeightedEdges]]) — computed once per (session,
@@ -221,7 +174,7 @@ object GraphCatalog {
     * aggregation over orders⋈lineitem, so it shares only the cached
     * vertex set with the unweighted graph. */
   def tpchWeightedRanks(spark: SparkSession, dir: String): DataFrame =
-    graft.plans.Lineage.once(wranks, (spark, dir))({
+    graft.plans.Lineage.perSession("tpchWeightedRanks", spark, dir) {
       val g = tpch(spark, dir)
       val we = LinkGraph
         .removeRedLinks(LinkGraph.tpchWeightedEdges(spark, dir), g.pages)
@@ -232,54 +185,24 @@ object GraphCatalog {
       we.unpersist()
       graft.plans.Lineage.pin(r)
       r
-    })
-
-  private val hitsCache = TrieMap.empty[(SparkSession, String), DataFrame]
+    }
 
   /** HITS hub/authority vectors — computed once per (session, dir),
     * persisted. [[Hits.run]] ends with an eager localCheckpoint, so the
     * extra persist here only pins the small result blocks. */
   def tpchHits(spark: SparkSession, dir: String): DataFrame =
-    graft.plans.Lineage.once(hitsCache, (spark, dir))({
+    graft.plans.Lineage.memo("tpchHits", spark, dir) {
       val g = tpch(spark, dir)
-      val r = Hits.run(g.pages, g.edges)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      r.count()
-      graft.plans.Lineage.pin(r)
-      r
-    })
-
-  private val wikiGraphs = TrieMap.empty[(SparkSession, String), LinkGraphData]
-  private val wikiRankCache = TrieMap.empty[(SparkSession, String), DataFrame]
+      Hits.run(g.pages, g.edges)
+    }
 
   /** Link graph of the synthesized wiki dump ([[graft.wiki.WikiDump]]):
     * full S1→P1→P2→J1 path — XML parse, link extraction, validity
     * filter, red-link semi-join — built once per (session, dir). */
-  def wiki(spark: SparkSession, dir: String): LinkGraphData = {
-    sweepStopped()
-    graft.plans.Lineage.once(wikiGraphs, (spark, dir))({
-      import graft.wiki.{WikiDump, WikiIngest}
-      // The parsed (title, text) pages feed BOTH the vertex set and the
-      // edge extraction; without a pin the XML synthesis + from_xml parse
-      // would run twice (once per consumer). Pin it, materialize both
-      // derived caches eagerly, then drop the pin — the parse runs once
-      // and only the small derived state stays resident.
-      val parsed = WikiIngest.parsePageXml(WikiDump.xml(spark, dir), "xml")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val pages = WikiIngest.pageTitles(parsed)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val edges = LinkGraph
-        .removeRedLinks(
-          WikiIngest.extractLinks(parsed)
-            .select(col("page").as("src"), col("link").as("dst")),
-          pages)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val n = pages.count()
-      edges.count()
-      parsed.unpersist(blocking = false)
-      LinkGraphData(pages, edges, n)
-    })
-  }
+  def wiki(spark: SparkSession, dir: String): LinkGraphData =
+    graft.plans.Lineage.perSession("wikiGraph", spark, dir) {
+      graft.wiki.WikiPipeline.linkGraph(graft.wiki.WikiDump.xml(spark, dir))
+    }
 
   /** Rank vector of the wiki graph — the reference's full 13-job DAG
     * equivalent, computed once per (session, dir). Uses the GraphX
@@ -289,12 +212,8 @@ object GraphCatalog {
     * internal cache/unpersist, no Catalyst plan growth across the 8
     * iterations. */
   def wikiRanks(spark: SparkSession, dir: String): DataFrame =
-    graft.plans.Lineage.once(wikiRankCache, (spark, dir))({
+    graft.plans.Lineage.memo("wikiRanks", spark, dir) {
       val g = wiki(spark, dir)
-      val r = PageRankGraphX.run(g.pages, g.edges)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      r.count()
-      graft.plans.Lineage.pin(r)
-      r
-    })
+      PageRankGraphX.run(g.pages, g.edges)
+    }
 }

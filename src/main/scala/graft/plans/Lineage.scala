@@ -25,11 +25,15 @@ import org.apache.spark.storage.StorageLevel
   * long session (or a bench run) those stack up and tax every query
   * that follows with eviction and GC pressure.
   *
-  * Also the one home of the build-once lifecycle every memoized
-  * artifact shares: [[memo]] for session-keyed in-memory frames,
-  * [[perContext]] for context-keyed values, [[store]] for the
-  * persisted `graft_*` catalog tables, and [[sweepStoppedKeys]] for
-  * the irregular caches in between.
+  * Also the registry of every memoized artifact: each is a NAME
+  * here, not a map its caller declares. [[perSession]] and
+  * [[perContext]] build a value once per (session or context, name,
+  * key); [[memo]] adds persist → count → pin for session frames;
+  * [[store]] adds the drop/orphan-delete lifecycle of the persisted
+  * `graft_*` catalog tables, named by their table prefix. The
+  * registry sweeps stopped contexts itself; [[sweepStoppedKeys]] is
+  * left for the two mutable maps outside it (the pipeline manifest
+  * mirror and the event feed cache).
   */
 object Lineage {
 
@@ -72,12 +76,12 @@ object Lineage {
   // strong refs the GC could otherwise reclaim.
 
   /** Drop a cache's entries whose SparkContext has stopped — the one
-    * sweep behind every memoization catalog and persisted store: a
-    * stopped context's block-store state is already gone, so a stale
-    * entry only pins the dead context's object graph on the driver
-    * (ADVICE r8 leak class). `ctx` maps a key to its context
-    * (`_._1` for context-keyed caches, `_._1.sparkContext` for
-    * session-keyed ones). */
+    * sweep behind the artifact registry, the scratch maps here and the
+    * two mutable maps outside them: a stopped context's block-store
+    * state is already gone, so a stale entry only pins the dead
+    * context's object graph on the driver (ADVICE r8 leak class).
+    * `ctx` maps a key to its context (`_._1` for context-keyed caches,
+    * `_._1.sparkContext` for session-keyed ones). */
   def sweepStoppedKeys[K, V](m: TrieMap[K, V])(
       ctx: K => SparkContext): Unit =
     m.keys.foreach { k =>
@@ -120,23 +124,14 @@ object Lineage {
     out
   }
 
-  /** Session-keyed build-once memoizer — ONE implementation of the
-    * sweep → getOrElseUpdate → persist → materialize → pin sequence
-    * that the k-means/PQ/DSIR/logprob catalogs each need (the
-    * [[sweepStoppedKeys]] story again: four hand-rolled copies had
-    * already drifted on whether they pinned). The pin exempts any
-    * checkpointed leaves the build reads through from [[freeScratch]]
-    * (no-op when there are none); the persisted frame itself lives in
-    * the block store until its session stops. */
-  def memo[K](cache: TrieMap[(SparkSession, K), DataFrame],
-              s: SparkSession, key: K)(build: => DataFrame): DataFrame = {
-    sweepStoppedKeys(cache)(_._1.sparkContext)
-    once(cache, (s, key)) {
-      val a = build.persist(StorageLevel.MEMORY_AND_DISK)
-      a.count()
-      pin(a)
-      a
-    }
+  /** One build-once map per artifact name, keyed by (scope, key):
+    * the scope is the SparkSession for [[perSession]] names and the
+    * SparkContext for [[perContext]] names. */
+  private val registry = TrieMap.empty[String, TrieMap[(AnyRef, Any), Any]]
+
+  private def scopeContext(scope: AnyRef): SparkContext = scope match {
+    case s: SparkSession => s.sparkContext
+    case c: SparkContext => c
   }
 
   /** Build-at-most-once cache insert — the race-safe form of
@@ -145,26 +140,56 @@ object Lineage {
     * these catalogs is persisted / pinned (pins are irreversible by
     * design) and then discarded — a permanent block-store leak. The
     * fast path stays lock-free; only a key's FIRST build takes the
-    * cache lock (distinct keys of one cache serialize their first
-    * builds, fine for rare driver-side events). Every memoizing
-    * catalog funnels through here: directly (GraphCatalog, WikiDump),
-    * through [[memo]] for session-keyed frames, and through
-    * [[perContext]] / [[store]] for context-keyed values and persisted
-    * catalog tables. */
-  def once[K, V](cache: TrieMap[K, V], key: K)(build: => V): V =
-    cache.get(key).getOrElse(cache.synchronized {
-      cache.getOrElseUpdate(key, build)
-    })
-
-  /** Context-keyed build-once: sweep the cache's stopped contexts, then
-    * [[once]] on `(s.sparkContext, key)` — the scalar / name caches
-    * whose value outlives any one session of the context (see
-    * [[store]] for why the key is the context). */
-  def perContext[K, V](cache: TrieMap[(SparkContext, K), V],
-                       s: SparkSession, key: K)(build: => V): V = {
-    sweepStoppedKeys(cache)(_._1)
-    once(cache, (s.sparkContext, key))(build)
+    * name's lock. One lock per name, never one registry-wide lock:
+    * a build that calls another name (the compacted signature store
+    * reading the standing one, the mixed ANN store reading the
+    * standing ANN store) takes the two locks in a fixed order, and
+    * distinct keys of one name serialize their first builds (fine for
+    * rare driver-side events). Every entry of a stopped context is
+    * swept first: its block-store state is already gone, so the entry
+    * would only pin the dead context's object graph on the driver. */
+  private def once[V](name: String, scope: AnyRef, key: Any)(
+      build: => V): V = {
+    registry.values.foreach(sweepStoppedKeys(_)(k => scopeContext(k._1)))
+    val cache = registry.getOrElseUpdate(name, TrieMap.empty)
+    cache.get((scope, key)).getOrElse(cache.synchronized {
+      cache.getOrElseUpdate((scope, key), build)
+    }).asInstanceOf[V]
   }
+
+  /** Build `name`'s value once per (session, key). */
+  def perSession[V](name: String, s: SparkSession, key: Any)(
+      build: => V): V =
+    once(name, s, key)(build)
+
+  /** Build `name`'s value once per (context, key) — the scalar / name
+    * caches whose value outlives any one session of the context (see
+    * [[store]] for why the key is the context). */
+  def perContext[V](name: String, s: SparkSession, key: Any)(
+      build: => V): V =
+    once(name, s.sparkContext, key)(build)
+
+  /** Drop `name`'s entries built in session `s` — a harness teardown
+    * hook for artifacts a long-lived JVM must release before the
+    * session stops. */
+  def forget(name: String, s: SparkSession): Unit =
+    registry.get(name).foreach { m =>
+      m.keys.foreach { k => if (k._1 eq s) m.remove(k) }
+    }
+
+  /** Session-keyed build-once frame: [[perSession]] plus persist →
+    * materialize → pin. The pin exempts any checkpointed leaves the
+    * build reads through from [[freeScratch]] (no-op when there are
+    * none); the persisted frame itself lives in the block store until
+    * its session stops. */
+  def memo(name: String, s: SparkSession, key: Any)(
+      build: => DataFrame): DataFrame =
+    perSession(name, s, key) {
+      val a = build.persist(StorageLevel.MEMORY_AND_DISK)
+      a.count()
+      pin(a)
+      a
+    }
 
   /** The physical name of corpus `d`'s store: `prefix` + the first 8
     * hex digits of md5(d). The commit manifest derives its names
@@ -196,12 +221,11 @@ object Lineage {
     *    corpus (ADVICE r20). Keying on an input fingerprint is the fix
     *    (the artifact-registry item on the ROADMAP).
     *
-    * Each store keeps its OWN cache so first builds serialize per
-    * store, and a build that reads another store (the compacted store
-    * reading the standing one) takes the two locks in a fixed order. */
-  def store(cache: TrieMap[(SparkContext, String), String], s: SparkSession,
-            d: String, prefix: String)(write: String => Unit): String =
-    perContext(cache, s, d) {
+    * The prefix is the store's registry name, so each store keeps its
+    * own lock (see [[once]]). */
+  def store(s: SparkSession, d: String, prefix: String)(
+      write: String => Unit): String =
+    perContext(prefix, s, d) {
       val tbl = storeTable(prefix, d)
       s.sql(s"DROP TABLE IF EXISTS $tbl")
       val loc = new Path(

@@ -121,12 +121,8 @@ object DedupQueries {
     // (dump-sized, bucket-local); probe cost is O(wave B) + bucket
     // probes — standing bytes still never re-read.
     "q_dedup_store_append" -> ((s, d) => {
-      val mid = incMidpoint(s, d)
       val store = sigStoreAppended(s, d)
-      val nb = graft.plans.Lineage.memo(waveBCache, s, d)(
-        bandedSigs(Tables.documents(s, d)
-          .filter(col("source") === IncNewSource
-            && col("doc_id") > lit(mid))))
+      val nb = waveBBanded(s, d)
       val cross = nb.as("x").join(store.as("y"),
           col("x.band") === col("y.band") &&
             col("x.bkey") === col("y.bkey"))
@@ -162,12 +158,8 @@ object DedupQueries {
     // bench: the probe is q_dedup_incremental's (benched) co-located
     // plan; the appends are once-per-dump memoized bucketed writes.
     "q_dedup_append2" -> ((s, d) => {
-      val mid = incMidpoint(s, d)
       val store = sigStoreAppended2(s, d)
-      val nb = graft.plans.Lineage.memo(waveBCache, s, d)(
-        bandedSigs(Tables.documents(s, d)
-          .filter(col("source") === IncNewSource
-            && col("doc_id") > lit(mid))))
+      val nb = waveBBanded(s, d)
       nb.as("x").join(store.as("y"),
           col("x.band") === col("y.band") &&
             col("x.bkey") === col("y.bkey") &&
@@ -536,23 +528,19 @@ object DedupQueries {
     }
   }
 
-  private val keptCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
-
   /** The span-excision output as a BUILD-ONCE corpus artifact (the
     * lshClusters pattern): ONE removal run — counting shuffles, dup
     * collapse, the single corpus-text join, the excision fold —
     * serves BOTH consumers (q_dedup_substring_removed's digest
     * summary and q_text_curate_cleaned's re-scoring), memoized and
-    * pinned per (session, dir). This is the deployment shape: the
+    * pinned. This is the deployment shape: the
     * cleaned corpus is materialized once and every downstream stage
     * reads it, nobody re-excises per query. Columns:
     * (doc_id, source, n_tok, kept). */
   private[graft] def substringKeptFrame(s: SparkSession, d: String)
       : DataFrame = {
     var winsToFree: Option[DataFrame] = None
-    val fin = graft.plans.Lineage.memo(keptCache, s, d) {
+    val fin = graft.plans.Lineage.memo("kept", s, d) {
       val (kept, wins) =
         substringKeptRaw(Tables.documents(s, d), 8, persistWins = true)
       winsToFree = Some(wins)
@@ -563,10 +551,6 @@ object DedupQueries {
     winsToFree.foreach(_.unpersist(blocking = true))
     fin
   }
-
-  private val cleanStoreCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
 
   /** The cleaned corpus as a PERSISTED catalog table (VERDICT r16
     * item 4 — the [[sigStoreAppended]] / annStore pattern brought to
@@ -583,8 +567,7 @@ object DedupQueries {
     * kept). */
   private[graft] def cleanedStore(s: SparkSession, d: String)
       : DataFrame = {
-    val name = graft.plans.Lineage.store(cleanStoreCache, s, d,
-        "graft_clean_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_clean_") { tbl =>
       substringKeptFrame(s, d)
         .write.bucketBy(8, "doc_id").sortBy("doc_id")
         .mode("overwrite").saveAsTable(tbl)
@@ -673,16 +656,12 @@ object DedupQueries {
               AS BIGINT) % 10 = 0
         THEN 'test' ELSE 'train' END"""
 
-  private val clusterCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
-
   /** Memoized canonical assignment over the corpus' verified LSH pairs
     * — q_dedup_cluster and q_dedup_split both read this one components
     * run (the pair graph and its closure are build-once corpus
     * artifacts, like the k-means model). */
   private[graft] def lshClusters(s: SparkSession, d: String): DataFrame =
-    graft.plans.Lineage.memo(clusterCache, s, d)(
+    graft.plans.Lineage.memo("cluster", s, d)(
       clusterAssign(Tables.documents(s, d), lshPairs(s, d)))
 
   /** Canonical cluster assignment from a dup-pair list: connected
@@ -751,10 +730,6 @@ object DedupQueries {
     }
   }
 
-  private val lshCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
-
   /** q_dedup_incremental: the source slice playing "the new dump".
     * Chosen for gate non-vacuity — 6 verified pairs touch it at
     * sf0.01, 26 at sf0.1 (the wiki-hub-page precedent: a gate slice
@@ -765,13 +740,6 @@ object DedupQueries {
     * bucketed on (band, bkey), so the probe join never shuffles the
     * standing corpus's signatures — only the (small) new dump's. */
   private val IncBuckets = 8
-
-  private val sigStoreCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-  private val incNewCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
 
   /** q_dedup_incremental's engine body, shared with
     * q_text_curate_incremental: verified near-dup pairs (exact Jaccard
@@ -829,13 +797,12 @@ object DedupQueries {
     * against the store without re-reading or re-sketching a byte of
     * standing text (the BucketedJoinSpec zero-shuffle machinery; at
     * 100 TB the store is the only copy of the corpus the dedup path
-    * ever touches again). Built once per (context, dir); in production
-    * the table outlives the session — the store IS the state. The `hs`
+    * ever touches again). In production the table outlives the
+    * session — the store IS the state. The `hs`
     * sketch rides along so candidate verification stays exact without
     * a corpus lookup. */
   private[graft] def signatureStore(s: SparkSession, d: String): DataFrame = {
-    val name = graft.plans.Lineage.store(sigStoreCache, s, d,
-        "graft_sig_store_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_sig_store_") { tbl =>
       bandedSigs(Tables.documents(s, d)
           .filter(col("source") =!= IncNewSource))
         .write.bucketBy(IncBuckets, "band", "bkey").sortBy("band", "bkey")
@@ -846,22 +813,12 @@ object DedupQueries {
     PipelineCommit.resolveOr(s, d, "dedup", 1L, name)
   }
 
-  private val incMidCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), Long]
-  private val sigAppCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-  private val waveBCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
-
   /** The new dump's id midpoint — splits it into arrival wave A
     * (doc_id ≤ mid, appended to the store) and wave B (doc_id > mid,
     * the probe). One 1-row agg, memoized; integer floor division on
     * both engines. */
   private[graft] def incMidpoint(s: SparkSession, d: String): Long = {
-    graft.plans.Lineage.perContext(incMidCache, s, d) {
+    graft.plans.Lineage.perContext("incMid", s, d) {
       val r = Tables.documents(s, d)
         .filter(col("source") === IncNewSource)
         .agg(min("doc_id"), max("doc_id")).head
@@ -874,6 +831,16 @@ object DedupQueries {
     }
   }
 
+  /** Wave B's banded signatures (doc_id > [[incMidpoint]]) — the probe
+    * side of q_dedup_store_append and q_dedup_append2. */
+  private def waveBBanded(s: SparkSession, d: String): DataFrame = {
+    val mid = incMidpoint(s, d)
+    graft.plans.Lineage.memo("waveB", s, d)(
+      bandedSigs(Tables.documents(s, d)
+        .filter(col("source") === IncNewSource
+          && col("doc_id") > lit(mid))))
+  }
+
   /** The signature store AFTER wave A's append (q_dedup_store_append):
     * its own catalog table — the standing signatures written first,
     * then wave A's appended via a bucket-spec-matching bucketBy write
@@ -883,8 +850,7 @@ object DedupQueries {
     * untouched. */
   private[graft] def sigStoreAppended(s: SparkSession, d: String)
       : DataFrame = {
-    val name = graft.plans.Lineage.store(sigAppCache, s, d,
-        "graft_sig_app_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_sig_app_") { tbl =>
       val docs = Tables.documents(s, d)
       bandedSigs(docs.filter(col("source") =!= IncNewSource))
         .write.bucketBy(IncBuckets, "band", "bkey").sortBy("band", "bkey")
@@ -897,10 +863,6 @@ object DedupQueries {
     s.table(name)
   }
 
-  private val sigApp2Cache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   /** The signature store after BOTH waves' appends (q_dedup_append2 —
     * round-19 re-entrancy): standing signatures written, then wave A
     * appended, then wave B appended — two successive bucketed appends
@@ -912,8 +874,7 @@ object DedupQueries {
     * untouched. */
   private[graft] def sigStoreAppended2(s: SparkSession, d: String)
       : DataFrame = {
-    val name = graft.plans.Lineage.store(sigApp2Cache, s, d,
-        "graft_sig_app2_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_sig_app2_") { tbl =>
       val docs = Tables.documents(s, d)
       val mid = incMidpoint(s, d)
       bandedSigs(docs.filter(col("source") =!= IncNewSource))
@@ -963,10 +924,6 @@ object DedupQueries {
   private[graft] def tombstonedSql(alias: String): String =
     s"($alias.source <> '$IncNewSource' AND $alias.doc_id % 10 = 3)"
 
-  private val sigCompactCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   /** The signature store PHYSICALLY COMPACTED under the tombstone set
     * (q_dedup_compact — the q_ann_compact lifecycle brought to dedup):
     * rewrite the bucketed store DROPPING the tombstoned docs' rows.
@@ -979,18 +936,13 @@ object DedupQueries {
     * [[signatureStore]] is left untouched. */
   private[graft] def sigStoreCompacted(s: SparkSession, d: String)
       : DataFrame = {
-    val name = graft.plans.Lineage.store(sigCompactCache, s, d,
-        "graft_sig_cmp_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_sig_cmp_") { tbl =>
       signatureStore(s, d).filter(!DedupDeleteRule)
         .write.bucketBy(IncBuckets, "band", "bkey").sortBy("band", "bkey")
         .mode("overwrite").saveAsTable(tbl)
     }
     s.table(name)
   }
-
-  private val sigMixedCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
 
   /** The signature store after a MIXED pass (q_pipeline_mixed — a
     * real nightly dump carries appends AND a takedown list under ONE
@@ -1005,8 +957,7 @@ object DedupQueries {
     * q_pipeline_mixed oracle restates from `documents` alone. */
   private[graft] def sigStoreMixed(s: SparkSession, d: String)
       : DataFrame = {
-    val name = graft.plans.Lineage.store(sigMixedCache, s, d,
-        "graft_sig_mx_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_sig_mx_") { tbl =>
       signatureStore(s, d).filter(!DedupDeleteRule)
         .write.bucketBy(IncBuckets, "band", "bkey").sortBy("band", "bkey")
         .mode("overwrite").saveAsTable(tbl)
@@ -1030,15 +981,15 @@ object DedupQueries {
     val build = bandedSigs(Tables.documents(s, d)
       .filter(col("source") === IncNewSource))
     if (!materialize) build
-    else graft.plans.Lineage.memo(incNewCache, s, d)(build)
+    else graft.plans.Lineage.memo("incNew", s, d)(build)
   }
 
   /** Verified MinHash-LSH near-dup pairs (a < b, exact Jaccard ≥ 0.5):
     * 4 bands × 4 rows over 16-perm signatures of word-3-gram shingles;
     * exact Jaccard re-verification on band-collision candidates only.
     * Shared by q_dedup_lsh (the pair gate), q_dedup_cluster (the
-    * canonicalization step) and q_dedup_split — MEMOIZED per (session,
-    * dir) like the k-means model artifacts (the pair list is a
+    * canonicalization step) and q_dedup_split — MEMOIZED like the
+    * k-means model artifacts (the pair list is a
     * build-once corpus artifact; [[graft.plans.Lineage.memo]] pins the
     * small verified-pair result so one LSH run serves every consumer).
     * Unordered — callers add their presentation sort.
@@ -1049,7 +1000,7 @@ object DedupQueries {
   private[graft] def lshPairs(s: SparkSession, d: String,
       materialize: Boolean = true): DataFrame =
     if (!materialize) lshPairsBuild(s, d, materialize = false)
-    else graft.plans.Lineage.memo(lshCache, s, d)(
+    else graft.plans.Lineage.memo("lsh", s, d)(
       lshPairsBuild(s, d, materialize = true))
 
   private def lshPairsBuild(s: SparkSession, d: String,

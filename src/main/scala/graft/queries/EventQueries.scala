@@ -59,12 +59,8 @@ object EventQueries {
     * min)/10 of ts (the shared high-water-mark idiom on the event
     * family's ordering key; integer floor division both engines).
     * Memoized 1-row agg — the N-counter contract. */
-  private val evThrCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), Long]
-
   private[graft] def eventsTsThreshold(s: SparkSession, d: String): Long = {
-    graft.plans.Lineage.perContext(evThrCache, s, d) {
+    graft.plans.Lineage.perContext("evThr", s, d) {
       val r = Tables.events(s, d)
         .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
         .head
@@ -165,12 +161,8 @@ object EventQueries {
     * dump slices (q_events_scd_inc2): the dump's ts midpoint
     * `mark + (max − mark)/2` in epoch micros — integer floor division
     * both engines, memoized 1-row agg. */
-  private val evMidCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), Long]
-
   private[graft] def eventsTsMid(s: SparkSession, d: String): Long = {
-    graft.plans.Lineage.perContext(evMidCache, s, d) {
+    graft.plans.Lineage.perContext("evMid", s, d) {
       val hi = Tables.events(s, d)
         .agg(max(unix_micros(col("ts")))).head.getLong(0)
       val thr = eventsTsThreshold(s, d)
@@ -184,13 +176,8 @@ object EventQueries {
     * build over events BELOW the ts high-water mark, written once,
     * bucketed on user_id so the maintenance's open-version read and
     * any downstream user_id join co-locate. */
-  private val scdStoreCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   private[graft] def scdStore(s: SparkSession, d: String): DataFrame = {
-    val name = graft.plans.Lineage.store(scdStoreCache, s, d,
-        "graft_scd_store_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_scd_store_") { tbl =>
       scdOf(Tables.events(s, d).filter(col("ts") <
           timestamp_micros(lit(eventsTsThreshold(s, d)))))
         .write.bucketBy(8, "user_id").sortBy("user_id", "version")
@@ -218,13 +205,8 @@ object EventQueries {
     * standing store — the dimension's state between dump N and dump
     * N+1, written RAW (ts-typed bounds, event_id kept) so the second
     * merge chains from bit-identical state. */
-  private val scdStore2Cache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   private[graft] def scdStore2(s: SparkSession, d: String): DataFrame = {
-    val name = graft.plans.Lineage.store(scdStore2Cache, s, d,
-        "graft_scd_store2_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_scd_store2_") { tbl =>
       val mark = eventsTsThreshold(s, d)
       val mid = eventsTsMid(s, d)
       require(mark < mid,
@@ -237,10 +219,6 @@ object EventQueries {
     PipelineCommit.resolveOr(s, d, "scd", 2L, name)
   }
 
-  private val scdMixedCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   /** The SCD2 store after a MIXED pass (q_pipeline_mixed): erasure
     * ([[ScdDeleteRule]] users filtered from the store AND from the
     * arriving dump — q_events_scd_delete's two narrow user_id
@@ -250,8 +228,7 @@ object EventQueries {
     * q_pipeline_mixed oracle restates. */
   private[graft] def scdStoreMixed(s: SparkSession, d: String)
       : DataFrame = {
-    val name = graft.plans.Lineage.store(scdMixedCache, s, d,
-        "graft_scd_mx_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_scd_mx_") { tbl =>
       scdMergeOf(scdStore(s, d).filter(!ScdDeleteRule),
           eventSlice(s, d, eventsTsThreshold(s, d), None)
             .filter(!ScdDeleteRule))
@@ -260,10 +237,6 @@ object EventQueries {
     }
     s.table(name)
   }
-
-  private val scdStreamCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
 
   /** The SCD2 store built from a STREAM-LANDED dump (q_stream_commit):
     * the ts high-water slice replayed chronologically through a
@@ -274,8 +247,7 @@ object EventQueries {
     * deliberately unpublishable). */
   private[graft] def scdStoreStreamed(s: SparkSession, d: String)
       : DataFrame = {
-    graft.plans.Lineage.store(scdStreamCache, s, d,
-        "graft_scd_st_") { tbl =>
+    graft.plans.Lineage.store(s, d, "graft_scd_st_") { tbl =>
       import s.implicits._
       val chunks = cachedChunks(s, d, "commit")(sortedFeed(
         eventSlice(s, d, eventsTsThreshold(s, d), None)
@@ -296,12 +268,8 @@ object EventQueries {
     * per-user timestamp collisions would silently diverge the two (and
     * fan out the oracle's LEFT JOIN). One memoized existence check,
     * the fail-loudly style of the empty-standing-edge guards. */
-  private val tsUniqCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), Boolean]
-
   private def requireUniqueUserTs(s: SparkSession, d: String): Unit = {
-    val unique = graft.plans.Lineage.perContext(tsUniqCache, s, d) {
+    val unique = graft.plans.Lineage.perContext("tsUniq", s, d) {
       Tables.events(s, d).groupBy(col("user_id"), col("ts"))
         .count().filter(col("count") > 1).isEmpty
     }
@@ -397,8 +365,7 @@ object EventQueries {
     * chunk vectors and the strong SparkSession key. */
   private[graft] def clearFeeds(s: SparkSession): Unit = {
     feedCache.keys.foreach { k => if (k._1 eq s) feedCache.remove(k) }
-    sharedStreamCache.keys.foreach { k =>
-      if (k._1 eq s) sharedStreamCache.remove(k) }
+    graft.plans.Lineage.forget("sharedEventStream", s)
   }
 
   private[queries] def cachedChunks[A](s: SparkSession, d: String, gate: String)(
@@ -441,8 +408,8 @@ object EventQueries {
     * cannot share one instance — but the feed loop, the single
     * mid-feed barrier and the run itself are shared: 8 query starts
     * and their micro-batches schedule together instead of
-    * back-to-back × warm-up × reps. The result map is memoized per
-    * (session, dir) — the build-once-artifact discipline the
+    * back-to-back × warm-up × reps. The result map is memoized — the
+    * build-once-artifact discipline the
     * kmeans/LSH/DSIR families already use, applied to the replay
     * harness.
     *
@@ -456,13 +423,9 @@ object EventQueries {
     * same watermark progression. q_stream_join (tagged two-branch
     * feed) and q_stream_dedup (doubled redelivery feed) replay their
     * own distinct feeds and stay solo. */
-  private val sharedStreamCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Map[String, DataFrame]]
-
   private[queries] def sharedEventStream(s: SparkSession, d: String,
       gate: String): DataFrame = {
-    graft.plans.Lineage.sweepStoppedKeys(sharedStreamCache)(_._1.sparkContext)
-    graft.plans.Lineage.once(sharedStreamCache, (s, d)) {
+    graft.plans.Lineage.perSession("sharedEventStream", s, d) {
       buildSharedEventStreams(s, d)
     }(gate)
   }

@@ -54,15 +54,11 @@ object GraphQueries {
     * the decision LAW, not the constant. */
   private[graft] val ChurnBound = 0.10
 
-  private val churnCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), Boolean]
-
   /** The rebuild-or-warm decision: true iff the dump's directed
     * edge-churn fraction exceeds [[ChurnBound]]. Two 1-row counts
-    * (N-counter contract), memoized per (context, dir). */
+    * (N-counter contract), memoized. */
   private[graft] def maintainRebuild(s: SparkSession, d: String): Boolean = {
-    graft.plans.Lineage.perContext(churnCache, s, d) {
+    graft.plans.Lineage.perContext("churn", s, d) {
       val g = GraphCatalog.tpch(s, d)
       val thr = GraphCatalog.tpchOrderThreshold(s, d)
       val ns = LinkGraph.removeRedLinks(
@@ -130,10 +126,6 @@ object GraphQueries {
   private[graft] def graphTombSql(c: String): String =
     s"($c LIKE 's%' AND CAST(substring($c, 2) AS BIGINT) % 10 = 3)"
 
-  private val rankMixedCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   /** The rank store after a MIXED pass (q_pipeline_mixed): the
     * takedown ([[graphTombstoned]] pages leave the graph, vertex +
     * incident edges + seed rows — q_graph_delete's three narrow
@@ -145,8 +137,7 @@ object GraphQueries {
     * page set it is given). Final population = survivor pages. */
   private[graft] def rankStoreMixed(s: SparkSession, d: String)
       : DataFrame = {
-    val name = graft.plans.Lineage.store(rankMixedCache, s, d,
-        "graft_rank_mx_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_rank_mx_") { tbl =>
       val g = GraphCatalog.tpch(s, d)
       val survivorPages = g.pages.filter(!graphTombstoned(col("page")))
       val survivorFull = GraphCatalog.symmetrized(g.edges).filter(
@@ -276,21 +267,14 @@ object GraphQueries {
     * ([[graft.graph.Lpa]] — exact at any oscillation state). */
   private val LpaRounds = 3
 
-  private val suppCountCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-
   /** |supplier| — the vertex bound for the co-occurrence-graph loops'
     * small-state scope ([[graft.plans.LoopExec]]): every coEdges /
     * coWeightedUnd endpoint is a supplier key, so the supplier row
     * count bounds those loops' per-round state. 1-row count, memoized
-    * per (session, dir) — the N-counter contract. */
-  private def supplierCount(s: SparkSession, d: String): Long = {
-    // stopped-session sweep (ADVICE r20 low — the feedCache leak class;
-    // same pattern as triCache below)
-    graft.plans.Lineage.sweepStoppedKeys(suppCountCache)(_._1.sparkContext)
-    graft.plans.Lineage.once(suppCountCache, (s, d))(
+    * — the N-counter contract. */
+  private def supplierCount(s: SparkSession, d: String): Long =
+    graft.plans.Lineage.perSession("supplierCount", s, d)(
       graft.Tables.supplier(s, d).count())
-  }
 
   /** Supplier co-occurrence edges (s1 < s2, distinct) above a quantity
     * cut — the sparse undirected-graph projection shared by the
@@ -376,9 +360,6 @@ object GraphQueries {
     counts
   }
 
-  private val triCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), DataFrame]
-
   /** Memoized [[triangleCounts]] per (session, dir, quantity cut) —
     * the most expensive join in the graph family feeds BOTH
     * q_graph_triangles and q_graph_clustering; without memoization the
@@ -387,14 +368,12 @@ object GraphQueries {
     * harness scratch-freeing after the first consumer can't poison the
     * second's read. */
   private def triangleCountsMemo(s: SparkSession, d: String,
-      minQty: Int): DataFrame = {
-    graft.plans.Lineage.sweepStoppedKeys(triCache)(_._1.sparkContext)
-    graft.plans.Lineage.once(triCache, (s, d, minQty))({
+      minQty: Int): DataFrame =
+    graft.plans.Lineage.perSession("triangleCounts", s, (d, minQty)) {
       val t = triangleCounts(coEdges(s, d, minQty))
       graft.plans.Lineage.pin(t)
       t
-    })
-  }
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // J1: red-link removal — edges surviving the existence semi-join.

@@ -107,10 +107,6 @@ object MultimodalQueries {
         col("sb.blk").as("blk"), col("sb.bval").as("bval"))
   }
 
-  private val phashStoreCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   /** PERSISTED pHash signature store over the STANDING assets (every
     * source but [[DedupQueries.IncNewSource]]) — the image-dedup
     * counterpart of the MinHash signature store: hash each dump's
@@ -122,8 +118,7 @@ object MultimodalQueries {
     * asset bytes). `bs` rides along so the Hamming verify needs no
     * corpus lookup. */
   private[graft] def phashStore(s: SparkSession, d: String): DataFrame = {
-    val name = graft.plans.Lineage.store(phashStoreCache, s, d,
-        "graft_phash_store_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_phash_store_") { tbl =>
       val standing = Multimodal.assets(s, d)
         .filter(col("meta.origin") =!= DedupQueries.IncNewSource)
       tier2Rows(Multimodal.aHashBands(standing, 32))
@@ -135,19 +130,15 @@ object MultimodalQueries {
     PipelineCommit.resolveOr(s, d, "phash", 1L, name)
   }
 
-  private val phashCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
-
   /** Verified Hamming-≤7 pHash pairs (a < b) over the 32×32 aHash of
-    * every ≥256-byte asset — MEMOIZED per (session, dir) like the LSH
+    * every ≥256-byte asset — MEMOIZED like the LSH
     * pair list (q_mm_phash and q_mm_phash_cluster share one run).
     * Build: cache the band table → materialize the small pair result →
     * unpersist (the q_graph_triangles pattern; bands feeds the explode
     * AND both hamming sides); the checkpoint is registered scratch
     * (ADVICE r7) and pinned by the memo. */
   private def phashPairs(s: SparkSession, d: String): DataFrame =
-    graft.plans.Lineage.memo(phashCache, s, d) {
+    graft.plans.Lineage.memo("phash", s, d) {
       val bands = Multimodal.aHashBands(Multimodal.assets(s, d), 32)
         .persist()
       val out = graft.plans.Lineage.scratchCheckpoint(
@@ -167,13 +158,9 @@ object MultimodalQueries {
     * physically compacted table (the incrementalPairsOver /
     * storedSearch one-strategy discipline). The dump's tier-2 rows
     * are memoized so the three lifecycle gates sketch the dump once. */
-  private val dumpT2Cache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
-
   private def phashProbeOver(s: SparkSession, d: String,
       store: DataFrame, withinRoute: Boolean = true): DataFrame = {
-    val nb = graft.plans.Lineage.memo(dumpT2Cache, s, d)(
+    val nb = graft.plans.Lineage.memo("dumpT2", s, d)(
       tier2Rows(Multimodal.aHashBands(Multimodal.assets(s, d)
         .filter(col("meta.origin") === DedupQueries.IncNewSource), 32)))
     val key = Seq("band", "bkey", "blk", "bval")
@@ -200,10 +187,6 @@ object MultimodalQueries {
       .orderBy(col("a"), col("b"))
   }
 
-  private val phashApp2Cache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   /** The pHash store after TWO successive dump-slice appends
     * (q_mm_phash_inc2 — round-19 re-entrancy, multimodal family):
     * standing tier-2 rows written, then the dump's id lower half
@@ -217,8 +200,7 @@ object MultimodalQueries {
     * standing [[phashStore]] stays untouched. */
   private[graft] def phashStoreAppended2(s: SparkSession, d: String)
       : DataFrame = {
-    val name = graft.plans.Lineage.store(phashApp2Cache, s, d,
-        "graft_phash_app2_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_phash_app2_") { tbl =>
       val assets = Multimodal.assets(s, d)
       val mid = DedupQueries.incMidpoint(s, d)
       def slice(f: DataFrame) = tier2Rows(Multimodal.aHashBands(f, 32))
@@ -237,27 +219,18 @@ object MultimodalQueries {
     PipelineCommit.resolveOr(s, d, "phash", 2L, name)
   }
 
-  private val phashCompactCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   /** The pHash store physically compacted under the shared tombstone
     * set — a filter + bucket-preserving rewrite of the tier-2 index
     * (the sigStoreCompacted pattern; never a re-decode or re-hash). */
   private[graft] def phashStoreCompacted(s: SparkSession, d: String)
       : DataFrame = {
-    val name = graft.plans.Lineage.store(phashCompactCache, s, d,
-        "graft_phash_cmp_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_phash_cmp_") { tbl =>
       phashStore(s, d).filter(!DedupQueries.DedupDeleteRule)
         .write.bucketBy(8, "band", "bkey").sortBy("band", "bkey")
         .mode("overwrite").saveAsTable(tbl)
     }
     s.table(name)
   }
-
-  private val phashMixedCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
 
   /** The pHash store after a MIXED pass (q_pipeline_mixed): the
     * standing tier-2 index rewritten without the shared tombstones
@@ -266,8 +239,7 @@ object MultimodalQueries {
     * the image index (64 rows per surviving/new ≥256-byte asset). */
   private[graft] def phashStoreMixed(s: SparkSession, d: String)
       : DataFrame = {
-    val name = graft.plans.Lineage.store(phashMixedCache, s, d,
-        "graft_phash_mx_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_phash_mx_") { tbl =>
       phashStore(s, d).filter(!DedupQueries.DedupDeleteRule)
         .write.bucketBy(8, "band", "bkey").sortBy("band", "bkey")
         .mode("overwrite").saveAsTable(tbl)

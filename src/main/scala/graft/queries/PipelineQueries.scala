@@ -140,10 +140,6 @@ object PipelineCommit {
   // artifact of record: [[storeFor]] and the gates read it, and
   // PipelineManifestSpec pins table ≡ mirror after every commit.
 
-  private val manifestInitCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   private val mirror =
     scala.collection.concurrent.TrieMap
       .empty[(org.apache.spark.SparkContext, String),
@@ -151,8 +147,7 @@ object PipelineCommit {
 
   private def ensureManifest(s: SparkSession, d: String): String = {
     graft.plans.Lineage.sweepStoppedKeys(mirror)(_._1)
-    graft.plans.Lineage.store(manifestInitCache, s, d,
-        ManifestPrefix) { tbl =>
+    graft.plans.Lineage.store(s, d, ManifestPrefix) { tbl =>
       import s.implicits._
       Seq.empty[(Long, String, String)]
         .toDF("generation", "family", "store_table")
@@ -181,7 +176,7 @@ object PipelineCommit {
     * already committed generation with identical content is a no-op
     * (idempotent re-run); with different content it is refused loudly
     * — committed generations are immutable, which is what makes the
-    * driver-side mirror and the memoized resolutions sound. */
+    * driver-side mirror sound. */
   private[graft] def publish(s: SparkSession, d: String, gen: Long,
       rows: Seq[(String, String)]): Unit = synchronized {
     import s.implicits._
@@ -225,10 +220,6 @@ object PipelineCommit {
       .collect().map(r => (r.getString(0), r.getString(1)))
       .sortBy(_._1).toSeq
 
-  private val resolveCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String, String, Long), String]
-
   /** THE family-store read path: resolve `family` at the PINNED
     * `gen` through the manifest pointer when that generation is
     * committed, falling back to the builder's own physical name only
@@ -238,34 +229,21 @@ object PipelineCommit {
     * through here, so once a pass has committed, what readers get is
     * BY CONSTRUCTION a committed snapshot — repointing a family (e.g.
     * a compaction swapping the physical table) redirects every
-    * consumer without touching one serve. Committed resolutions are
-    * memoized (pointers are immutable once committed). */
+    * consumer without touching one serve. The lookup reads the
+    * driver-side mirror and runs no Spark job. */
   private[graft] def resolveOr(s: SparkSession, d: String,
-      family: String, gen: Long, fallback: String): DataFrame = {
-    graft.plans.Lineage.sweepStoppedKeys(resolveCache)(_._1)
-    val key = (s.sparkContext, d, family, gen)
-    resolveCache.get(key) match {
-      case Some(t) => s.table(t)
-      case None =>
-        committed(s, d).get(gen).flatMap(_.get(family)) match {
-          case Some(t) => resolveCache.put(key, t); s.table(t)
-          case None    => s.table(fallback)
-        }
-    }
-  }
-
-  private val commitCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), Boolean]
+      family: String, gen: Long, fallback: String): DataFrame =
+    s.table(committed(s, d).get(gen).flatMap(_.get(family))
+      .getOrElse(fallback))
 
   /** Build every family's standing store (each idempotent under its
-    * own Lineage.once), THEN publish generation 1 — the write order
+    * own registry name), THEN publish generation 1 — the write order
     * IS the protocol: stores first, pointer last. Returns the
     * committed generation-1 rows with resolved store names, read from
     * the durable table. */
   private[graft] def commitStanding(s: SparkSession, d: String)
       : DataFrame = {
-    graft.plans.Lineage.perContext(commitCache, s, d) {
+    graft.plans.Lineage.perContext("commit", s, d) {
       SimilarityQueries.annStore(s, d)
       TextQueries.clfWeightsStore(s, d)
       DedupQueries.signatureStore(s, d)
@@ -279,10 +257,6 @@ object PipelineCommit {
     genRows(s, d, 1L)
   }
 
-  private val commit2Cache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), Boolean]
-
   /** The SECOND pass's commit: build every family's v2 store (the
     * re-entrancy gates' own idempotent builders), THEN publish
     * generation 2 into the SAME manifest table — the same
@@ -290,7 +264,7 @@ object PipelineCommit {
     * Generation 1 stays readable (append-only). */
   private[graft] def commitSecond(s: SparkSession, d: String)
       : DataFrame = {
-    graft.plans.Lineage.perContext(commit2Cache, s, d) {
+    graft.plans.Lineage.perContext("commit2", s, d) {
       SimilarityQueries.annStoreAppended2(s, d)
       DedupQueries.sigStoreAppended2(s, d)
       GraphCatalog.tpchStandingRanks2(s, d)
@@ -314,10 +288,6 @@ object PipelineCommit {
     "phash" -> storeTable("graft_phash_mx_", d),
     "scd"   -> storeTable("graft_scd_mx_", d))
 
-  private val commitMixedCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), Boolean]
-
   /** The MIXED pass's commit (VERDICT r19 gap 3): one dump carries
     * appends AND a takedown list, every family applies BOTH legs
     * under the one boundary, and the manifest publishes all six
@@ -328,7 +298,7 @@ object PipelineCommit {
     * construction). */
   private[graft] def commitMixed(s: SparkSession, d: String)
       : DataFrame = {
-    graft.plans.Lineage.perContext(commitMixedCache, s, d) {
+    graft.plans.Lineage.perContext("commitMixed", s, d) {
       SimilarityQueries.annStoreMixed(s, d)
       DedupQueries.sigStoreMixed(s, d)
       GraphQueries.rankStoreMixed(s, d)

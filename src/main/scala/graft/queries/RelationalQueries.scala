@@ -648,12 +648,8 @@ object RelationalQueries {
     * 1-row agg (the N-counter contract). Strictly below the
     * [[lineitemThreshold]] high-water mark by construction, so the
     * retracted set is always a standing subset, never dump rows. */
-  private val retThrCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), Long]
-
   private[graft] def retentionThreshold(s: SparkSession, d: String): Long = {
-    graft.plans.Lineage.perContext(retThrCache, s, d) {
+    graft.plans.Lineage.perContext("retThr", s, d) {
       val r = Tables.lineitem(s, d)
         .agg(min("l_orderkey"), max("l_orderkey")).head
       r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 20
@@ -665,13 +661,8 @@ object RelationalQueries {
     * written once as a catalog table (the signature-store pattern for
     * the relational family — in production a nightly job maintains
     * this table instead of recomputing the corpus). */
-  private val aggStoreCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   private[graft] def aggStore(s: SparkSession, d: String): DataFrame = {
-    val name = graft.plans.Lineage.store(aggStoreCache, s, d,
-        "graft_agg_store_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_agg_store_") { tbl =>
       Tables.lineitem(s, d)
         .filter(col("l_orderkey") < lit(lineitemThreshold(s, d)))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -687,10 +678,6 @@ object RelationalQueries {
     PipelineCommit.resolveOr(s, d, "mv", 1L, name)
   }
 
-  private val aggStore2Cache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   /** The MV store AFTER the first dump slice's merge (q_agg_inc2's
     * intermediate artifact): merge([[aggStore]], d1 = [thr, mid))
     * persisted as RAW UNROUNDED partials — the nightly pipeline's
@@ -698,8 +685,7 @@ object RelationalQueries {
     * composed merge law (the reason the gate exists); parquet doubles
     * round-trip exactly, so pass 2 merges bit-identical partials. */
   private[graft] def aggStore2(s: SparkSession, d: String): DataFrame = {
-    val name = graft.plans.Lineage.store(aggStore2Cache, s, d,
-        "graft_agg_store2_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_agg_store2_") { tbl =>
       val thr = lineitemThreshold(s, d)
       val mid = lineitemMid(s, d)
       require(thr < mid,
@@ -724,10 +710,6 @@ object RelationalQueries {
     PipelineCommit.resolveOr(s, d, "mv", 2L, name)
   }
 
-  private val aggMixedCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   /** The MV store after a MIXED pass (q_pipeline_mixed): ONE merge
     * absorbing the dump's partials (+) AND the retention expiry's
     * partials (−) — q_agg_retract's maintenance materialized as the
@@ -737,8 +719,7 @@ object RelationalQueries {
     * retention cut. */
   private[graft] def aggStoreMixed(s: SparkSession, d: String)
       : DataFrame = {
-    val name = graft.plans.Lineage.store(aggMixedCache, s, d,
-        "graft_agg_mx_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_agg_mx_") { tbl =>
       val thr = lineitemThreshold(s, d)
       val ret = retentionThreshold(s, d)
       require(ret < thr,

@@ -57,13 +57,6 @@ object SimilarityQueries {
     * posting, so candidates stay linear in corpus size). */
   private val HybridMaxDf = 10
 
-  private val lexShinglesCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-  private val lexPostsCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   /** The lexical leg's SERVE over any (doc_id, hs) shingle table and
     * (g, doc_id) postings table: candidate generation from the
     * postings self-join, the Jaccard scoring back-joins, the per-query
@@ -106,13 +99,11 @@ object SimilarityQueries {
     * table, not a second corpus pass. */
   private def hybridLexStore(s: SparkSession, d: String): (String, String) = {
     graft.GraftFunctions.register(s)
-    val ht = graft.plans.Lineage.store(lexShinglesCache, s, d,
-        "graft_lex_shingles_") { tbl =>
+    val ht = graft.plans.Lineage.store(s, d, "graft_lex_shingles_") { tbl =>
       hybridLexShingles(s, d).write.bucketBy(8, "doc_id").sortBy("doc_id")
         .mode("overwrite").saveAsTable(tbl)
     }
-    val pt = graft.plans.Lineage.store(lexPostsCache, s, d,
-        "graft_lex_posts_") { tbl =>
+    val pt = graft.plans.Lineage.store(s, d, "graft_lex_posts_") { tbl =>
       hybridLexPostings(s.table(ht)).write.bucketBy(8, "g").sortBy("g")
         .mode("overwrite").saveAsTable(tbl)
     }
@@ -436,10 +427,6 @@ object SimilarityQueries {
       .select(col("vec_id"),
         explode(expr("transform(top2, x -> x.c)")).as("cluster"))
 
-  private val kmCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, (String, Int, String)), DataFrame]
-
   /** Memoized model artifacts per (session, dir, k, kind) — the
     * k-means model is a build-once artifact like the PQ index
     * ([[pqIndex]]): q_embed_kmeans, q_dedup_semantic,
@@ -447,11 +434,10 @@ object SimilarityQueries {
     * training run instead of re-running the Lloyd loop per query
     * (ADVICE r12). The tiny result tables persist; the final centroid
     * checkpoint they read through is pinned so harness scratch-freeing
-    * can't poison a re-read after eviction ([[graft.plans.Lineage.memo]]
-    * — the shared sweep/persist/pin sequence). */
+    * can't poison a re-read after eviction ([[graft.plans.Lineage.memo]]). */
   private def kmMemo(s: SparkSession, d: String, k: Int, kind: String)(
       build: => DataFrame): DataFrame =
-    graft.plans.Lineage.memo(kmCache, s, (d, k, kind))(build)
+    graft.plans.Lineage.memo("km", s, (d, k, kind))(build)
 
   /** Memoized trained centroid row. */
   private def kmCents(s: SparkSession, d: String,
@@ -781,24 +767,19 @@ object SimilarityQueries {
     * between flushes), partials merge as BigInt — order-free integer
     * addition, bit-exact like the explode+decimal-agg form it
     * replaced, but the corpus never explodes d² rows per vector onto
-    * the wire (that form shuffled n·4096 rows). */
-  private val pcaCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      (DataFrame, Array[Array[Double]], Array[Double])]
-
-  /** Memoized per (session, dir) — q_embed_pca and q_embed_pca2 share
-    * ONE moment pass and one checkpointed frame (the kmeans-model
-    * pattern); the checkpoint is pinned so harness scratch-freeing
-    * between queries cannot poison the second consumer's re-read. */
+    * the wire (that form shuffled n·4096 rows).
+    *
+    * q_embed_pca and q_embed_pca2 share ONE moment pass and one
+    * checkpointed frame (the kmeans-model pattern); the checkpoint is
+    * pinned so harness scratch-freeing between queries cannot poison
+    * the second consumer's re-read. */
   private def pcaSetup(s: SparkSession, d: String)
-      : (DataFrame, Array[Array[Double]], Array[Double]) = {
-    graft.plans.Lineage.sweepStoppedKeys(pcaCache)(_._1.sparkContext)
-    graft.plans.Lineage.once(pcaCache, (s, d)) {
+      : (DataFrame, Array[Array[Double]], Array[Double]) =
+    graft.plans.Lineage.perSession("pcaSetup", s, d) {
       val r = pcaSetupBuild(s, d)
       graft.plans.Lineage.pin(r._1)
       r
     }
-  }
 
   private def pcaSetupBuild(s: SparkSession, d: String)
       : (DataFrame, Array[Array[Double]], Array[Double]) = {
@@ -1202,12 +1183,12 @@ object SimilarityQueries {
     // Scale shape: the pair graph is cluster-equi-join-bounded, the CC
     // loop is O(log diameter) rounds, and near-dup components have tiny
     // diameters — same argument as the LSH cluster path.
-    // assignment MEMOIZED per (session, dir) like its relational twin
+    // assignment MEMOIZED like its relational twin
     // q_dedup_cluster (lshClusters): the pairs and the k-means model
     // were already build-once artifacts, but the components closure
     // re-ran per invocation — a bench-visible 2 s of pure re-derivation
     "q_dedup_semantic_cluster" -> ((s, d) =>
-      graft.plans.Lineage.memo(semClusterCache, s, d) {
+      graft.plans.Lineage.memo("semCluster", s, d) {
         val emb = Tables.embeddings(s, d)
         val pairs = semanticPairs(emb, kmAssignments(s, d))
         val comps = graft.graph.Components.components(
@@ -1701,7 +1682,7 @@ object SimilarityQueries {
     // vectors by exact cosine (the FAISS refine step). At 100 TB the
     // codes table is 8 B/vector vs 256 B raw — the scan the exact path
     // cannot afford — and the raw-vector fetch is O(T) per query.
-    // The encoded codes table is memoized per (session, dir) — a PQ
+    // The encoded codes table is memoized — a PQ
     // index is a build-once stored artifact in any real deployment
     // (FAISS trains and encodes offline; the per-query cost is ADC
     // scoring + refine only), so repeated calls measure the
@@ -1750,14 +1731,6 @@ object SimilarityQueries {
         .orderBy(col("vec_id")))
   )
 
-  private val semClusterCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
-
-  private val annStoreCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   /** PERSISTED IVF-PQ index: the per-vector (cell, codes) rows written
     * as a table bucketed on the IVF cell — the FAISS on-disk inverted
     * list made literal in Spark storage (the q_dedup_incremental
@@ -1770,12 +1743,11 @@ object SimilarityQueries {
     * production vector-store shape (Milvus/Vespa scalar fields,
     * FAISS-with-metadata): q_ann_filtered's per-query constraint
     * evaluates inside the already-pruned scan instead of joining a
-    * corpus-sized side table at serve time. Built once per
-    * (context, dir); in production the table outlives the session. */
+    * corpus-sized side table at serve time. In production the table
+    * outlives the session. */
   private[graft] def annStore(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.register(s) // the encode/assign exprs need them
-    val name = graft.plans.Lineage.store(annStoreCache, s, d,
-        "graft_ann_store_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_ann_store_") { tbl =>
       val e = Tables.embeddings(s, d)
       pqIndex(s, d).join(ivfAssign(e, ivfCentroids(e)), "vec_id")
         .join(e.select(col("vec_id"), col("label")), "vec_id")
@@ -1787,10 +1759,6 @@ object SimilarityQueries {
     PipelineCommit.resolveOr(s, d, "ann", 1L, name)
   }
 
-  private val annCompactCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   /** The PHYSICALLY COMPACTED index: [[annStore]] rewritten without
     * the [[AnnDeleteRule]] tombstones, same 8-way cell bucketing, same
     * frozen quantizers — the surviving rows are byte-identical to
@@ -1798,13 +1766,12 @@ object SimilarityQueries {
     * quantizers and the vector alone), so the rewrite is ONE
     * index-sized filtered pass, and the serve path (q_ann_ivfpq_stored
     * strategy) regains its pre-delete shape: no per-probe tombstone
-    * filter, buckets prune identically. Built once per (context, dir);
-    * in production the compacted table atomically replaces the
-    * tombstoned one on the maintenance cadence. */
+    * filter, buckets prune identically. In production the compacted
+    * table atomically replaces the tombstoned one on the maintenance
+    * cadence. */
   private[graft] def annStoreCompacted(s: SparkSession, d: String)
       : DataFrame = {
-    val name = graft.plans.Lineage.store(annCompactCache, s, d,
-        "graft_ann_compact_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_ann_compact_") { tbl =>
       annStore(s, d).filter(!AnnDeleteRule)
         .write.bucketBy(8, "cell").sortBy("cell")
         .mode("overwrite").saveAsTable(tbl)
@@ -1817,14 +1784,9 @@ object SimilarityQueries {
     * shape, and a RANGE predicate pushes to the parquet scan, unlike a
     * modulo rule: the standing corpus's bytes are never read by the
     * query-time encode). Threshold = max_id − max_id/10, a ~10% slice
-    * at any SF; the 1-row max agg is the N-counter contract. Memoized
-    * per (session, dir). */
-  private val incVecThrCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), Long]
-
+    * at any SF; the 1-row max agg is the N-counter contract. */
   private[graft] def incVecThreshold(s: SparkSession, d: String): Long = {
-    graft.plans.Lineage.perContext(incVecThrCache, s, d) {
+    graft.plans.Lineage.perContext("incVecThr", s, d) {
       val hi = Tables.embeddings(s, d).agg(max("vec_id")).head.getLong(0)
       hi - hi / 10
     }
@@ -1947,17 +1909,13 @@ object SimilarityQueries {
     * gate pins is the decision LAW, not the constant. */
   private[graft] val MaintainShiftBound = 200000000000L
 
-  private val maintainDecCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), Boolean]
-
   /** The retrain-or-append decision (VERDICT r14 item 4): true iff any
     * label's standing→new centroid shift exceeds [[MaintainShiftBound]].
     * One 1-row max over the ≤|labels|-row drift frame — the N-counter
-    * contract. Memoized per (context, dir) because both the gate and
+    * contract. Memoized because both the gate and
     * the forced-branch spec entries consult it. */
   private[graft] def maintainRetrain(s: SparkSession, d: String): Boolean = {
-    graft.plans.Lineage.perContext(maintainDecCache, s, d) {
+    graft.plans.Lineage.perContext("maintainDec", s, d) {
       // a corpus where no label has BOTH standing and new vectors
       // yields an empty drift frame → NULL max; default to APPEND,
       // matching maintainOracle's COALESCE(max(..) > bound, FALSE)
@@ -1967,10 +1925,6 @@ object SimilarityQueries {
       !m.isNullAt(0) && m.getLong(0) > MaintainShiftBound
     }
   }
-
-  private val annMaintCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
 
   /** The maintenance gate's STANDING store: the bucketed index as it
     * existed before the dump arrived, quantizers trained on the
@@ -1983,8 +1937,7 @@ object SimilarityQueries {
     * retrain produce materially different indexes. */
   private[graft] def annStoreMaint(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.register(s)
-    val name = graft.plans.Lineage.store(annMaintCache, s, d,
-        "graft_ann_maint_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_ann_maint_") { tbl =>
       val e = Tables.embeddings(s, d)
       val standing = e.filter(col("vec_id") < incVecThreshold(s, d))
       pqEncode(standing, PqSeedRule, cbFrom = Some(standing))
@@ -2038,25 +1991,17 @@ object SimilarityQueries {
       quantFrom = Some(standing))
   }
 
-  private val vecMidCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), Long]
-
   /** The ADVANCED vector mark after the first of the two dump waves
     * (q_ann_append2): thr + (max − thr)/2 on vec_id — the shared
     * midpoint idiom, one 1-row agg, integer floor division. */
   private[graft] def incVecMid(s: SparkSession, d: String): Long = {
-    graft.plans.Lineage.perContext(vecMidCache, s, d) {
+    graft.plans.Lineage.perContext("vecMid", s, d) {
       val hi = Tables.embeddings(s, d)
         .agg(max("vec_id")).head.getLong(0)
       val thr = incVecThreshold(s, d)
       thr + (hi - thr) / 2
     }
   }
-
-  private val annApp2Cache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
 
   /** The ANN store after BOTH dump waves' appends (q_ann_append2):
     * the standing encoded rows written, then wave A ([thr, mid))
@@ -2069,8 +2014,7 @@ object SimilarityQueries {
   private[graft] def annStoreAppended2(s: SparkSession, d: String)
       : DataFrame = {
     graft.GraftFunctions.register(s)
-    val name = graft.plans.Lineage.store(annApp2Cache, s, d,
-        "graft_ann_app2_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_ann_app2_") { tbl =>
       val e = Tables.embeddings(s, d)
       val thr = incVecThreshold(s, d)
       val mid = incVecMid(s, d)
@@ -2092,10 +2036,6 @@ object SimilarityQueries {
     PipelineCommit.resolveOr(s, d, "ann", 2L, name)
   }
 
-  private val annStandingCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   /** The STANDING ANN store — [[annStore]] minus the new dump
     * ([[incVecThreshold]] and above): the persisted index as it
     * existed before the dump arrived. Codebook and IVF centroids are
@@ -2105,8 +2045,7 @@ object SimilarityQueries {
     * encode(full), which only holds under one codebook). */
   private[graft] def annStoreStanding(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.register(s) // the encode/assign exprs need them
-    val name = graft.plans.Lineage.store(annStandingCache, s, d,
-        "graft_ann_standing_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_ann_standing_") { tbl =>
       val e = Tables.embeddings(s, d)
       val standing = e.filter(col("vec_id") < incVecThreshold(s, d))
       pqEncode(standing, PqSeedRule, cbFrom = Some(e))
@@ -2116,10 +2055,6 @@ object SimilarityQueries {
     }
     s.table(name)
   }
-
-  private val annMixedCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
 
   /** The ANN store after a MIXED pass (q_pipeline_mixed): the
     * STANDING index rewritten without the [[AnnDeleteRule]]
@@ -2131,8 +2066,7 @@ object SimilarityQueries {
   private[graft] def annStoreMixed(s: SparkSession, d: String)
       : DataFrame = {
     graft.GraftFunctions.register(s)
-    val name = graft.plans.Lineage.store(annMixedCache, s, d,
-        "graft_ann_mx_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_ann_mx_") { tbl =>
       val e = Tables.embeddings(s, d)
       val dump = e.filter(col("vec_id") >= incVecThreshold(s, d))
       annStoreStanding(s, d).filter(!AnnDeleteRule)
@@ -2146,15 +2080,11 @@ object SimilarityQueries {
     s.table(name)
   }
 
-  private val pqIndexCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
-
-  /** The memoized PQ codes table per (session, dir) — shared by
+  /** The memoized PQ codes table — shared by
     * q_ann_pq and q_ann_ivfpq (one index, two search strategies, like
     * a stored FAISS artifact serving several probes). */
   private def pqIndex(s: SparkSession, d: String): DataFrame =
-    graft.plans.Lineage.memo(pqIndexCache, s, d)(
+    graft.plans.Lineage.memo("pqIndex", s, d)(
       pqEncode(Tables.embeddings(s, d)))
 
   /** Conditional fan-out for CPU-heavy narrow passes: a small corpus

@@ -121,11 +121,8 @@ object TextQueries {
     * kmeans/DSIR/logprob memo discipline. Production shape: the
     * trained weight vector is a 256-long artifact written once; the
     * scored corpus is one narrow pass. */
-  private val clfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   private[graft] def classifierScores(s: SparkSession, d: String): DataFrame =
-    graft.plans.Lineage.memo(clfCache, s, d)(
+    graft.plans.Lineage.memo("clf", s, d)(
       perceptronTrain(Tables.documents(s, d)))
 
   /** Training-sample membership for the PRODUCTION classifier
@@ -150,14 +147,9 @@ object TextQueries {
     * on the md5-half sample ONCE, write the ClfB (b, w) rows as a
     * catalog table — the production artifact a nightly curation job
     * reads instead of retraining. */
-  private val clfWCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   private[graft] def clfWeightsStore(s: SparkSession, d: String)
       : DataFrame = {
-    val name = graft.plans.Lineage.store(clfWCache, s, d,
-        "graft_clf_w_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_clf_w_") { tbl =>
       val w = perceptronWeights(
         clfFeatures(Tables.documents(s, d).filter(ClfSampleRule)))
       import s.implicits._
@@ -174,12 +166,9 @@ object TextQueries {
     * — the production serve path (one narrow pass; the ClfB-row
     * weight read is the bounded N-counter contract). Memoized like
     * [[classifierScores]]; the curation gate reads THIS frame. */
-  private val clfStoredCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   private[graft] def storedClassifierScores(s: SparkSession,
       d: String): DataFrame =
-    graft.plans.Lineage.memo(clfStoredCache, s, d) {
+    graft.plans.Lineage.memo("clfStored", s, d) {
       val w = Array.fill(ClfB)(0L)
       clfWeightsStore(s, d).collect()
         .foreach(r => w(r.getLong(0).toInt) = r.getLong(1))
@@ -245,46 +234,29 @@ object TextQueries {
         coalesce(col("pred_dist"), lit(0L)).as("pred_dist"))
   }
 
-  private val qcCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
-  private val decontCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
-
-  /** q_text_decontaminate_bloom's engine body, MEMOIZED per (session,
-    * dir) — shared with q_text_curate (the recipe consumes the
+  /** q_text_decontaminate_bloom's engine body, MEMOIZED — shared with
+    * q_text_curate (the recipe consumes the
     * verified overlap flags as a ride-along column; one window pass +
     * bloom build serves both). (doc_id, n_windows, n_overlap,
     * contaminated) over the non-src0 corpus. Physical-plan and
     * exactness notes live on the gate entry. */
-  private def decontBloom(s: SparkSession, d: String): DataFrame = {
-    graft.plans.Lineage.sweepStoppedKeys(decontCache)(_._1.sparkContext)
-    graft.plans.Lineage.once(decontCache, (s, d)) {
+  private def decontBloom(s: SparkSession, d: String): DataFrame =
+    graft.plans.Lineage.perSession("decontBloom", s, d) {
       val fin = decontBloomBuild(s, d)
       graft.plans.Lineage.pin(fin)
       fin
     }
-  }
 
   /** STATIC eval-side artifacts for the streaming decontamination gate
     * (q_stream_decontaminate): the deduplicated eval gram set
     * (checkpointed — the static side of a stream-static join re-plans
     * per micro-batch, a checkpoint makes that re-plan a scan of ~|eval|
-    * rows) and the eval bloom bytes. Built once per (session, dir) —
-    * the signature-store pattern; in production these are release
+    * rows) and the eval bloom bytes. Built once — the signature-store
+    * pattern; in production these are release
     * artifacts, not per-ingest work. */
-  private val decontEvalCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), (DataFrame, Array[Byte])]
-
   private def decontEvalArtifacts(s: SparkSession,
-      d: String): (DataFrame, Array[Byte]) = {
-    // a stopped session's artifacts can never serve again — evict, so
-    // the cache can't pin dead sessions, their checkpoint or the bloom
-    // bytes (the ADVICE r8 strong-key lesson)
-    graft.plans.Lineage.sweepStoppedKeys(decontEvalCache)(_._1.sparkContext)
-    graft.plans.Lineage.once(decontEvalCache, (s, d)) {
+      d: String): (DataFrame, Array[Byte]) =
+    graft.plans.Lineage.perSession("decontEvalArtifacts", s, d) {
       graft.GraftFunctions.register(s)
       // persisted: the window pass feeds TWO consumers (the distinct
       // gram set and the bloom build) — the decontBloomBuild pattern
@@ -307,7 +279,6 @@ object TextQueries {
       bloom.writeTo(bos)
       (evalGrams, bos.toByteArray)
     }
-  }
 
   private def decontBloomBuild(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.register(s)
@@ -359,10 +330,10 @@ object TextQueries {
   /** The q_text_quality_cut engine body, shared with q_text_curate:
     * (doc_id, source, quality, kept) with the quantized-score p75
     * per-source cut (see the gate comment for the float contract).
-    * MEMOIZED per (session, dir) — both consumers read one scored
+    * MEMOIZED — both consumers read one scored
     * checkpoint and one percentile run (the lshClusters pattern). */
   private def qualityCutFrame(s: SparkSession, d: String): DataFrame =
-    graft.plans.Lineage.memo(qcCache, s, d)(qualityCutBuild(s, d))
+    graft.plans.Lineage.memo("qc", s, d)(qualityCutBuild(s, d))
 
   private def qualityCutBuild(s: SparkSession, d: String): DataFrame = {
     // gopher_keep rides the SAME corpus scan as the quality score
@@ -498,10 +469,6 @@ object TextQueries {
     * first percentile shuffle. */
   private[graft] val QcBins = 128
 
-  private val standingCutCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
-
   /** The POOLED STANDING quality cut — the frozen admission threshold
     * both incremental-curation gates (q_text_curate_incremental,
     * q_stream_curate) admit the new dump against. Build-once memoized
@@ -519,7 +486,7 @@ object TextQueries {
     * both gates carried. */
   private[graft] def standingQualityCut(s: SparkSession,
       d: String): DataFrame =
-    graft.plans.Lineage.memo(standingCutCache, s, d) {
+    graft.plans.Lineage.memo("standingCut", s, d) {
       val newSrc = DedupQueries.IncNewSource
       val standing = Tables.documents(s, d)
         .filter(col("source") =!= newSrc)
@@ -663,19 +630,15 @@ object TextQueries {
 
   /** Per-doc unigram-LM mean log-probability — the corpus-as-LM score
     * shared by q_text_logprob (raw scores) and q_text_ppl_bucket
-    * (CCNet tertile buckets). Memoized per (session, dir) with the
-    * pinned persist the k-means/DSIR families use — the score table is
-    * a build-once artifact both gates consume. Unordered; callers add
+    * (CCNet tertile buckets). Memoized with the pinned persist the
+    * k-means/DSIR families use — the score table is a build-once
+    * artifact both gates consume. Unordered; callers add
     * their ORDER BY. Scale/float notes live on the q_text_logprob
     * entry. */
   /** private[graft]: PlanShapeSpec's AQE pin re-persists this memo
     * after deliberately uncaching it to measure the real build plan. */
   private[graft] def logprobPerDoc(s: SparkSession, d: String): DataFrame =
-    graft.plans.Lineage.memo(logprobCache, s, d)(logprobPerDocBuild(s, d))
-
-  private val logprobCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
+    graft.plans.Lineage.memo("logprob", s, d)(logprobPerDocBuild(s, d))
 
   private[graft] def logprobPerDocBuild(s: SparkSession, d: String): DataFrame = {
     val perDoc = Tables.documents(s, d)
@@ -848,14 +811,6 @@ object TextQueries {
       onSyms: (Int, DataFrame) => Unit = (_, _) => ()): DataFrame =
     bpeTrainLoop(wordSymVocab(docs), k, BpeBatchM, onSyms)
 
-  private val trainedRulesCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), IndexedSeq[(String, String)]]
-
-  private val rulesStoreCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
-
   /** The engine-trained K = [[BpeTrainK]] merge table as a PERSISTED
     * catalog table (VERDICT r16 item 4 — GPT-2's merges.txt as a
     * warehouse artifact): trained once per corpus, written once, and
@@ -865,8 +820,7 @@ object TextQueries {
     * pins stored ≡ freshly-trained rule-for-rule. */
   private[graft] def trainedRulesStore(s: SparkSession,
       d: String): DataFrame = {
-    val name = graft.plans.Lineage.store(rulesStoreCache, s, d,
-        "graft_bpe_rules_") { tbl =>
+    val name = graft.plans.Lineage.store(s, d, "graft_bpe_rules_") { tbl =>
       bpeTrain(Tables.documents(s, d), BpeTrainK)
         .write.mode("overwrite").saveAsTable(tbl)
     }
@@ -879,14 +833,12 @@ object TextQueries {
     * tokenizer once, persists it, and every downstream stage applies
     * the loaded table. Consumed by the train→apply roundtrip gate. */
   private[graft] def trainedRules(s: SparkSession,
-      d: String): IndexedSeq[(String, String)] = {
-    graft.plans.Lineage.sweepStoppedKeys(trainedRulesCache)(_._1.sparkContext)
-    graft.plans.Lineage.once(trainedRulesCache, (s, d)) {
+      d: String): IndexedSeq[(String, String)] =
+    graft.plans.Lineage.perSession("trainedRules", s, d) {
       trainedRulesStore(s, d).collect()
         .sortBy(_.getInt(0))
         .map(r => (r.getString(1), r.getString(2))).toIndexedSeq
     }
-  }
 
   /** The word-frequency symbol vocabulary (Sennrich'16's training
     * input): distinct words with counts, each word exploded to
@@ -1071,10 +1023,6 @@ object TextQueries {
     * [[bpeTrainLoop]]). */
   private val UniverseCap = 65536
 
-  private val bpeAlphabetCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, Int), Array[String]]
-
   private[graft] def bpeTrainLoop(vocab0: DataFrame, k: Int,
       batchM: Int,
       onSyms: (Int, DataFrame) => Unit = (_, _) => ()): DataFrame = {
@@ -1118,7 +1066,7 @@ object TextQueries {
     // overflows the cap falls back to batchM = 1, where the selection
     // degenerates to the literal argmax and the universe is never
     // needed for soundness.
-    val alphabet = graft.plans.Lineage.perContext(bpeAlphabetCache, s,
+    val alphabet = graft.plans.Lineage.perContext("bpeAlphabet", s,
         vocab0.queryExecution.analyzed.semanticHash()) {
       vocab.select(explode(split(col("sym"), SEP)).as("u"))
         .filter(col("u") =!= "").distinct()
@@ -3012,18 +2960,14 @@ object TextQueries {
 
   /** DSIR log-importance weights per doc (doc_id, n_feat, dsir_logw) —
     * shared by q_text_dsir (the weights) and q_text_dsir_sample (the
-    * Gumbel-top-k draw). Memoized per (session, dir) with the pinned
-    * persist the k-means/triangle families use: the weight table is a
-    * build-once selection artifact in any real pipeline, so both gates
+    * Gumbel-top-k draw). Memoized with the pinned persist the
+    * k-means/triangle families use: the weight table is a build-once
+    * selection artifact in any real pipeline, so both gates
     * (and repeated bench reps) measure one scoring run plus their own
     * pass. Unordered; callers add their ORDER BY/top-k. Scale/float
     * notes live on the q_text_dsir entry. */
   private def dsirLogw(s: SparkSession, d: String): DataFrame =
-    graft.plans.Lineage.memo(dsirCache, s, d)(dsirLogwBuild(s, d))
-
-  private val dsirCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
+    graft.plans.Lineage.memo("dsir", s, d)(dsirLogwBuild(s, d))
 
   private[graft] def dsirLogwBuild(s: SparkSession, d: String): DataFrame = {
       val B = DsirBuckets

@@ -74,23 +74,16 @@ object WikiDump {
     partPages.unionAll(supplierPages).unionAll(hubPage)
   }
 
-  private val dumps =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
   /** Write the dump to a session-temp directory as rootless
     * concatenated-record text — the reference's actual on-disk input
     * shape (XmlInputFormat consumed raw `<page>…</page>` streams, no
     * root element) — once per (session, dir); returns the path. Input
     * for the [[graft.sources.XmlRecordSource]] file path of S1. */
-  def materializedDump(spark: SparkSession, dir: String): String = {
-    // stale-session sweep (ADVICE-r8 feedCache leak class); the temp
-    // dirs themselves are OS-cleaned, only the map entry pins memory
-    graft.plans.Lineage.sweepStoppedKeys(dumps)(_._1.sparkContext)
-    graft.plans.Lineage.once(dumps, (spark, dir))({
+  def materializedDump(spark: SparkSession, dir: String): String =
+    graft.plans.Lineage.perSession("wikiDump", spark, dir) {
       val out = java.nio.file.Files
         .createTempDirectory("graft-wikidump").toString
       xml(spark, dir).write.mode("overwrite").text(out)
       out
-    })
-  }
+    }
 }

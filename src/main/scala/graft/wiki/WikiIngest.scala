@@ -1,6 +1,6 @@
 package graft.wiki
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -13,12 +13,12 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * The reference DOM-parses each `<page>` blob with a fresh
   * DocumentBuilderFactory per record (PageRank.java:63-67 — a hot-path
   * anti-pattern) and XPaths `/page/title` and `/page/revision/text`
-  * (71-73). Here the whole parse is declarative: Spark 4's built-in XML
-  * source (`rowTag=page`) for files — which has the same split-boundary
-  * record-carving semantics as the reference's Mahout-style
-  * XmlInputFormat — or `from_xml` for XML carried in a column; link
-  * extraction is `regexp_extract_all` + higher-order array functions,
-  * all codegen'd, no per-record parser allocation.
+  * (71-73). Here the whole parse is declarative: the `graft-xml`
+  * source ([[graft.sources.XmlRecordSource]], the reference's
+  * XmlInputFormat split rule) carves each `<page>` record into a string
+  * column and `from_xml` parses it ([[parsePageXml]]); link extraction
+  * is `regexp_extract_all` + higher-order array functions, all
+  * codegen'd, no per-record parser allocation.
   *
   * Scale: parsing is embarrassingly parallel (one narrow stage, no
   * shuffle); the only shuffle downstream is the red-link semi-join
@@ -33,23 +33,9 @@ object WikiIngest {
     StructField("revision", StructType(Seq(StructField("text", StringType))))
   ))
 
-  /** S1: read a wiki dump from disk. One row per `<page>` element;
-    * records spanning partition-split boundaries are handled by the
-    * source exactly like the reference's XmlInputFormat (a record
-    * starting in a split is read to completion past the split end,
-    * XmlInputFormat.java:104-121). */
-  def readDump(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("xml").option("rowTag", "page")
-      .schema(PageSchema).load(path)
-      .select(col("title"), col("revision.text").as("text"))
-      // malformed/empty records surface as null titles — dropped silently,
-      // matching the column form and the reference's per-record try/catch
-      // swallow (PageRank.java:104-110)
-      .filter(col("title").isNotNull)
-
-  /** S1 (column form): parse `<page>` XML blobs already sitting in a
-    * string column — the path used when XML arrives via another table
-    * or a stream rather than raw files. */
+  /** S1: parse `<page>` XML blobs sitting in a string column — the
+    * `graft-xml` source's records, or XML that arrives via another
+    * table or a stream. */
   def parsePageXml(df: DataFrame, xmlCol: String): DataFrame =
     df.select(from_xml(col(xmlCol), PageSchema).as("p"))
       .select(col("p.title").as("title"), col("p.revision.text").as("text"))

@@ -1,10 +1,11 @@
 package graft.wiki
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 import graft.graph.{LinkGraph, PageRank}
+import graft.graph.GraphCatalog.LinkGraphData
 
 /** The end-to-end CLI driver — the Spark-native equivalent of the
   * reference jar's sole entry point, `PageRank.main(input, output)`
@@ -43,19 +44,7 @@ object WikiPipeline {
     // S1: split-aware tag-delimited record carving — reads the raw
     // rootless `<page>…</page>` stream shape the reference consumed.
     val raw = spark.read.format("graft-xml").option("path", input).load()
-    val parsed = WikiIngest.parsePageXml(raw, "xml")
-      .persist(StorageLevel.MEMORY_AND_DISK) // feeds vertex set AND edges
-    val pages = WikiIngest.pageTitles(parsed)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = LinkGraph.removeRedLinks(
-        WikiIngest.extractLinks(parsed)
-          .select(col("page").as("src"), col("link").as("dst")),
-        pages)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edges.count() // materialize both consumers, then drop the parse pin
-    parsed.unpersist(blocking = false)
-
-    val n = LinkGraph.countPages(pages) // job3 — the NVALUE counter
+    val LinkGraphData(pages, edges, n) = linkGraph(raw)
     // job3's on-disk artifact: the reference's NReducer writes the line
     // `N =\t<N>` (PageRank.java:235 — the driver reads the counter, but
     // the file is part of the output contract a user sees)
@@ -78,6 +67,27 @@ object WikiPipeline {
     pages.unpersist(blocking = false)
     edges.unpersist(blocking = false)
     n
+  }
+
+  /** Jobs 1 and 3: raw `<page>` records (an `xml` column) → the
+    * persisted vertex set and red-link-free edge set, plus N. The
+    * parsed (title, text) pages feed BOTH of them, so the parse is
+    * pinned until both are materialized, then dropped — it runs once
+    * and only the small derived state stays resident. */
+  def linkGraph(raw: DataFrame): LinkGraphData = {
+    val parsed = WikiIngest.parsePageXml(raw, "xml")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val pages = WikiIngest.pageTitles(parsed)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = LinkGraph.removeRedLinks(
+        WikiIngest.extractLinks(parsed)
+          .select(col("page").as("src"), col("link").as("dst")),
+        pages)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    edges.count() // materialize both consumers, then drop the parse pin
+    parsed.unpersist(blocking = false)
+    val n = LinkGraph.countPages(pages) // job3 — the NVALUE counter
+    LinkGraphData(pages, edges, n)
   }
 
   def main(args: Array[String]): Unit = {

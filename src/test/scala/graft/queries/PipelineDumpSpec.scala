@@ -126,7 +126,7 @@ class PipelineDumpSpec extends SparkSpec {
       "second full build of any constituent") {
     // the gate re-executes constituent serves to COUNT them; that is
     // a cache hit only because every family memoizes its heavy build
-    // (stores are Lineage.once catalog tables, rank vectors and pair
+    // (stores are build-once catalog tables, rank vectors and pair
     // lists are session memos). If any family silently un-memoizes,
     // the pipeline gate degrades to a full recompute — this pin makes
     // that a test failure instead of a silent cost cliff. A COLD pass

@@ -83,11 +83,9 @@ class ArtifactStoreSpec extends SparkSpec {
     fs.create(junk).close()
     assert(!spark.catalog.tableExists(tbl) && fs.exists(junk))
 
-    val cache = scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.SparkContext, String), String]
     var writes = 0
     def build(s: org.apache.spark.sql.SparkSession): String =
-      graft.plans.Lineage.store(cache, s, dir, prefix) { t =>
+      graft.plans.Lineage.store(s, dir, prefix) { t =>
         writes += 1
         graft.Tables.documents(s, dir).select("doc_id")
           .write.mode("overwrite").saveAsTable(t)
@@ -106,5 +104,77 @@ class ArtifactStoreSpec extends SparkSpec {
     assert(build(spark.newSession()) == tbl && writes == 1,
       "a sibling session of the same context re-ran the write")
     spark.sql(s"DROP TABLE $tbl")
+  }
+
+  test("registry scopes: perSession and memo rebuild for a new session, " +
+      "perContext and store do not") {
+    import graft.plans.Lineage
+    val builds = scala.collection.mutable.Map.empty[String, Int]
+      .withDefaultValue(0)
+    def count(n: String): Unit = builds(n) += 1
+    def all(s: org.apache.spark.sql.SparkSession): Unit = {
+      Lineage.perSession("spec_scope_session", s, dir) {
+        count("perSession"); 1
+      }
+      Lineage.perContext("spec_scope_context", s, dir) {
+        count("perContext"); 1
+      }
+      Lineage.memo("spec_scope_memo", s, dir) {
+        count("memo"); graft.Tables.documents(s, dir).select("doc_id")
+      }
+      Lineage.store(s, dir, "graft_spec_scope_") { t =>
+        count("store")
+        graft.Tables.documents(s, dir).select("doc_id").limit(1)
+          .write.mode("overwrite").saveAsTable(t)
+      }
+    }
+    all(spark)
+    all(spark)
+    all(spark.newSession())
+    assert(builds == Map("perSession" -> 2, "memo" -> 2,
+      "perContext" -> 1, "store" -> 1), builds)
+    spark.sql(s"DROP TABLE ${Lineage.storeTable("graft_spec_scope_", dir)}")
+  }
+
+  test("registry names: same key under two names gives two values; a " +
+      "nested build completes and each name builds once") {
+    import graft.plans.Lineage
+    var outer, inner = 0
+    val a = Lineage.perSession("spec_names_a", spark, dir) { "a" }
+    val b = Lineage.perSession("spec_names_b", spark, dir) { "b" }
+    assert(a == "a" && b == "b")
+    def innerCall(): Int =
+      Lineage.perContext("spec_nested_inner", spark, dir) { inner += 1; 7 }
+    def outerCall(): Int =
+      Lineage.perSession("spec_nested_outer", spark, dir) {
+        outer += 1; innerCall() + 1
+      }
+    assert(outerCall() == 8 && outerCall() == 8 && innerCall() == 7)
+    assert(outer == 1 && inner == 1)
+  }
+
+  test("registry first call: 8 threads racing one name build it once") {
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val builds = new AtomicInteger()
+    val start = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(8)
+    val results = (1 to 8).map { _ =>
+      pool.submit(new java.util.concurrent.Callable[Int] {
+        def call(): Int = {
+          start.await()
+          graft.plans.Lineage.perSession("spec_race", spark, dir) {
+            builds.incrementAndGet()
+            Thread.sleep(200)
+            42
+          }
+        }
+      })
+    }
+    start.countDown()
+    val got = results.map(_.get(60, TimeUnit.SECONDS))
+    pool.shutdown()
+    assert(got.forall(_ == 42))
+    assert(builds.get == 1, s"${builds.get} builds")
   }
 }

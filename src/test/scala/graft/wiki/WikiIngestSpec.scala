@@ -99,25 +99,4 @@ class WikiIngestSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
     cases.foreach { case (l, expect) => assert(got(l) == expect, s"link=$l") }
   }
-
-  test("readDump: the file XML source carves <page> records like the column form") {
-    // write the sf0.001 synthesized dump as XML files shaped like a real
-    // dump (a root element wrapping many <page> records — the built-in
-    // XML source requires well-formed files; rowTag carving then scans
-    // records across splits), several part files
-    val s = spark
-    import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("wikidump").toString
-    val xml = WikiDump.xml(spark, "/root/testdata/sf0.001")
-    val wrapped = xml.select("xml").as[String].rdd.repartition(4)
-      .mapPartitions(it => Iterator("<pages>") ++ it ++ Iterator("</pages>"))
-    spark.createDataset(wrapped).write.mode("overwrite").text(dir)
-
-    val viaFile = WikiIngest.readDump(spark, dir)
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val viaColumn = WikiIngest.parsePageXml(xml, "xml")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(viaFile == viaColumn)
-    assert(viaFile.nonEmpty)
-  }
 }
