@@ -67,17 +67,15 @@ object Bfs {
     val (und, ownPin) = Components.undirectedView(edges)
 
     // frontier and visited are both bounded by |V| (16 B/row-ish), so
-    // below the deployment-tunable vertex gate they broadcast and each
-    // round's only shuffle is the candidate distinct — the edge table
-    // never crosses the wire (the Components vhint pattern). Above the
-    // gate both joins fall back to shuffles on `page`.
+    // below the LoopExec size gate they broadcast and each round's only
+    // shuffle is the candidate distinct — the edge table never crosses
+    // the wire (the Components vhint pattern). Above the gate both
+    // joins fall back to shuffles on `page`.
     val nv = knownVertexCount.getOrElse(pages.count())
-    val hintSmall = nv <= PageRank.broadcastVertexLimit(spark)
-    def vhint(df: DataFrame): DataFrame = if (hintSmall) broadcast(df) else df
 
     // small-state loop scope (AQE off + |V|-derived shuffle partitions
-    // for the per-level actions); no-op above the threshold — LoopExec
-    graft.plans.LoopExec.withSmallLoopExec(spark, nv) {
+    // for the per-level actions); no-op above the gate — LoopExec
+    graft.plans.LoopExec.withSmallLoopExec(spark, nv) { vhint =>
 
     val frontierAcc = spark.sparkContext.longAccumulator("graft.bfs.frontier")
     val bump = udf { () => frontierAcc.add(1L); true }.asNondeterministic()

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * broadcast-vs-shuffle join variants are all within noise of each other
   * — the round-3 "broadcast materialization cascade" hypothesis did not
   * reproduce. Lineage truncated per round. The label vector is broadcast
-  * only while |V| ≤ [[PageRank.BroadcastVertexLimit]] (same gate as the
+  * only below the [[graft.plans.LoopExec]] size gate (same gate as the
   * PageRank rank vector — a full-vertex broadcast would OOM at 100 TB,
   * ADVICE r2 item 4); above it the join shuffles and AQE handles skew.
   */
@@ -56,12 +56,11 @@ object Components {
 
     // callers that already hold |V| (GraphCatalog) skip the count job
     val nv = knownVertexCount.getOrElse(pages.count())
-    val hintSmall = nv <= PageRank.broadcastVertexLimit(pages.sparkSession)
-    def vhint(df: DataFrame): DataFrame = if (hintSmall) broadcast(df) else df
 
     // small-state loop scope (AQE off + |V|-derived shuffle partitions
-    // for the loop's actions); no-op above the threshold — see LoopExec
-    graft.plans.LoopExec.withSmallLoopExec(pages.sparkSession, nv) {
+    // for the loop's actions + the broadcast label-vector hint); no-op
+    // above the gate — see LoopExec
+    graft.plans.LoopExec.withSmallLoopExec(pages.sparkSession, nv) { vhint =>
 
     var labels = pages.select(col("page"), col("page").as("lbl"))
     val rounds_ = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -121,11 +120,9 @@ object Components {
     val (undirected, ownPin) = undirectedView(edges)
 
     val nv = knownVertexCount.getOrElse(pages.count())
-    val hintSmall = nv <= PageRank.broadcastVertexLimit(pages.sparkSession)
-    def vhint(df: DataFrame): DataFrame = if (hintSmall) broadcast(df) else df
 
     // small-state loop scope (see labelPropagation / LoopExec)
-    graft.plans.LoopExec.withSmallLoopExec(pages.sparkSession, nv) {
+    graft.plans.LoopExec.withSmallLoopExec(pages.sparkSession, nv) { vhint =>
 
     val changedAcc = pages.sparkSession.sparkContext
       .longAccumulator("graft.components.changed")
@@ -199,12 +196,9 @@ object Components {
     * it, against GraphX, and against the recursive-closure oracle.
     */
   def componentsStarContraction(pages: DataFrame, edges: DataFrame,
-                                maxRounds: Int = 50,
-                                knownVertexCount: Option[Long] = None)
-      : DataFrame = {
+                                maxRounds: Int = 50): DataFrame = {
     // EXCLUDED from the small-state loop scope (round 21, VERDICT r20
-    // item 4 — `knownVertexCount` is accepted for signature stability
-    // but no longer consulted): unlike the lazy one-action loops, every
+    // item 4): unlike the lazy one-action loops, every
     // star-contraction round is its own EAGER checkpoint over an
     // edge-scale frame, and AQE's runtime coalescing is exactly what
     // keeps those per-round shuffles right-sized. Measured in-JVM
@@ -214,7 +208,6 @@ object Components {
     // alone at session partitioning — the r20 driver's 2.18 → 2.78
     // regression read the same direction, so the scope is a pure loss
     // here in every variant.
-    locally(knownVertexCount)
     // dedup = false skips the distinct between the two half-rounds: the
     // duplicate edges a non-deduped large-star emits are harmless to
     // small-star's min-agg and cheaper than an extra shuffle; one

@@ -52,23 +52,23 @@ object KCore {
     // of reducers with AQE's skew handling also off. One count over
     // the undirected view bounds it — paid only when the caller opted
     // into the scope, and it fills the view's own persist (work round
-    // 1 would do anyway). The count runs under the AQE-off HALF of the
-    // scope (derivePartitions = false): the |V| gate still bounds the
-    // re-planning cut, but the |E|-scale derivation/distinct keeps the
-    // session partitioning — the scale-safe shape.
+    // 1 would do anyway). The count runs under the |V|-gated scope: the
+    // view is a bare union, so its count's only exchange is the
+    // single-partition final aggregate, which the derived shuffle width
+    // cannot touch.
     val scopeRows = knownVertexCount.map { nv =>
       math.max(nv, graft.plans.LoopExec.withSmallLoopExec(
-        edges.sparkSession, nv, derivePartitions = false)(und.count()))
+        edges.sparkSession, nv)(_ => und.count()))
     }.getOrElse(-1L)
     // the count above materialized the view's persist under the SESSION
     // partitioning (32 blocks of KBs at sf0.1), so without this every
     // round's map side schedules that many near-empty tasks — narrow
     // coalesce to the same size-derived width the scope's shuffles use
-    // (the r20 BPE-vocab lesson; no-op above the threshold / when the
-    // scope is off, and degree counts/semi-joins are set-algebra, so
+    // (the r20 BPE-vocab lesson; no-op above the gate / when |V| is
+    // unknown, and degree counts/semi-joins are set-algebra, so
     // layout cannot change them)
     val undLoop = graft.plans.LoopExec.coalesceSmall(und, scopeRows)
-    graft.plans.LoopExec.withSmallLoopExec(edges.sparkSession, scopeRows) {
+    graft.plans.LoopExec.withSmallLoopExec(edges.sparkSession, scopeRows) { _ =>
 
     // round-0 vertex set: every edge endpoint (an isolated vertex has
     // degree 0 < k and would be peeled in round 1 anyway)

@@ -48,9 +48,9 @@ object Lpa {
       knownVertexCount: Option[Long] = None): DataFrame = {
     val (und, ownPin) = Components.undirectedView(edges)
     // small-state loop scope, |V|-gated (counted when unknown — the
-    // labelPropagation contract); no-op above the threshold — LoopExec
+    // labelPropagation contract); no-op above the gate — LoopExec
     val nv = knownVertexCount.getOrElse(pages.count())
-    graft.plans.LoopExec.withSmallLoopExec(pages.sparkSession, nv) {
+    graft.plans.LoopExec.withSmallLoopExec(pages.sparkSession, nv) { _ =>
     var labels = pages.select(col("page"), col("page").as("lbl"))
     val scratch = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (r <- 1 to rounds) {

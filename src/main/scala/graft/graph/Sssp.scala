@@ -57,7 +57,7 @@ object Sssp {
       knownVertexCount: Option[Long] = None): DataFrame = {
     val spark = edges.sparkSession
     graft.plans.LoopExec.withSmallLoopExec(spark,
-        knownVertexCount.getOrElse(-1L)) {
+        knownVertexCount.getOrElse(-1L)) { _ =>
     var dist = spark.range(1)
       .select(lit(source).as("page"), lit(0L).as("dist"))
     var frontier = dist

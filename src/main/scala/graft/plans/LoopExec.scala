@@ -1,18 +1,25 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import scala.util.DynamicVariable
 
-/** Scale-adaptive execution scope for the iterative graph/training
-  * loops (round-20 optimization — guide §1.2 "the distributed
-  * algorithm", §2.2/§2.4 partitioning).
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.broadcast
+
+/** The one size gate of the iterative graph/training loops (PageRank,
+  * HITS, components, BFS, SSSP, LPA, k-core, the BPE merge trainer):
+  * is the loop state small? Below [[SmallRows]] the loop gets both
+  * halves of the small-state regime — the per-round joins broadcast its
+  * state vector, and its actions run under the execution scope below;
+  * above it the joins shuffle and the session's AQE (skew-join
+  * splitting, runtime coalescing) and partitioning apply untouched —
+  * the reducer-size vs replication trade, decided once here.
   *
-  * The loops (PageRank, HITS, components, BFS, SSSP, LPA, k-core, the
-  * BPE merge trainer) run 8–50 micro-stages per invocation. When the
-  * loop state is broadcast-small — the same regime in which the loops
-  * already broadcast their vertex vector (`hintSmall`) — two fixed
-  * session-level costs dominate their wall time, measured at
-  * sf0.1/local[32]/shuffle=32 (tools/probe_loop_ab*.scala, in-JVM
-  * alternating A/B so host drift cancels):
+  * Why the scope (round-20 optimization — guide §1.2 "the distributed
+  * algorithm", §2.2/§2.4 partitioning): the loops run 8–50
+  * micro-stages per invocation, and when the state is broadcast-small
+  * two fixed session-level costs dominate their wall time, measured at
+  * sf0.1/local[32]/shuffle=32 (in-JVM alternating A/B so host drift
+  * cancels):
   *
   *   1. **AQE per-stage materialization.** Adaptive execution turns
   *      every exchange into its own sub-job with a scheduler barrier
@@ -30,20 +37,11 @@ import org.apache.spark.sql.SparkSession
   *      (≈64 MB targets at ~32 B/row), not from the local core count:
   *      a bigger dataset derives more partitions on the same config.
   *
-  *   Probe medians (local[32], anchor shuffle=32; the PageRank rows
-  *   take component 1 only — see `derivePartitions` below):
+  *   Probe medians (local[32], anchor shuffle=32):
   *     q_pagerank_cold          6.76 s → 3.64 s (AQE off alone)
   *     q_pagerank_incremental   3.33 s → 2.87 s (AQE off alone)
   *     q_graph_components       2.51 s → 1.26 s (full scope)
   *     q_text_bpe_train         5.91 s → 4.87 s (full scope)
-  *
-  * Above [[DefaultSmallRows]] the scope is a no-op: the 100 TB regime
-  * keeps the session's AQE (skew-join splitting, runtime coalescing)
-  * and partitioning untouched, exactly as before this round. The
-  * threshold and the bytes-per-partition target are runtime-settable
-  * conf (below) so a deployment can retune or disable without a
-  * rebuild — the [[graft.graph.PageRank.broadcastVertexLimit]]
-  * pattern.
   *
   * Concurrency: the scope save/sets/restores session conf around the
   * loop's actions, so it assumes no concurrent PLANNING on the same
@@ -53,34 +51,32 @@ import org.apache.spark.sql.SparkSession
   */
 object LoopExec {
 
-  /** Kill switch: `false` disables the scope entirely. */
-  val EnabledKey = "spark.graft.loopExec.enabled"
-
-  /** Loop-state row count at/below which the scope engages. Default
-    * matches [[graft.graph.PageRank.BroadcastVertexLimit]] — the scope
-    * engages exactly in the regime where the loops broadcast their
-    * vertex state and the per-round shuffle is MBs. */
-  val SmallRowsKey = "spark.graft.loopExec.smallRows"
-  val DefaultSmallRows = 10_000_000L
+  /** Loop-state row count at/below which the state is small: its
+    * vector is broadcast (≈16 B/row → ≤ ~160 MB, well inside executor
+    * memory on any serious cluster) and the per-round shuffle is MBs. */
+  val SmallRows = 10_000_000L
 
   /** Rows per derived shuffle partition (≈64 MB at ~32 B/row — the
     * guide §2.2 100 MB–1 GB band's low end, sized for the loops' thin
     * (key, double/long) state rows). */
-  val RowsPerPartitionKey = "spark.graft.loopExec.rowsPerPartition"
-  val DefaultRowsPerPartition = 2_000_000L
+  val RowsPerPartition = 2_000_000L
 
-  private def longConf(spark: SparkSession, key: String, dflt: Long): Long =
-    spark.conf.getOption(key).flatMap(v => scala.util.Try(v.toLong).toOption)
-      .getOrElse(dflt)
+  /** The gate [[withSmallLoopExec]] and [[coalesceSmall]] read —
+    * [[SmallRows]] everywhere but in specs, which lower it to drive the
+    * above-gate path (shuffled joins, session AQE and partitioning) at
+    * test scale. */
+  private[graft] val smallRows = new DynamicVariable[Long](SmallRows)
+
+  /** Unknown size (negative) is never small. */
+  private def small(rows: Long): Boolean =
+    rows >= 0 && rows <= smallRows.value
 
   /** Shuffle partitions derived from the loop's state size: never more
     * than the session setting (the scope only ever shrinks tiny-state
     * shuffles, it cannot starve a big one — big states skip the scope
-    * entirely via [[SmallRowsKey]]). */
+    * entirely). */
   def partitionsFor(spark: SparkSession, rows: Long): Int = {
-    val perPart = math.max(1L,
-      longConf(spark, RowsPerPartitionKey, DefaultRowsPerPartition))
-    val derived = ((rows + perPart - 1) / perPart).max(1L)
+    val derived = ((rows + RowsPerPartition - 1) / RowsPerPartition).max(1L)
     val session = scala.util.Try(
       spark.conf.get("spark.sql.shuffle.partitions").trim.toInt)
       .getOrElse(spark.sparkContext.defaultParallelism)
@@ -90,28 +86,21 @@ object LoopExec {
   /** Narrow (shuffle-free) coalesce of a small loop-state frame to the
     * same size-derived partition count the scope's shuffles use — for
     * frames materialized BEFORE the scope engaged (e.g. a checkpoint
-    * whose row count the scope's gate needed), whose session-width
-    * block layout would otherwise put `session-partitions` map tasks
-    * under every loop job. No-op above the threshold / when disabled /
-    * when the frame already has no more partitions than derived.
-    * ONLY for order-insensitive loop state (the `derivePartitions`
-    * contract — coalesce reorders rows within partitions). */
-  def coalesceSmall(df: org.apache.spark.sql.DataFrame, rows: Long)
-      : org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession
-    val enabled = spark.conf.getOption(EnabledKey).forall(_ != "false")
-    val small = rows >= 0 &&
-      rows <= longConf(spark, SmallRowsKey, DefaultSmallRows)
-    if (!enabled || !small) df
-    else df.coalesce(partitionsFor(spark, rows))
-  }
+    * whose row count the gate needed), whose session-width block
+    * layout would otherwise put `session-partitions` map tasks under
+    * every loop job. No-op above the gate or when the frame already
+    * has no more partitions than derived. ONLY for order-insensitive
+    * loop state — coalesce reorders rows within partitions. */
+  def coalesceSmall(df: DataFrame, rows: Long): DataFrame =
+    if (small(rows)) df.coalesce(partitionsFor(df.sparkSession, rows))
+    else df
 
   /** Run `body` (the loop, INCLUDING its materializing actions) with
-    * AQE off and — when `derivePartitions` — size-derived shuffle
-    * partitions, iff `rows` — the loop's per-round state size, e.g.
-    * the counted vertex set — is within [[SmallRowsKey]]. No-op above
-    * the threshold, when disabled, or when `rows` is unknown
-    * (negative).
+    * AQE off and size-derived shuffle partitions iff `rows` — the
+    * loop's per-round state size, e.g. the counted vertex set — is
+    * small; `body` receives the state hint: `broadcast` when small,
+    * identity otherwise. Unknown size (negative) runs `body` unscoped
+    * and unhinted.
     *
     * Double-summing loops (PageRank, HITS) take the full scope since
     * round 21 (VERDICT r20 item 1): changing the reduce partition
@@ -120,23 +109,18 @@ object LoopExec {
     * conf), so same-shape reruns over the same data stay
     * bit-identical; runs whose input CACHE state differs (the rank
     * store build persists its edge frame, a fresh run doesn't) — and
-    * scope-on vs scope-OFF — differ at the ulp level only, which the
+    * small vs above-gate — differ at the ulp level only, which the
     * 1e-6-rounded oracle gates absorb (PageRankWarmSpec pins the rank
-    * store at 1e-12 for exactly this). `derivePartitions = false`
-    * remains available for any future loop that must match a vector
-    * produced OUTSIDE the scope bit-for-bit. Loops whose aggregates
-    * are order-insensitive — integer sums/counts, MIN/MAX, label sets
-    * (components, BFS, SSSP, LPA, k-core, star contraction, BPE pair
-    * counts) — are partition-invariant by algebra. Loops whose
-    * per-round shuffles include the EDGE table (k-core, star
-    * contraction) must pass max(|V|, |E|) as `rows` (ADVICE r20): the
-    * gate and the derivation then see the real shuffle scale. */
-  def withSmallLoopExec[T](spark: SparkSession, rows: Long,
-      derivePartitions: Boolean = true)(body: => T): T = {
-    val enabled = spark.conf.getOption(EnabledKey).forall(_ != "false")
-    val small = rows >= 0 &&
-      rows <= longConf(spark, SmallRowsKey, DefaultSmallRows)
-    if (!enabled || !small) body
+    * store at 1e-12 for exactly this). Loops whose aggregates are
+    * order-insensitive — integer sums/counts, MIN/MAX, label sets
+    * (components, BFS, SSSP, LPA, k-core, BPE pair counts) — are
+    * partition-invariant by algebra. Loops whose per-round shuffles
+    * include the EDGE table (k-core) must pass max(|V|, |E|) as `rows`
+    * (ADVICE r20): the gate and the derivation then see the real
+    * shuffle scale. */
+  def withSmallLoopExec[T](spark: SparkSession, rows: Long)(
+      body: (DataFrame => DataFrame) => T): T =
+    if (!small(rows)) body(identity)
     else {
       val aqeKey = "spark.sql.adaptive.enabled"
       val spKey = "spark.sql.shuffle.partitions"
@@ -144,13 +128,11 @@ object LoopExec {
       val savedSp = spark.conf.getOption(spKey)
       try {
         spark.conf.set(aqeKey, "false")
-        if (derivePartitions)
-          spark.conf.set(spKey, partitionsFor(spark, rows).toString)
-        body
+        spark.conf.set(spKey, partitionsFor(spark, rows).toString)
+        body(broadcast(_))
       } finally {
         savedAqe.fold(spark.conf.unset(aqeKey))(spark.conf.set(aqeKey, _))
         savedSp.fold(spark.conf.unset(spKey))(spark.conf.set(spKey, _))
       }
     }
-  }
 }

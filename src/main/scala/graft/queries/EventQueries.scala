@@ -284,16 +284,15 @@ object EventQueries {
     * into `build`'s streaming transform, run to completion against a
     * memory sink, return the emitted table.
     *
-    * The stream query runs on 1 state partition by default (the
+    * The stream query runs on 1 state partition (the
     * windowed/custom state store inherits spark.sql.shuffle.partitions
-    * at query START — set around start(), restored after;
-    * `spark.graft.stream.statePartitions` overrides): a replay gate
+    * at query START — set around start(), restored after): a replay gate
     * over one bounded dump carries KB-scale state, so every state
     * partition is a per-micro-batch task for nothing — the round-21
     * A/B read the four solo gates 10-20% faster at 1 than the old 4
     * (e.g. q_stream_decontaminate 2.0 → 1.5 s median). A production
     * stream with real state volume sets its own partition count at
-    * query start; this knob shapes only the gate harness. ONE
+    * query start; this setting shapes only the gate harness. ONE
     * mid-feed barrier splits the
     * replay into two data micro-batches — the minimum that still
     * proves cross-batch state handoff (state written by batch 1 must
@@ -315,8 +314,7 @@ object EventQueries {
     val name = "graft_stream_sink_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
     val oldParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      s.conf.getOption("spark.graft.stream.statePartitions").getOrElse("1"))
+    s.conf.set("spark.sql.shuffle.partitions", "1")
     val q =
       try build(stream).writeStream.format("memory").queryName(name)
         .outputMode(outputMode).start()
@@ -462,8 +460,7 @@ object EventQueries {
     // 4 state partitions (set around the starts, restored after), one
     // mid-feed barrier → two data micro-batches per query
     val oldParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      s.conf.getOption("spark.graft.stream.statePartitions").getOrElse("4"))
+    s.conf.set("spark.sql.shuffle.partitions", "4")
     val started = try builds.map { case (gate, mode, build) =>
       val stream =
         org.apache.spark.sql.execution.streaming.runtime

@@ -671,8 +671,7 @@ object GraphQueries {
         .select(col("s1").as("src"), col("s2").as("dst"))
       val pages = graft.Tables.supplier(s, d)
         .select(col("s_suppkey").as("page"))
-      Components.componentsStarContraction(pages, e,
-          knownVertexCount = Some(supplierCount(s, d)))
+      Components.componentsStarContraction(pages, e)
         .orderBy(col("page"))
     }),
 

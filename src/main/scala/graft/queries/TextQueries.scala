@@ -634,9 +634,9 @@ object TextQueries {
     * k-means/DSIR families use — the score table is a build-once
     * artifact both gates consume. Unordered; callers add
     * their ORDER BY. Scale/float notes live on the q_text_logprob
-    * entry. */
-  /** private[graft]: PlanShapeSpec's AQE pin re-persists this memo
-    * after deliberately uncaching it to measure the real build plan. */
+    * entry. private[graft]: PlanShapeSpec's AQE pin re-persists this
+    * memo after deliberately uncaching it to measure the real build
+    * plan. */
   private[graft] def logprobPerDoc(s: SparkSession, d: String): DataFrame =
     graft.plans.Lineage.memo("logprob", s, d)(logprobPerDocBuild(s, d))
 
@@ -774,9 +774,8 @@ object TextQueries {
     * broadcast-table-sized constant (≤ ~1 MB of text here). */
   private[graft] val BpeSpSampleN = 1024
 
-  /** Chain-reset cadence for [[bpeTrain]] (default; runtime-tunable via
-    * `spark.graft.bpe.ckptEvery` — the broadcastVertexLimit pattern).
-    * Round 21 (VERDICT r20 item 5): 32 → 8. With batching capped at
+  /** Chain-reset cadence for [[bpeTrain]]. Round 21 (VERDICT r20
+    * item 5): 32 → 8. With batching capped at
     * ~1 merge/job on natural text, every pair-count job re-applies the
     * replace chain since the last checkpoint AND re-plans/compiles a
     * plan that deep — the per-job fixed cost grows linearly with the
@@ -786,8 +785,7 @@ object TextQueries {
     * (jobs 68 → 74 at 8). 8 keeps most of the win with half the extra
     * checkpoint I/O of 4 — at corpus scale each checkpoint
     * materializes the full vocab, so the cadence trades plan depth
-    * against vocab-sized writes; retune per deployment via the conf.
-    * Every this-many merges the
+    * against vocab-sized writes. Every this-many merges the
     * symbol frame is re-checkpointed, so iteration r replays at most
     * (r mod 32) stacked `replace`s instead of r — per-merge cost is
     * flat (the r13 `weak`: the unreset loop was O(K²) total replays
@@ -795,11 +793,6 @@ object TextQueries {
     * BpeSymbols' native expression exists to avoid). The lazy-loop
     * PageRank cadence pattern. */
   private val BpeCkptEvery = 8
-
-  private def bpeCkptEvery(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.bpe.ckptEvery")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .filter(_ > 0).getOrElse(BpeCkptEvery)
 
   /** q_text_bpe_train's engine body over any (text) frame — the
     * word-frequency vocabulary fed to [[bpeTrainLoop]]. Exposed for
@@ -1032,19 +1025,19 @@ object TextQueries {
     val vocab = graft.plans.Lineage.scratchCheckpoint(vocab0)
     // vocabulary row count gates the small-state loop scope (LoopExec):
     // every per-merge pair-count job shuffles ≤ |vocab| grouped rows, so
-    // below the threshold the K jobs run AQE-free on size-derived
+    // below the gate the K jobs run AQE-free on size-derived
     // partitions (each job was paying a re-planning pass + 32 sub-100ms
     // tasks for a KB-scale shuffle). One count job over the
     // just-materialized checkpoint blocks, amortized over the K merges;
-    // a production-vocab run above the threshold is untouched.
+    // a production-vocab run above the gate is untouched.
     val vocabRows = vocab.count()
-    graft.plans.LoopExec.withSmallLoopExec(s, vocabRows) {
+    graft.plans.LoopExec.withSmallLoopExec(s, vocabRows) { _ =>
     // the checkpoint above materialized under the SESSION partitioning
     // (the count precedes the scope), so without this every merge job's
     // map side re-scans that many near-empty blocks; narrow coalesce to
     // the same size-derived count the scope's shuffles use. Pair counts
     // are integer sums — partition layout cannot change them. No-op
-    // above the scope threshold (coalesceSmall).
+    // above the gate (coalesceSmall).
     val vocabLoop = graft.plans.LoopExec.coalesceSmall(vocab, vocabRows)
     val pairsOf =
       "CASE WHEN size(ss) < 3 " +
@@ -1105,7 +1098,7 @@ object TextQueries {
         syms = syms.select(
           replace(col("sym"), lit(a + SEP + b + SEP), lit(a + b + SEP))
             .as("sym"), col("c"))
-        if (r % bpeCkptEvery(s) == 0 && r < k)
+        if (r % BpeCkptEvery == 0 && r < k)
           syms = graft.plans.Lineage.scratchCheckpoint(syms)
         onSyms(r, syms)
         learned += ((r, a, b, c))

@@ -1,5 +1,8 @@
 package graft.graph
 
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
 import graft.SparkSpec
 
 /** [[KCore.peel]]: closed-form peel cascades, the fixed-round cap, and
@@ -22,6 +25,20 @@ class KCoreSpec extends SparkSpec {
     // is 3) — the cascade needs multiple rounds
     assert(peel(triTail, k = 2, rounds = 4) ==
       Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
+  }
+
+  test("the pre-count of the undirected view plans no hash exchange") {
+    // KCore.peel counts the view under the |V|-gated scope; the count's
+    // only exchange is the single-partition final aggregate, so the
+    // scope's derived shuffle width cannot change that job
+    val (und, ownPin) = Components.undirectedView(triTail.toDF("src", "dst"))
+    val plan = graft.plans.LoopExec.withSmallLoopExec(spark, 5L) { _ =>
+      und.groupBy().count().queryExecution.executedPlan
+    }
+    if (ownPin) und.unpersist()
+    val parts = plan.collect { case e: ShuffleExchangeExec =>
+      e.outputPartitioning }
+    assert(parts == Seq(SinglePartition), plan.toString)
   }
 
   test("3-core of a triangle is empty (deg 2 < 3 everywhere)") {

@@ -41,35 +41,6 @@ class PageRankSpec extends SparkSpec {
     assert(got.isEmpty)
   }
 
-  test("checkpointInterval > 1 produces bit-identical ranks") {
-    val s = spark
-    import s.implicits._
-    val (pages, edges) = (star._1.toDF("page"), star._2.toDF("src", "dst"))
-    val every = PageRank.run(pages, edges, iters = 6)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val sparse = PageRank.run(pages, edges, iters = 6, checkpointInterval = 3)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(every == sparse)
-  }
-
-  test("redistributeDangling ignores checkpointInterval: identical ranks either way") {
-    // ADVICE r5: with interval > 1 the redistribute branch used to skip
-    // truncation on off-interval iterations, doubling the logical tree
-    // per iteration; it now hard-truncates on its own 2-step cadence
-    // (lazy persist between) regardless of checkpointInterval
-    val s = spark
-    import s.implicits._
-    val pages = Seq("a", "b", "c", "d").toDF("page")
-    val edges = Seq("a" -> "b", "b" -> "c", "a" -> "c").toDF("src", "dst")
-    val base = PageRank.run(pages, edges, iters = 6,
-        redistributeDangling = true)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val skip = PageRank.run(pages, edges, iters = 6,
-        checkpointInterval = 3, redistributeDangling = true)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(base == skip)
-  }
-
   test("2-cycle is stationary at 1/2 each") {
     val got = dfRanks(cycle._1, cycle._2, 8)
     assert(math.abs(got("a") - 0.5) < 1e-12 && math.abs(got("b") - 0.5) < 1e-12)

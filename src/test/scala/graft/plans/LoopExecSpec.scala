@@ -1,26 +1,38 @@
 package graft.plans
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
 
 import graft.SparkSpec
+import graft.graph.{Bfs, Components, Hits, PageRank}
 
-/** The small-state loop-execution scope (round-20 optimization):
-  * conf hygiene, the size gate, the derived partition count, and —
-  * the part that matters — result invariance of a loop run under the
-  * scope vs with it disabled. */
+/** The one size gate of the loops (round-20 optimization): conf
+  * hygiene, the gate, the broadcast hint it hands the loop, the derived
+  * partition count, and — the part that matters — result invariance of
+  * every loop on the small-state path vs the above-gate path (shuffled
+  * joins, session AQE and partitioning), which the catalog never runs
+  * at test scale. */
 class LoopExecSpec extends SparkSpec {
 
   private val AqeKey = "spark.sql.adaptive.enabled"
   private val SpKey = "spark.sql.shuffle.partitions"
+
+  /** Runs `f` with every loop state above the gate. */
+  private def aboveGate[T](f: => T): T = LoopExec.smallRows.withValue(-1L)(f)
+
+  private def hinted(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.exists(_.isInstanceOf[ResolvedHint])
 
   test("scope sets AQE off + derived partitions inside, restores after") {
     val aqeBefore = spark.conf.getOption(AqeKey)
     val spBefore = spark.conf.get(SpKey)
     var insideAqe: String = null
     var insideSp: String = null
-    LoopExec.withSmallLoopExec(spark, 1000L) {
+    LoopExec.withSmallLoopExec(spark, 1000L) { hint =>
       insideAqe = spark.conf.get(AqeKey)
       insideSp = spark.conf.get(SpKey)
+      assert(hinted(hint(spark.range(3).toDF())),
+        "a small loop state must be broadcast")
     }
     assert(insideAqe == "false", "AQE must be off inside the scope")
     assert(insideSp == "1", "1k rows derive 1 partition")
@@ -31,7 +43,7 @@ class LoopExecSpec extends SparkSpec {
   test("conf restored even when the body throws") {
     val spBefore = spark.conf.get(SpKey)
     intercept[RuntimeException] {
-      LoopExec.withSmallLoopExec(spark, 1000L) {
+      LoopExec.withSmallLoopExec(spark, 1000L) { _ =>
         throw new RuntimeException("boom")
       }
     }
@@ -41,95 +53,73 @@ class LoopExecSpec extends SparkSpec {
   test("no-op above the smallRows threshold and when disabled") {
     val spBefore = spark.conf.get(SpKey)
     val aqeBefore = spark.conf.getOption(AqeKey)
-    LoopExec.withSmallLoopExec(spark, LoopExec.DefaultSmallRows + 1) {
-      assert(spark.conf.get(SpKey) == spBefore,
-        "a big loop state must keep the session partitioning")
-      assert(spark.conf.getOption(AqeKey) == aqeBefore,
-        "a big loop state must keep the session AQE setting")
-    }
-    // unknown size (negative) = no-op
-    LoopExec.withSmallLoopExec(spark, -1L) {
-      assert(spark.conf.get(SpKey) == spBefore)
-    }
-    // kill switch
-    spark.conf.set(LoopExec.EnabledKey, "false")
-    try LoopExec.withSmallLoopExec(spark, 1000L) {
-      assert(spark.conf.get(SpKey) == spBefore,
-        s"${LoopExec.EnabledKey}=false must disable the scope")
-    } finally spark.conf.unset(LoopExec.EnabledKey)
-  }
-
-  test("derivePartitions=false (the double-summing loops) keeps the " +
-      "session partitioning, still disables AQE") {
-    val spBefore = spark.conf.get(SpKey)
-    LoopExec.withSmallLoopExec(spark, 1000L, derivePartitions = false) {
-      assert(spark.conf.get(SpKey) == spBefore,
-        "a double-summing loop must keep the session partition count — " +
-          "reduce-count changes reorder FP accumulation (the " +
-          "PageRankWarmSpec bit pin)")
-      assert(spark.conf.get(AqeKey) == "false")
-    }
-    assert(spark.conf.get(SpKey) == spBefore)
+    def assertUnscoped(rows: Long): Unit =
+      LoopExec.withSmallLoopExec(spark, rows) { hint =>
+        assert(spark.conf.get(SpKey) == spBefore,
+          s"$rows rows must keep the session partitioning")
+        assert(spark.conf.getOption(AqeKey) == aqeBefore,
+          s"$rows rows must keep the session AQE setting")
+        val df = spark.range(3).toDF()
+        assert(hint(df) eq df, s"$rows rows must not be broadcast")
+      }
+    assertUnscoped(LoopExec.SmallRows + 1)
+    assertUnscoped(-1L) // unknown size
+    aboveGate(assertUnscoped(1000L)) // the seam the specs below use
   }
 
   test("derived partition count: size-proportional, capped at session") {
     assert(LoopExec.partitionsFor(spark, 1L) == 1)
-    assert(LoopExec.partitionsFor(spark,
-      LoopExec.DefaultRowsPerPartition + 1) == 2)
+    assert(LoopExec.partitionsFor(spark, LoopExec.RowsPerPartition + 1) == 2)
     // session cap (the spec session runs shuffle=4): a state that would
     // derive 6 partitions is clamped to the session's 4
-    assert(LoopExec.partitionsFor(spark,
-      6 * LoopExec.DefaultRowsPerPartition) == 4)
+    assert(LoopExec.partitionsFor(spark, 6 * LoopExec.RowsPerPartition) == 4)
   }
 
-  /** Same keys, every value within 1e-12 relative — the scope-on/off
-    * envelope for the double-summing loops: since round 21 the scope
-    * derives their reduce partition count too (VERDICT r20 item 1), so
-    * scope-on vs scope-OFF accumulates doubles in a different order —
-    * ulp-level wiggle, bounded far under the 1e-6 rounding every
-    * declared gate applies. (Scope-on vs scope-on stays bit-identical:
-    * the derived count is a pure function of the loop's row count,
-    * which is the PageRankWarmSpec load-≡-fresh pin's footing.) */
-  private def assertUlpClose(a: Map[String, Double],
-      b: Map[String, Double]): Unit = {
-    assert(a.keySet == b.keySet)
-    for ((k, va) <- a) {
-      val vb = b(k)
-      val scale = math.max(math.abs(va), math.abs(vb)).max(1e-300)
-      assert(math.abs(va - vb) / scale <= 1e-12,
-        s"$k: $va vs $vb diverged past the ulp envelope")
+  /** Keyed on the first column, the rest of each row as the value. */
+  private def rows(df: DataFrame): Map[String, Seq[Any]] =
+    df.collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
+
+  /** Same keys; doubles within 1e-12 relative unless `exact`, every
+    * other value equal — the small/above-gate envelope for the
+    * double-summing loops: the small path derives their reduce
+    * partition count (VERDICT r20 item 1), so the two paths accumulate
+    * doubles in a different order — ulp-level wiggle, bounded far under
+    * the 1e-6 rounding every declared gate applies. Label and distance
+    * loops are partition-invariant by algebra and must match exactly. */
+  private def assertSame(small: Map[String, Seq[Any]],
+      large: Map[String, Seq[Any]], exact: Boolean): Unit = {
+    assert(small.keySet == large.keySet)
+    for ((k, vs) <- small; (a, b) <- vs.zip(large(k))) (a, b) match {
+      case (x: Double, y: Double) if !exact =>
+        val scale = math.max(math.abs(x), math.abs(y)).max(1e-300)
+        assert(math.abs(x - y) / scale <= 1e-12,
+          s"$k: $x vs $y diverged past the ulp envelope")
+      case _ => assert(a == b, s"$k: $a vs $b")
     }
   }
 
-  test("PageRank under the scope ≡ PageRank with the scope disabled " +
-      "(1e-12-relative ranks; scope-on reruns bit-identical)") {
-    import spark.implicits._
-    val pages = Seq("a", "b", "c", "d", "e").toDF("page")
-    val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("d", "a"),
-      ("a", "c"), ("e", "b")).toDF("src", "dst")
-    def ranks(): Map[String, Double] =
-      graft.graph.PageRank.run(pages, edges, iters = 4)
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val scoped = ranks()
-    // determinism under the scope: the derived partition count is a
-    // pure function of the data, so a rerun is bit-identical — the
-    // property the rank store's load-≡-fresh pin stands on
-    assert(ranks() == scoped,
-      "scope-on reruns must be bit-identical (deterministic derivation)")
-    spark.conf.set(LoopExec.EnabledKey, "false")
-    val plain = try ranks() finally spark.conf.unset(LoopExec.EnabledKey)
-    assertUlpClose(scoped, plain)
-    // the redistribute branch (driver-scalar dangling mass) too
-    def ranksRedist(): Map[String, Double] =
-      graft.graph.PageRank.run(pages, edges, iters = 3,
-          redistributeDangling = true)
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val scopedR = ranksRedist()
-    spark.conf.set(LoopExec.EnabledKey, "false")
-    val plainR = try ranksRedist() finally spark.conf.unset(LoopExec.EnabledKey)
-    assertUlpClose(scopedR, plainR)
-    // mass conservation survives the scalar-literal dm fold: total rank
-    // stays 1 to fp accuracy in both regimes
-    assert(math.abs(scopedR.values.sum - 1.0) < 1e-9)
-  }
+  private val loops: Seq[(String, Boolean, (DataFrame, DataFrame) => DataFrame)] =
+    Seq(
+      ("PageRank", false, PageRank.run(_, _, iters = 4)),
+      ("PageRank redistributeDangling", false,
+        PageRank.run(_, _, iters = 3, redistributeDangling = true)),
+      ("Hits", false, Hits.run(_, _, iters = 4)),
+      ("labelPropagation", true, Components.labelPropagation(_, _, rounds = 3)),
+      ("Bfs", true, Bfs.hopDistances(_, _, "d")))
+
+  for ((name, exact, loop) <- loops)
+    test(s"small-state path ≡ above-gate path: $name") {
+      val s = spark
+      import s.implicits._
+      val pages = Seq("a", "b", "c", "d", "e").toDF("page")
+      val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("d", "a"),
+        ("a", "c"), ("e", "b")).toDF("src", "dst")
+      val small = rows(loop(pages, edges))
+      // the derived partition count is a pure function of the data, so
+      // a rerun is bit-identical — the property the rank store's
+      // load-≡-fresh pin stands on
+      assert(rows(loop(pages, edges)) == small,
+        "small-path reruns must be bit-identical (deterministic derivation)")
+      assertSame(small, aboveGate(rows(loop(pages, edges))), exact)
+    }
 }

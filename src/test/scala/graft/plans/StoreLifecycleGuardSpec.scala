@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * managed location, sweeping stopped contexts — and the build-once
   * registry live in [[Lineage]] alone. Thirty hand copies of the
   * lifecycle and 81 per-artifact caches once grew from one original;
-  * these scans fail the build when a copy reappears in `src/main`. */
+  * these scans fail the build when a copy reappears in `src/main`. The
+  * last scan keeps graft's tuning in code: six `spark.graft.*` session
+  * keys once carried settings no caller changed. */
 class StoreLifecycleGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src", "main", "scala")
@@ -38,6 +40,18 @@ class StoreLifecycleGuardSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: $pat"
     assert(hits.isEmpty,
       "use Lineage.store / perContext / sweepStoppedKeys instead:\n" +
+        hits.mkString("\n"))
+  }
+
+  test("no spark.graft.* conf key in src/main") {
+    val hits = for {
+      f <- sources :+ home
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("\"spark.graft.")
+    } yield s"$f:${i + 1}"
+    assert(hits.isEmpty,
+      "fix the setting as a named constant (a loop's size decision " +
+        "belongs to LoopExec's gate) instead of reading a conf key:\n" +
         hits.mkString("\n"))
   }
 
