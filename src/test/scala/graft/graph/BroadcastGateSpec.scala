@@ -1,55 +1,34 @@
 package graft.graph
 
 import graft.SparkSpec
+import graft.plans.LoopExec
 
-/** The vertex-vector broadcast gate must be runtime-tunable
-  * (`spark.graft.broadcastVertexLimit`) and the shuffled-join fallback
-  * path must produce bit-identical results — this is the exact code
-  * path a 100 TB run (|V| above the gate) executes, which the catalog
-  * queries never exercise at test scale.
+/** The broadcast half of the loop size gate on its own: with the
+  * session pinned to what the small-state scope derives for this graph
+  * (AQE off, one shuffle partition), the above-gate run differs from
+  * the small one only in its join strategy — shuffled instead of a
+  * broadcast vertex vector, the code path a |V|-above-the-gate run
+  * executes — and the ranks must be bit-identical.
   */
 class BroadcastGateSpec extends SparkSpec {
 
-  private def graph() = {
+  test("PageRank ranks are identical on the shuffled (above-gate) path") {
     val s = spark
     import s.implicits._
-    (Seq("a", "b", "c", "d").toDF("page"),
-      Seq("a" -> "b", "b" -> "c", "c" -> "a", "d" -> "a").toDF("src", "dst"))
-  }
-
-  private def withLimit[T](v: String)(f: => T): T = {
-    spark.conf.set("spark.graft.broadcastVertexLimit", v)
-    try f finally spark.conf.unset("spark.graft.broadcastVertexLimit")
-  }
-
-  test("conf override is read; 0 disables vertex broadcasts") {
-    assert(PageRank.broadcastVertexLimit(spark) ==
-      PageRank.BroadcastVertexLimit)
-    withLimit("12345") {
-      assert(PageRank.broadcastVertexLimit(spark) == 12345L)
-    }
-  }
-
-  test("PageRank ranks are identical on the shuffled (above-gate) path") {
-    val (pages, edges) = graph()
-    val hinted = PageRank.run(pages, edges, iters = 4)
+    val pages = Seq("a", "b", "c", "d").toDF("page")
+    val edges = Seq("a" -> "b", "b" -> "c", "c" -> "a", "d" -> "a")
+      .toDF("src", "dst")
+    def ranks(): Map[String, Double] = PageRank.run(pages, edges, iters = 4)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val shuffled = withLimit("0") {
-      PageRank.run(pages, edges, iters = 4)
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    }
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    val (hinted, shuffled) =
+      try (ranks(), LoopExec.smallRows.withValue(-1L)(ranks()))
+      finally saved.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     assert(hinted.keySet == shuffled.keySet)
     hinted.foreach { case (p, r) => assert(r == shuffled(p), s"page $p") }
-  }
-
-  test("components labels are identical on the shuffled path") {
-    val (pages, edges) = graph()
-    val hinted = Components.labelPropagation(pages, edges, rounds = 3)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val shuffled = withLimit("0") {
-      Components.labelPropagation(pages, edges, rounds = 3)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    }
-    assert(hinted == shuffled)
   }
 }

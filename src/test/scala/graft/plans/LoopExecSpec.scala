@@ -98,28 +98,47 @@ class LoopExecSpec extends SparkSpec {
     }
   }
 
+  private def graph(): (DataFrame, DataFrame) = {
+    val s = spark
+    import s.implicits._
+    (Seq("a", "b", "c", "d", "e").toDF("page"),
+      Seq(("a", "b"), ("b", "c"), ("c", "a"), ("d", "a"),
+        ("a", "c"), ("e", "b")).toDF("src", "dst"))
+  }
+
+  /** Small-path run, a rerun of it, and the above-gate run: the derived
+    * partition count is a pure function of the data, so the rerun is
+    * bit-identical — the property the rank store's load-≡-fresh pin
+    * stands on. Returns the small-path rows. */
+  private def assertPathsAgree(exact: Boolean)(
+      loop: (DataFrame, DataFrame) => DataFrame): Map[String, Seq[Any]] = {
+    val (pages, edges) = graph()
+    val small = rows(loop(pages, edges))
+    assert(rows(loop(pages, edges)) == small,
+      "small-path reruns must be bit-identical (deterministic derivation)")
+    assertSame(small, aboveGate(rows(loop(pages, edges))), exact)
+    small
+  }
+
+  test("PageRank under the scope ≡ PageRank with the scope disabled " +
+      "(1e-12-relative ranks; scope-on reruns bit-identical)") {
+    assertPathsAgree(exact = false)(PageRank.run(_, _, iters = 4))
+    // the redistribute branch (driver-scalar dangling mass) too
+    val redist = assertPathsAgree(exact = false)(
+      PageRank.run(_, _, iters = 3, redistributeDangling = true))
+    // mass conservation survives the scalar-literal dm fold
+    assert(math.abs(redist.values.map(_.head.asInstanceOf[Double]).sum
+      - 1.0) < 1e-9)
+  }
+
   private val loops: Seq[(String, Boolean, (DataFrame, DataFrame) => DataFrame)] =
     Seq(
-      ("PageRank", false, PageRank.run(_, _, iters = 4)),
-      ("PageRank redistributeDangling", false,
-        PageRank.run(_, _, iters = 3, redistributeDangling = true)),
       ("Hits", false, Hits.run(_, _, iters = 4)),
       ("labelPropagation", true, Components.labelPropagation(_, _, rounds = 3)),
       ("Bfs", true, Bfs.hopDistances(_, _, "d")))
 
   for ((name, exact, loop) <- loops)
     test(s"small-state path ≡ above-gate path: $name") {
-      val s = spark
-      import s.implicits._
-      val pages = Seq("a", "b", "c", "d", "e").toDF("page")
-      val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("d", "a"),
-        ("a", "c"), ("e", "b")).toDF("src", "dst")
-      val small = rows(loop(pages, edges))
-      // the derived partition count is a pure function of the data, so
-      // a rerun is bit-identical — the property the rank store's
-      // load-≡-fresh pin stands on
-      assert(rows(loop(pages, edges)) == small,
-        "small-path reruns must be bit-identical (deterministic derivation)")
-      assertSame(small, aboveGate(rows(loop(pages, edges))), exact)
+      assertPathsAgree(exact)(loop)
     }
 }
