@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -10,23 +9,21 @@ import graft.functions.{BloomMightContain, BpeSymbols, CharEntropy,
   DotProduct, MinHashSig, PqAdc, SimHash32, SortedIntersectCount, Winnow,
   WordGramHashes60, WordShingleHashes}
 
-/** Registration of graft's native Catalyst expressions.
+/** Registration of graft's native Catalyst expressions, through one
+  * path: this provider is listed in
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * so Spark loads it into every session it builds with graft on the
+  * classpath, and `newSession()` and clones inherit the entries.
+  * `spark.sql.extensions` is not needed; setting it to this class as
+  * well only re-registers the same entries.
   *
-  * Two paths to the same registry entry:
-  *   - `spark.sql.extensions=graft.GraftExtensions` at session build
-  *     (the SparkSessionExtensions injection point), or
-  *   - [[GraftFunctions.register]] on a live session (used by the
-  *     query catalog so the driver's plain sessions get the functions
-  *     without special configs).
-  *
-  * After either, `cosine_sim(a, b)` is available to SQL, and to the
-  * DataFrame API via `call_function("cosine_sim", …)`.
+  * Every session thus has `cosine_sim(a, b)` and the other
+  * `GraftFunctions.entries` in SQL, and in the DataFrame API via
+  * `call_function("cosine_sim", …)`.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
+class GraftExtensions extends SparkSessionExtensionsProvider {
+  override def apply(ext: SparkSessionExtensions): Unit =
     GraftFunctions.entries.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => graft.plans.IntersectCountRewrite)
-  }
 }
 
 object GraftFunctions {
@@ -98,10 +95,4 @@ object GraftFunctions {
     binary("bloom_might_contain", classOf[BloomMightContain],
       BloomMightContain.apply)
   )
-
-  /** Idempotent registration on a live session. */
-  def register(spark: SparkSession): Unit =
-    entries.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
 }

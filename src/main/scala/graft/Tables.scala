@@ -67,13 +67,11 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
-  /** Register every table as a temp view (plus the graft native
-    * functions), so the whole engine is drivable from `spark.sql(...)` —
-    * the other half of the declarative surface. Views are lazy plan
-    * aliases over the parquet scans: pushdown/pruning reach the files
-    * exactly as in the DataFrame path. */
+  /** Register every table as a temp view, so the whole engine is
+    * drivable from `spark.sql(...)` — the other half of the declarative
+    * surface. Views are lazy plan aliases over the parquet scans:
+    * pushdown/pruning reach the files exactly as in the DataFrame path. */
   def registerAll(s: SparkSession, d: String): Unit = {
-    GraftFunctions.register(s)
     region(s, d).createOrReplaceTempView("region")
     nation(s, d).createOrReplaceTempView("nation")
     customer(s, d).createOrReplaceTempView("customer")

@@ -96,8 +96,7 @@ object Dedup {
 
   /** Set-Jaccard for SORTED duplicate-free long arrays (the
     * [[shingleHash32Expr]] shape) via the native merge-count
-    * expression — no per-pair hash-set allocation. Callers must have
-    * registered [[graft.GraftFunctions]]. */
+    * expression — no per-pair hash-set allocation. */
   def jaccardSorted(a: Column, b: Column): Column = {
     val inter = call_function("sorted_intersect_count", a, b).cast("double")
     inter / (size(a).cast("double") + size(b).cast("double") - inter)

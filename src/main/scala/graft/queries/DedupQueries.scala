@@ -66,7 +66,6 @@ object DedupQueries {
     // bit-identical to the interpreted SQL forms in [[Dedup]] (proven by
     // ShingleHashesSpec), ~5× faster on the hot narrow pass.
     "q_dedup_minhash" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
       val sigs = Tables.documents(s, d)
         .withColumn("toks", split(col("text"), "\\s+"))
         .withColumn("hs", call_function("word_shingle_hashes", col("toks"), lit(3)))
@@ -310,7 +309,6 @@ object DedupQueries {
 
     // SimHash 32-bit signatures (term-frequency-weighted bit votes).
     "q_dedup_simhash" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"),
           call_function("simhash32", split(col("text"), "\\s+")).as("simhash"))
@@ -324,7 +322,6 @@ object DedupQueries {
     // source-level shingle-union similarity without touching documents
     // pairwise.
     "q_dedup_source_sketch" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
       val merge = udaf(new graft.functions.MinHashMergeAgg(16))
       val sigs = Tables.documents(s, d)
         .withColumn("toks", split(col("text"), "\\s+"))
@@ -410,7 +407,6 @@ object DedupQueries {
     // Embedding cosine near-dup, blocked by the coarse cluster label
     // (IVF-style: only same-cell pairs are compared).
     "q_dedup_embedding" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
       val e = Tables.embeddings(s, d)
       e.as("x").join(e.as("y"),
           col("x.label") === col("y.label") && col("x.vec_id") < col("y.vec_id"))
@@ -692,7 +688,6 @@ object DedupQueries {
     * inspection only — never execute it. */
   private[graft] def containmentPairs(s: SparkSession, d: String,
       materialize: Boolean = true): DataFrame = {
-    graft.GraftFunctions.register(s)
     // size filter ABOVE the cache boundary (the q_text_plagiarism
     // lesson): pushed into the projection it would substitute the
     // shingle expression into the predicate and evaluate it twice per
@@ -779,7 +774,6 @@ object DedupQueries {
     * signature store build and the new-dump probe share ONE
     * definition (a drifted sketch would silently miss pairs). */
   private[graft] def bandedSigs(docs: DataFrame): DataFrame = {
-    graft.GraftFunctions.register(docs.sparkSession)
     docs
       .withColumn("toks", split(col("text"), "\\s+"))
       .withColumn("hs",
@@ -1005,7 +999,6 @@ object DedupQueries {
 
   private def lshPairsBuild(s: SparkSession, d: String,
       materialize: Boolean): DataFrame = {
-    graft.GraftFunctions.register(s)
     val base = Tables.documents(s, d)
       .withColumn("toks", split(col("text"), "\\s+"))
       .withColumn("hs", call_function("word_shingle_hashes", col("toks"), lit(3)))
@@ -1073,7 +1066,6 @@ object DedupQueries {
     */
   def editdistPairs(s: SparkSession, d: String, blockCap: Int,
       preLen: Int = 40): DataFrame = {
-    graft.GraftFunctions.register(s)
     val p = Tables.documents(s, d)
       .select(col("doc_id"), substring(col("text"), 1, preLen).as("pre"),
         floor(col("n_chars") / 50).as("lb"),
@@ -1087,8 +1079,7 @@ object DedupQueries {
   }
 
   /** Candidate (a, b, px, py) pairs under the capped prefix blocking.
-    * `p` must have (doc_id, pre, lb, pb); the session must have
-    * [[graft.GraftFunctions]] registered. Exposed for
+    * `p` must have (doc_id, pre, lb, pb). Exposed for
     * DedupNgramCapSpec's bounded-candidates assertion. */
   private[graft] def editdistCandidates(p: DataFrame, blockCap: Int): DataFrame = {
     val bc = p.groupBy("lb", "pb").agg(count(lit(1)).as("bc"))
@@ -1142,7 +1133,6 @@ object DedupQueries {
     * where 4-row bands would retain < 30%.
     */
   def ngramNearDup(s: SparkSession, d: String, blockCap: Int): DataFrame = {
-    graft.GraftFunctions.register(s)
     // hash pass once, not per join side — cached, with the small verified
     // result materialized and the cache dropped deterministically (the
     // q_graph_triangles pattern; a leaked localCheckpoint of the shingle

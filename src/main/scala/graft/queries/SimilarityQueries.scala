@@ -98,7 +98,6 @@ object SimilarityQueries {
     * is shingled ONCE: the postings derive from the written shingle
     * table, not a second corpus pass. */
   private def hybridLexStore(s: SparkSession, d: String): (String, String) = {
-    graft.GraftFunctions.register(s)
     val ht = graft.plans.Lineage.store(s, d, "graft_lex_shingles_") { tbl =>
       hybridLexShingles(s, d).write.bucketBy(8, "doc_id").sortBy("doc_id")
         .mode("overwrite").saveAsTable(tbl)
@@ -142,7 +141,6 @@ object SimilarityQueries {
     * (AnnPlanShapeSpec). */
   private[graft] def hybridLexical(s: SparkSession, d: String,
       materialize: Boolean = true): DataFrame = {
-    graft.GraftFunctions.register(s)
     if (!materialize) {
       val hs = hybridLexShingles(s, d)
       hybridLexServe(hs, hybridLexPostings(hs))
@@ -467,7 +465,6 @@ object SimilarityQueries {
     * property. Unordered — callers add their presentation sort. */
   private[graft] def semanticPairs(emb: DataFrame, assign: DataFrame,
       tau: Double = SemTau): DataFrame = {
-    graft.GraftFunctions.register(emb.sparkSession)
     val ec = emb.select(col("vec_id"), col("embedding"))
       .join(assign, Seq("vec_id"))
     ec.as("x").join(ec.as("y"),
@@ -590,7 +587,6 @@ object SimilarityQueries {
     * DataFrame["vec_id","nb","cos"] ++ carries, unordered/unranked. */
   private def knnPairs(s: SparkSession, d: String,
                        carry: Seq[String]): DataFrame = {
-    graft.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
       .select(("vec_id" +: "embedding" +: carry).map(col): _*)
     val q = emb.join(kmAssignments2(s, d), Seq("vec_id"))
@@ -1207,7 +1203,6 @@ object SimilarityQueries {
     // md5-derived hyperplanes; candidates = the union over tables of
     // Hamming ≤ 2 multiprobe buckets, deduped by (qid, vec_id).
     "q_ann_lsh" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
       // hyperplane dim table: 2 tables × 6 rows of 64 components,
       // broadcast.
       // 2147483648D/1D: explicit DOUBLE literals — an undecorated float
@@ -1259,7 +1254,6 @@ object SimilarityQueries {
     // bounded id set, so the broadcast is constant-size at any corpus
     // scale), argmax cell assignment, nprobe=3 probing.
     "q_ann_ivf" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
       val e = Tables.embeddings(s, d)
       val cents = ivfCentroids(e)
       val ev = e.join(ivfAssign(e, cents), "vec_id")
@@ -1289,7 +1283,6 @@ object SimilarityQueries {
     // (the ADC top-100 within probed cells loses nothing vs exact
     // scoring; measured identical to q_ann_ivf's recall).
     "q_ann_ivfpq" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
       val e = Tables.embeddings(s, d)
       val enc = pqIndex(s, d)
       val cents = ivfCentroids(e)
@@ -1342,7 +1335,6 @@ object SimilarityQueries {
     // with q_ann_ivfpq). Scale: query cost = O(new dump encode) +
     // the stored search's bucket-pruned probes.
     "q_ann_incremental" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
       val e = Tables.embeddings(s, d)
       val standing = annStoreStanding(s, d)
       val newE = e.filter(col("vec_id") >= incVecThreshold(s, d))
@@ -1613,7 +1605,6 @@ object SimilarityQueries {
     // = one narrow corpus pass (broadcast queries); lexical leg =
     // df-capped postings join; fusion joins two K-row-per-query lists.
     "q_ann_hybrid" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
       val e = Tables.embeddings(s, d)
       val wD = Window.partitionBy(col("qid"))
         .orderBy(col("cos").desc, col("vec_id"))
@@ -1653,7 +1644,6 @@ object SimilarityQueries {
     // shared ivfpq chain (d-suffixed) + the lexical CTEs + the RRF
     // law in one statement.
     "q_ann_hybrid_stored" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
       val e = Tables.embeddings(s, d)
       val dense = storedSearch(e, annStore(s, d))
         .select(col("qid"), col("vec_id").as("id"), col("rank").as("drk"))
@@ -1746,7 +1736,6 @@ object SimilarityQueries {
     * corpus-sized side table at serve time. In production the table
     * outlives the session. */
   private[graft] def annStore(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.register(s) // the encode/assign exprs need them
     val name = graft.plans.Lineage.store(s, d, "graft_ann_store_") { tbl =>
       val e = Tables.embeddings(s, d)
       pqIndex(s, d).join(ivfAssign(e, ivfCentroids(e)), "vec_id")
@@ -1806,7 +1795,6 @@ object SimilarityQueries {
     * bit-equal to the oracle's list_sum replication, so ranks agree
     * exactly; rounding would only add decimal-boundary risk. */
   private def bruteTopK(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cos").desc, col("vec_id"))
@@ -1842,7 +1830,6 @@ object SimilarityQueries {
       quantFrom: Option[DataFrame] = None,
       queryAttr: Option[String] = None,
       nprobe: Int = 3): DataFrame = {
-    graft.GraftFunctions.register(e.sparkSession)
     val cents = ivfCentroids(quantFrom.getOrElse(e))
     val probes0 = ivfProbes(e, cents, nprobe = nprobe)
       .select(col("qid"), col("pcell"))
@@ -1936,7 +1923,6 @@ object SimilarityQueries {
     * (id 450 ≥ the high-water mark), so append-under-standing and
     * retrain produce materially different indexes. */
   private[graft] def annStoreMaint(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val name = graft.plans.Lineage.store(s, d, "graft_ann_maint_") { tbl =>
       val e = Tables.embeddings(s, d)
       val standing = e.filter(col("vec_id") < incVecThreshold(s, d))
@@ -1954,7 +1940,6 @@ object SimilarityQueries {
     * AnnMaintainSpec's forced-branch equality. */
   private[graft] def maintainAppendSearch(s: SparkSession,
       d: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val standing = e.filter(col("vec_id") < incVecThreshold(s, d))
     val newE = e.filter(col("vec_id") >= incVecThreshold(s, d))
@@ -1982,7 +1967,6 @@ object SimilarityQueries {
     * ones. */
   private[graft] def maintainAppendReference(s: SparkSession,
       d: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val standing = e.filter(col("vec_id") < incVecThreshold(s, d))
     storedSearch(e,
@@ -2013,7 +1997,6 @@ object SimilarityQueries {
     * untouched. */
   private[graft] def annStoreAppended2(s: SparkSession, d: String)
       : DataFrame = {
-    graft.GraftFunctions.register(s)
     val name = graft.plans.Lineage.store(s, d, "graft_ann_app2_") { tbl =>
       val e = Tables.embeddings(s, d)
       val thr = incVecThreshold(s, d)
@@ -2044,7 +2027,6 @@ object SimilarityQueries {
     * train; and the gate needs encode(standing) ∪ encode(new) ≡
     * encode(full), which only holds under one codebook). */
   private[graft] def annStoreStanding(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.register(s) // the encode/assign exprs need them
     val name = graft.plans.Lineage.store(s, d, "graft_ann_standing_") { tbl =>
       val e = Tables.embeddings(s, d)
       val standing = e.filter(col("vec_id") < incVecThreshold(s, d))
@@ -2065,7 +2047,6 @@ object SimilarityQueries {
     * pass. Final population = (standing − tombstoned) ∪ dump. */
   private[graft] def annStoreMixed(s: SparkSession, d: String)
       : DataFrame = {
-    graft.GraftFunctions.register(s)
     val name = graft.plans.Lineage.store(s, d, "graft_ann_mx_") { tbl =>
       val e = Tables.embeddings(s, d)
       val dump = e.filter(col("vec_id") >= incVecThreshold(s, d))
@@ -2137,7 +2118,6 @@ object SimilarityQueries {
     val q = pqQueryTabs(e, seedRule)
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("adc"), col("vec_id"))
-    graft.GraftFunctions.register(e.sparkSession)
     enc.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),

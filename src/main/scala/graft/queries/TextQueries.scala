@@ -189,7 +189,6 @@ object TextQueries {
     // `transform(sequence(…), i -> substring(text, i, 3))` lambda it
     // replaces, which was the slowest text stage (the round-3
     // interpreted-HOF lesson applied to the one hot path it had missed)
-    graft.GraftFunctions.register(docs.sparkSession)
     val grams = docs.select(col("doc_id"), col("lang"),
       explode(call_function("char_grams", col("text"), lit(3))).as("g"))
     // ONE corpus-scale explode + partial-agg'd shuffle; both profiles
@@ -257,7 +256,6 @@ object TextQueries {
   private def decontEvalArtifacts(s: SparkSession,
       d: String): (DataFrame, Array[Byte]) =
     graft.plans.Lineage.perSession("decontEvalArtifacts", s, d) {
-      graft.GraftFunctions.register(s)
       // persisted: the window pass feeds TWO consumers (the distinct
       // gram set and the bloom build) — the decontBloomBuild pattern
       val evalWins = Tables.documents(s, d)
@@ -281,7 +279,6 @@ object TextQueries {
     }
 
   private def decontBloomBuild(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.register(s)
     val w = 8
     // native ordered 60-bit window stream — the window strings never
     // materialize (pinned equal to the interpreted form by
@@ -548,6 +545,7 @@ object TextQueries {
         Seq("source"))
       .withColumn("bin", binCol)
       .groupBy("source", "bin").agg(count(lit(1)).as("c"))
+    // literal-source callers run this unpartitioned, over ≤ QcBins rows
     val wBin = Window.partitionBy("source").orderBy("bin")
     val targetBins = hist
       .withColumn("cum", sum("c").over(wBin))
@@ -1473,7 +1471,6 @@ object TextQueries {
     // one standing-sized pass, histogram-narrowed). ONE scored scan
     // (checkpointed) serves the cut and the verdicts.
     "q_text_curate_incremental" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
       val newSrc = DedupQueries.IncNewSource
       val docs = Tables.documents(s, d)
       // the standing quality cut is the MEMOIZED build-once artifact
@@ -1560,7 +1557,6 @@ object TextQueries {
     // within its arrival batch; standing bytes are never re-read.
     "q_stream_curate" -> ((s, d) => {
       import s.implicits._
-      graft.GraftFunctions.register(s)
       val newSrc = DedupQueries.IncNewSource
       val docs = Tables.documents(s, d)
       // the MEMOIZED standing cut ([[standingQualityCut]] — build-once
@@ -1677,7 +1673,6 @@ object TextQueries {
     // CurateCleanedSpec pins exactly that subsumption), and the
     // leakage-safe canonical-hash split.
     "q_text_curate_cleaned" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
       // the PERSISTED cleaned corpus (VERDICT r16 item 4): scoring
       // reads the stored bucketed table, not the session memo — the
       // production stage boundary made literal
@@ -1868,7 +1863,6 @@ object TextQueries {
     // presented on the 1e-6 floor grid and τ sits far from any pair
     // (measured gap: planted near-dups ≥ 0.9, everything else < 0.3).
     "q_text_allpairs" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
       val docs = Tables.documents(s, d)
       val n = docs.count() // driver-side exact integer
       // native codegen'd ordered 60-bit gram stream (pinned equal to
@@ -2056,7 +2050,6 @@ object TextQueries {
     // totals, prune, window and prefix identically).
     "q_text_mixture" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.GraftFunctions.register(s)
       val budget = 1000L
       val sym = bpeSymbols(col("text"))
       val docs = Tables.documents(s, d)
@@ -2092,7 +2085,6 @@ object TextQueries {
     // riding the broadcast totals join.
     "q_text_mixture_temp" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.GraftFunctions.register(s)
       val totalBudget = 8000L
       val sym = bpeSymbols(col("text"))
       val docs = Tables.documents(s, d)
@@ -2287,7 +2279,6 @@ object TextQueries {
     // corpus self-join anywhere. The one explode pass is cached and the
     // small per-doc result materialized (triangles pattern).
     "q_text_decontaminate" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
       val w = 8
       // native ordered 60-bit window stream (see decontBloomBuild)
       val wins = Tables.documents(s, d)
@@ -2370,7 +2361,6 @@ object TextQueries {
     // one source from serializing the whole corpus through one task.
     "q_text_pack" -> ((s, d) => {
       import s.implicits._
-      graft.GraftFunctions.register(s)
       val limit = 512L
       // budgets count REAL BPE tokens (the trained 1200-rule vocab via
       // [[bpeSymbols]]), not whitespace words — packing is a
@@ -2405,7 +2395,6 @@ object TextQueries {
     // statement of the semantics) — the interpreted lambdas were ~2000
     // expression-tree walks per document on this hot path.
     "q_text_fingerprint" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
       Tables.documents(s, d)
         .withColumn("hs", call_function("char_gram_hashes", col("text"), lit(8)))
         .withColumn("fps", call_function("winnow", col("hs"), lit(4)))
@@ -2533,7 +2522,6 @@ object TextQueries {
     // order-defined); shards bound group size exactly as q_text_pack.
     "q_text_pack_curated" -> ((s, d) => {
       import s.implicits._
-      graft.GraftFunctions.register(s)
       val limit = 512L
       // checkpointed: the selection is a bounded 2-column decision
       // frame — cutting the lineage here keeps the curate join tree
@@ -2592,15 +2580,12 @@ object TextQueries {
       // native codegen'd gram-hash + winnow (pinned equal to the
       // interpreted SQL forms the oracle states) — this pass WAS the
       // query's cost: 4.2 s of the 4.4 s total at sf0.1 interpreted
-      val post = {
-        graft.GraftFunctions.register(s)
-        graft.plans.Lineage.scratchCheckpoint(
-          Tables.documents(s, d)
-            .withColumn("hs",
-              call_function("char_gram_hashes", col("text"), lit(8)))
-            .select(col("doc_id"),
-              explode(call_function("winnow", col("hs"), lit(4))).as("fp")))
-      }
+      val post = graft.plans.Lineage.scratchCheckpoint(
+        Tables.documents(s, d)
+          .withColumn("hs",
+            call_function("char_gram_hashes", col("text"), lit(8)))
+          .select(col("doc_id"),
+            explode(call_function("winnow", col("hs"), lit(4))).as("fp")))
       val keep = post.groupBy("fp").agg(count(lit(1)).as("df"))
         .filter(col("df") >= 2 && col("df") <= PlagMaxDf)
       // checkpointed BEFORE the self-join (the SURVEY §8 self-join
@@ -2716,7 +2701,6 @@ object TextQueries {
     // by rule via list_reduce. Plan shape: one narrow codegen'd
     // projection per document, no shuffle except the presentation sort.
     "q_text_tokens_bpe" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
       val sym = bpeSymbols(col("text"))
       Tables.documents(s, d)
         .select(col("doc_id"),
@@ -2739,10 +2723,7 @@ object TextQueries {
     // rows of exact long sums; the ratios divide those exact longs and
     // present on the 1e-6 floor grid (identical left-assoc expression
     // both engines — zero float risk beyond the shared division).
-    "q_text_fertility" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
-      fertilityOver(Tables.documents(s, d))
-    }),
+    "q_text_fertility" -> ((s, d) => fertilityOver(Tables.documents(s, d))),
 
     // Character-distribution Shannon entropy — the "natural text vs
     // noise" signal (random junk ≈ log2(alphabet), template filler low).
@@ -2752,7 +2733,6 @@ object TextQueries {
     // in-order Σ c·log2(c) fold is order-identical on both engines, so
     // the only wiggle is libm ln() ulp differences.
     "q_text_entropy" -> ((s, d) => {
-      graft.GraftFunctions.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"),
           round(call_function("char_entropy", col("text")), 6).as("entropy"))

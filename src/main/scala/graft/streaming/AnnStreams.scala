@@ -70,7 +70,6 @@ object AnnStreams {
       k: Int, nprobe: Int, rerankT: Int): Dataset[AnnHit] = {
     val s = queries.sparkSession
     import s.implicits._
-    graft.GraftFunctions.register(s)
 
     // nearest-nprobe cells, no window: score the literal centroid
     // table in-row, array_sort by (pcos DESC, pcell DESC) — the exact

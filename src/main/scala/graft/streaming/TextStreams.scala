@@ -27,7 +27,6 @@ object TextStreams {
     * job — a stream in append mode flags, it doesn't aggregate. */
   def decontaminateStream(docs: DataFrame, evalGrams: DataFrame,
       bloomBytes: Array[Byte]): DataFrame = {
-    graft.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         explode(call_function("word_gram_hashes60",
@@ -69,7 +68,6 @@ object TextStreams {
     * order, doc_id, source, text). */
   def mixtureAdmitStream(docs: DataFrame, budget: Long): Dataset[Admitted] = {
     val s = docs.sparkSession
-    graft.GraftFunctions.register(s)
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val sep = graft.functions.BpeSymbolsUtil.Sep.toString

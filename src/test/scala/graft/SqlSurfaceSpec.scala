@@ -1,11 +1,13 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The `spark.sql(...)` half of the declarative surface: after
-  * [[Tables.registerAll]], every table and every graft native function
-  * is reachable from plain SQL, and SQL results equal the DataFrame
-  * path (same plans underneath).
+  * [[Tables.registerAll]], every table is reachable from plain SQL, and
+  * SQL results equal the DataFrame path (same plans underneath). Every
+  * graft native function is there in any session, with no call at all:
+  * the extension provider file loads them at session build.
   */
 class SqlSurfaceSpec extends SparkSpec {
 
@@ -45,5 +47,32 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(df.count() > 0)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan.take(500))
+  }
+
+  test("a plain-builder session and its newSession() resolve every graft function") {
+    spark // the shared SparkContext exists first; the fresh session reuses it
+    val prev = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      // the builder Bench, Verify and perfbench use: no spark.sql.extensions
+      val fresh = SparkSession.builder().master("local[4]").getOrCreate()
+      assert(fresh ne spark)
+      for (s <- Seq(fresh, fresh.newSession())) {
+        val missing = GraftFunctions.entries.map(_._1.funcName)
+          .filterNot(s.catalog.functionExists)
+        assert(missing.isEmpty, s"not in the session's registry: $missing")
+        val dot = s.range(1).select(call_function("dot_product",
+          array(lit(1.0), lit(2.0)), array(lit(3.0), lit(4.0))))
+          .head().getDouble(0)
+        assert(dot == 11.0)
+        val n = s.sql("SELECT sorted_intersect_count(array(1L, 2L, 3L), " +
+          "array(2L, 3L, 4L))").head().getInt(0)
+        assert(n == 2)
+      }
+    } finally {
+      SparkSession.clearActiveSession()
+      prev.foreach(SparkSession.setDefaultSession)
+    }
   }
 }

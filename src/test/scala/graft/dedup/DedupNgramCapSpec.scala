@@ -18,7 +18,6 @@ class DedupNgramCapSpec extends SparkSpec {
   private def oneBlock(texts: Seq[String]) = {
     val s = spark
     import s.implicits._
-    graft.GraftFunctions.register(s)
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
       .select(col("doc_id"), lit("web").as("source"), lit(0L).as("lb"),
@@ -68,7 +67,6 @@ class DedupNgramCapSpec extends SparkSpec {
   private def editdistBlock(texts: Seq[String]) = {
     val s = spark
     import s.implicits._
-    graft.GraftFunctions.register(s)
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
       .select(col("doc_id"), substring(col("text"), 1, 40).as("pre"),
@@ -111,7 +109,6 @@ class DedupNgramCapSpec extends SparkSpec {
   test("editdist: shingle-less short prefixes in an oversized block stay on the exact route") {
     val s = spark
     import s.implicits._
-    graft.GraftFunctions.register(s)
     val rnd = new scala.util.Random(19)
     // one (lb, pb) block of 80 (> cap 64): 70 banded long rows + 10
     // short rows whose pre ("abcd") is under the 5-char shingle width —

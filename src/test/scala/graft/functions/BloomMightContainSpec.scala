@@ -15,8 +15,6 @@ class BloomMightContainSpec extends SparkSpec {
 
   import spark.implicits._
 
-  graft.GraftFunctions.register(spark)
-
   private def serialize(bf: BloomFilter): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     bf.writeTo(bos)
@@ -89,7 +87,6 @@ class BloomMightContainSpec extends SparkSpec {
   }
 
   test("registered for SQL via extensions/registry") {
-    graft.GraftFunctions.register(spark)
     val bytes = filterOf(Seq(7L))
     Seq(7L, 8L).toDF("h").createOrReplaceTempView("bloom_probe_t")
     val hex = bytes.map(b => f"$b%02x").mkString

@@ -61,7 +61,6 @@ class CharEntropySpec extends SparkSpec {
   test("expression path (codegen) agrees with direct eval, null-safe") {
     val s = spark
     import s.implicits._
-    graft.GraftFunctions.register(s)
     val texts = Seq("abcd", "", "aabbccdd", "mixed content 123", null)
     val got = texts.zipWithIndex.map { case (t, i) => (i, t) }
       .toDF("id", "t")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.{GraftFunctions, SparkSpec}
+import graft.SparkSpec
 import graft.dedup.Dedup
 
 /** Property-based parity: the native codegen'd sketch expressions must
@@ -32,7 +32,6 @@ class ShingleHashesProperties extends SparkSpec {
   test("word_shingle_hashes / minhash_sig / simhash32 match SQL forms on random unicode docs") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(s)
     val df = docs(60).toDF("text")
       .withColumn("toks", split(col("text"), "\\s+"))
       .withColumn("refH", expr(Dedup.shingleHash32Expr(
@@ -53,7 +52,6 @@ class ShingleHashesProperties extends SparkSpec {
   test("char_shingle_hashes matches the SQL form on random unicode texts (char semantics)") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(s)
     val df = docs(60).toDF("text")
       .withColumn("ref", expr(Dedup.shingleHash32Expr(
         s"(${Dedup.charShinglesExpr("text", 4)})")))
@@ -66,7 +64,6 @@ class ShingleHashesProperties extends SparkSpec {
       "first-occurrence dedup") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(s)
     import graft.functions.TextFunctions
     val df = (docs(60) ++ Seq("", "ab", "abcdefgh", "aaaaaaaaaaaa",
       "日本語で書かれた文章です")).toDF("text")
@@ -84,7 +81,6 @@ class ShingleHashesProperties extends SparkSpec {
       "60-bit values") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(s)
     def refForm(k: Int) = expr(
       s"CASE WHEN size(toks) < $k THEN cast(array() as array<bigint>) " +
         s"ELSE transform(transform(sequence(1, size(toks) - ${k - 1}), " +
@@ -106,7 +102,6 @@ class ShingleHashesProperties extends SparkSpec {
       "on random unicode texts — order AND duplicates preserved") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(s)
     // the exact lambda q_text_langid_ngram shipped before the native
     // expression — grams must be IDENTICAL element-for-element (counts
     // feed the rank model, so dedup or reorder breaks the gate)

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.functions._
 
-import graft.{GraftFunctions, SparkSpec}
+import graft.SparkSpec
 import graft.dedup.Dedup
 
 /** The native codegen'd sketch expressions must equal the interpreted
@@ -14,7 +14,6 @@ import graft.dedup.Dedup
 class ShingleHashesSpec extends SparkSpec {
 
   private def docs = {
-    GraftFunctions.register(spark)
     graft.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
   }
@@ -79,5 +78,24 @@ class ShingleHashesSpec extends SparkSpec {
       .withColumn("ref", expr(Dedup.simhashExpr("ths", 32)))
       .withColumn("got", call_function("simhash32", split(col("text"), "\\s+")))
     assert(df.filter(col("ref") =!= col("got")).count() == 0)
+  }
+
+  test("sorted_intersect_count == size(array_intersect) on word_shingle_hashes pairs (sf0.001 corpus)") {
+    // parquet-backed pairs: a literal Seq would be constant-folded into
+    // a LocalRelation and never reach the codegen'd merge
+    val d = docs.orderBy("doc_id").limit(10)
+    val pairs = d.as("x").join(d.as("y"), col("x.doc_id") < col("y.doc_id"))
+      .select(
+        call_function("word_shingle_hashes",
+          split(col("x.text"), " "), lit(2)).as("h1"),
+        call_function("word_shingle_hashes",
+          split(col("y.text"), " "), lit(2)).as("h2"))
+      .select(
+        size(array_intersect(col("h1"), col("h2"))).as("ref"),
+        call_function("sorted_intersect_count", col("h1"), col("h2")).as("got"))
+      .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
+    assert(pairs.size == 45) // 10 choose 2
+    assert(pairs.forall { case (ref, got) => ref == got }, pairs)
+    assert(pairs.exists(_._1 > 0), "no pair shares a shingle: vacuous")
   }
 }

@@ -68,7 +68,6 @@ class AnnFilteredSpec extends SparkSpec {
     val q = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
         col("label").as("qlabel"))
-    graft.GraftFunctions.register(spark)
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cos").desc, col("vec_id"))
     // exact constrained ground truth: same-label corpus scan

@@ -50,7 +50,6 @@ class AnnStreamSpec extends SparkSpec {
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val wq = Window.partitionBy(col("qid"))
       .orderBy(col("pcos").desc, col("pcell").desc)
-    graft.GraftFunctions.register(spark)
     val probes = queries
       .crossJoin(cents)
       .select(col("qid"), col("pcell"),

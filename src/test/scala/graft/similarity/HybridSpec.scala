@@ -41,7 +41,6 @@ class HybridSpec extends SparkSpec {
     // both legs contribute: recompute the dense top-5 ids per query and
     // check the fused output contains ids OUTSIDE it (lexical-only docs)
     // and ids inside it (dense docs)
-    graft.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val qv = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))

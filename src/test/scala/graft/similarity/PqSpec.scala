@@ -58,7 +58,6 @@ class PqSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions.{call_function, expr}
-    graft.GraftFunctions.register(s)
     // deterministic pseudo-random tables/codes from row ids
     val df = s.range(50).selectExpr(
       "transform(sequence(0, 7), j -> transform(sequence(0, 15), " +

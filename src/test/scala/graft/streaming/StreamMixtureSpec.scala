@@ -25,7 +25,6 @@ class StreamMixtureSpec extends SparkSpec {
     // the batch statement of the same rule: cumulative BPE tokens per
     // source in md5(doc_id) order; keep while the budget fits, plus the
     // oversized-first doc
-    graft.GraftFunctions.register(spark)
     val sep = graft.functions.BpeSymbolsUtil.Sep.toString
     val sym = call_function("bpe_symbols", col("text"))
     val w = Window.partitionBy(col("source"))

@@ -73,7 +73,6 @@ class FertilitySpec extends SparkSpec {
       ("xx", "empty_src", ""),
       ("en", "ok_src", "plain words here")
     ).toDF("lang", "source", "text")
-    graft.GraftFunctions.register(spark)
     val got = graft.queries.TextQueries.fertilityOver(docs).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.isNullAt(6), r.isNullAt(7), r.getLong(4), r.getLong(5))).toMap
