@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain,
+  Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
-import graft.functions.{BloomMightContain, BpeSymbols, CharEntropy,
+import graft.functions.{BpeSymbols, CharEntropy,
   CharGramHashes, CharGrams, CharShingleHashes, CosineSimilarity,
   DotProduct, MinHashSig, PqAdc, SimHash32, SortedIntersectCount, Winnow,
   WordGramHashes60, WordShingleHashes}
@@ -20,6 +22,12 @@ import graft.functions.{BloomMightContain, BpeSymbols, CharEntropy,
   * Every session thus has `cosine_sim(a, b)` and the other
   * `GraftFunctions.entries` in SQL, and in the DataFrame API via
   * `call_function("cosine_sim", …)`.
+  *
+  * Two entries name Spark's own bloom filter expressions, which its
+  * built-in registry does not expose: `bloom_filter_agg(h, numItems,
+  * numBits)` aggregates a filter on the executors, and
+  * `might_contain(bloom, h)` probes one that arrives as a literal or
+  * a scalar subquery.
   */
 class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -92,7 +100,15 @@ object GraftFunctions {
     unary("char_entropy", classOf[CharEntropy], CharEntropy.apply),
     unary("bpe_symbols", classOf[BpeSymbols], BpeSymbols.apply),
     binary("pq_adc", classOf[PqAdc], PqAdc.apply),
-    binary("bloom_might_contain", classOf[BloomMightContain],
-      BloomMightContain.apply)
+    (FunctionIdentifier("bloom_filter_agg"),
+      new ExpressionInfo(classOf[BloomFilterAggregate].getName,
+        "bloom_filter_agg"),
+      (children: Seq[Expression]) => {
+        require(children.size == 3,
+          "bloom_filter_agg expects exactly 3 arguments")
+        new BloomFilterAggregate(children.head, children(1), children(2))
+      }),
+    binary("might_contain", classOf[BloomFilterMightContain],
+      BloomFilterMightContain.apply)
   )
 }

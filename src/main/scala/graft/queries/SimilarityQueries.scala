@@ -1488,8 +1488,8 @@ object SimilarityQueries {
     // vectors, IVF centroids, and PQ codebook are static artifacts
     // that change on maintenance cadence, not query cadence. Probe
     // selection runs in-flight with NO window and NO state — the
-    // ≤16-entry centroid table is a collected literal (the
-    // bloom-bytes static-artifact pattern; the collect is the
+    // ≤16-entry centroid table is a collected literal (bounded by
+    // construction, so the plan stays small; the collect is the
     // bounded-by-construction N-counter contract) scored by one
     // in-row array_sort; the per-query ADC table is the same
     // dtabExpr against the broadcast codebook; candidates come from

@@ -19,9 +19,9 @@ final case class AnnHit(qid: Long, vec_id: Long, cos: Double, rank: Int)
   *  - Probe-cell selection, the per-query ADC table, and the ADC
   *    itself run IN-FLIGHT as stateless narrow expressions +
   *    stream-static equi-joins: centroids are a ≤16-entry literal
-  *    (the bloom-bytes static-artifact pattern), so nearest-nprobe is
-  *    one array_sort over a 16-element in-row array — no window, no
-  *    state.
+  *    (bounded by construction, so the plan stays small), so
+  *    nearest-nprobe is one array_sort over a 16-element in-row
+  *    array — no window, no state.
   *  - Candidate vectors join from the static corpus alongside the
   *    codes (the FAISS refine-storage idiom: serving keeps raw
   *    vectors next to the inverted lists); the EXACT cosine is then

@@ -14,30 +14,24 @@ object TextStreams {
     * (q_text_decontaminate's flag as documents arrive): each streamed
     * document's word-8-gram 60-bit digests are generated in-flight
     * (the same native `word_gram_hashes60` expression as the batch
-    * gates), pruned by the STATIC eval-set bloom INSIDE the stream's
-    * scan stage (only the surviving sliver — true overlaps +
-    * fpp·windows — reaches any join), then exactly verified by a
-    * stream-static left-semi join against the deduplicated eval gram
-    * set, which kills the bloom's false positives (false negatives are
-    * impossible, so the emitted set is exact regardless of fpp — the
-    * q_text_decontaminate_bloom law, restated under the stream).
-    * Emits each contaminated doc_id once: `dropDuplicates` state is
-    * bounded by the CONTAMINATED population, not the corpus.
+    * gates) and handed to `verify`, which keeps exactly the eval-set
+    * hits. q_stream_decontaminate passes `TextQueries.evalHits`: a
+    * bloom prune inside the stream's scan stage, then a stream-static
+    * left-semi join against the deduplicated eval gram set, so the
+    * emitted set is exact (the q_text_decontaminate_bloom law,
+    * restated under the stream). Emits each contaminated doc_id once: `dropDuplicates`
+    * state is bounded by the CONTAMINATED population, not the corpus.
     * Window counting (n_overlap / n_windows) stays the batch gate's
     * job — a stream in append mode flags, it doesn't aggregate. */
-  def decontaminateStream(docs: DataFrame, evalGrams: DataFrame,
-      bloomBytes: Array[Byte]): DataFrame = {
-    docs
+  def decontaminateStream(docs: DataFrame,
+      verify: DataFrame => DataFrame): DataFrame =
+    verify(docs
       .select(col("doc_id"),
         explode(call_function("word_gram_hashes60",
           graft.functions.TextFunctions.tokens(col("text")), lit(8)))
-          .as("h"))
-      .filter(call_function("bloom_might_contain",
-        lit(bloomBytes), col("h")))
-      .join(evalGrams, Seq("h"), "left_semi")
+          .as("h")))
       .select("doc_id")
       .dropDuplicates("doc_id")
-  }
 
   /** One admitted document: its BPE token count and the source's
     * running total INCLUDING it (the batch q_text_mixture columns). */

@@ -1,100 +1,70 @@
 package graft.functions
 
-import java.io.ByteArrayOutputStream
-
-import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft.SparkSpec
 
-/** [[BloomMightContain]]: the no-false-negative contract, codegen vs
-  * interpreted agreement, null/type analysis behavior, and the SQL
-  * registration path. */
+/** The eval-set bloom path — Spark's `bloom_filter_agg` built on the
+  * executors, probed by `might_contain` through a scalar subquery: the
+  * no-false-negative contract, a bounded false positive rate, the
+  * empty-filter edge, the SQL registration, and exactness of the gate
+  * that relies on it. */
 class BloomMightContainSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def serialize(bf: BloomFilter): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    bf.writeTo(bos)
-    bos.toByteArray
-  }
+  /** A one-row frame holding the bloom of `keys`' `h` column, sized for
+    * `keys.size` items at 1% fpp. */
+  private def bloomOf(keys: DataFrame, n: Long): DataFrame =
+    keys.agg(call_function("bloom_filter_agg", col("h"), lit(n),
+      lit(BloomFilter.optimalNumOfBits(n, 0.01))))
 
-  private def filterOf(keys: Seq[Long]): Array[Byte] = {
-    val bf = BloomFilter.create(math.max(keys.size.toLong, 1L), 0.01)
-    keys.foreach(bf.putLong)
-    serialize(bf)
-  }
+  private def probe(bloom: DataFrame): Column =
+    call_function("might_contain", bloom.scalar(), col("h"))
 
   test("no false negatives: every inserted key probes true") {
-    val keys = (1L to 500L).map(_ * 1234567891L)
-    val bytes = filterOf(keys)
-    val hits = keys.toDF("h")
-      .filter(call_function("bloom_might_contain", lit(bytes), col("h")))
-      .count()
-    assert(hits == keys.size)
+    val keys = (1L to 500L).map(_ * 1234567891L).toDF("h")
+    val hits = keys.filter(probe(bloomOf(keys, 500L))).count()
+    assert(hits == 500L)
   }
 
   test("false positive rate is in the configured ballpark, not ~1") {
-    val inserted = (1L to 1000L).map(_ * 7919L)
-    val bytes = filterOf(inserted)
+    val inserted = (1L to 1000L).map(_ * 7919L).toDF("h")
     val probes = (1L to 20000L).map(_ * 104729L + 3L) // disjoint from inserted
-    val fp = probes.toDF("h")
-      .filter(call_function("bloom_might_contain", lit(bytes), col("h")))
+    val fp = probes.toDF("h").filter(probe(bloomOf(inserted, 1000L)))
       .count()
     assert(fp < probes.size / 10, s"fp=$fp of ${probes.size}")
   }
 
-  test("codegen and interpreted eval agree row-for-row") {
-    val bytes = filterOf(Seq(1L, 2L, 3L, 1000L))
-    val probe = (0L to 2000L).toDF("h")
-    val viaCodegen = probe.select(col("h"),
-      call_function("bloom_might_contain", lit(bytes), col("h")).as("m"))
-      .collect()
-    val deser = BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(bytes))
-    viaCodegen.foreach { r =>
-      assert(r.getBoolean(1) == deser.mightContainLong(r.getLong(0)),
-        s"h=${r.getLong(0)}")
-    }
+  test("empty eval set: null filter, evalHits passes no rows") {
+    val none = Seq.empty[Long].toDF("h")
+    assert(bloomOf(none, 1000L).head().isNullAt(0))
+    assert((1L to 100L).toDF("h").filter(probe(bloomOf(none, 1000L)))
+      .isEmpty)
+    // a corpus without src0 documents: the engine's eval artifacts
+    // are empty, and the probe over its windows must neither throw
+    // nor pass anything
+    val d = java.nio.file.Files.createTempDirectory("graft-noeval").toString
+    graft.Tables.documents(spark, "/root/testdata/sf0.001")
+      .filter(col("source") =!= "src0").limit(20)
+      .write.parquet(s"$d/documents.parquet")
+    val wins = graft.Tables.documents(spark, d)
+      .select(col("doc_id"), explode(call_function("word_gram_hashes60",
+        TextFunctions.tokens(col("text")), lit(8))).as("h"))
+    assert(!wins.isEmpty)
+    assert(graft.queries.TextQueries.evalHits(spark, d)(wins).isEmpty)
   }
 
-  test("null probe value yields null, not false") {
-    val bytes = filterOf(Seq(42L))
-    val r = Seq(Some(42L), None).toDF("h")
-      .select(call_function("bloom_might_contain", lit(bytes), col("h"))
-        .as("m"))
-      .collect()
-    assert(r(0).getBoolean(0))
-    assert(r(1).isNullAt(0))
-  }
-
-  test("non-foldable filter, null filter, and wrong types fail analysis") {
-    val df = Seq((Array[Byte](1, 2), 1L)).toDF("b", "h")
-    intercept[AnalysisException] {
-      df.select(call_function("bloom_might_contain", col("b"), col("h")))
-        .collect()
-    }
-    intercept[AnalysisException] {
-      df.select(call_function("bloom_might_contain",
-        lit(null).cast("binary"), col("h"))).collect()
-    }
-    intercept[AnalysisException] {
-      df.select(call_function("bloom_might_contain",
-        lit("notbinary"), col("h"))).collect()
-    }
-  }
-
-  test("registered for SQL via extensions/registry") {
-    val bytes = filterOf(Seq(7L))
+  test("SQL: might_contain over a bloom_filter_agg subquery") {
     Seq(7L, 8L).toDF("h").createOrReplaceTempView("bloom_probe_t")
-    val hex = bytes.map(b => f"$b%02x").mkString
     val rows = spark.sql(
-      s"SELECT bloom_might_contain(X'$hex', h) AS m FROM bloom_probe_t " +
-        "ORDER BY h").collect()
-    assert(rows.map(_.getBoolean(0)).toSeq == Seq(true, false) ||
-      rows(0).getBoolean(0)) // second row may rarely be a false positive
+      "SELECT h FROM bloom_probe_t WHERE might_contain((SELECT " +
+        "bloom_filter_agg(h, 100L, 1024L) FROM bloom_probe_t " +
+        "WHERE h = 7), h) ORDER BY h").collect().map(_.getLong(0))
+    // 8 may rarely be a false positive; 7 can never be missed
+    assert(rows.headOption.contains(7L), rows.mkString(","))
   }
 
   test("q_text_decontaminate_bloom equals the exact variant at sf0.001") {

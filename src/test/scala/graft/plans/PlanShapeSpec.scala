@@ -1065,6 +1065,83 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  /** Bytes of every literal in `p` and in its subquery plans. */
+  private def literalBytes(
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Long = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.unsafe.types.UTF8String
+    p.collectWithSubqueries { case n =>
+      n.expressions.map(_.collect {
+        case Literal(b: Array[Byte], _) => b.length.toLong
+        case Literal(u: UTF8String, _) => u.numBytes.toLong
+        case l: Literal => l.dataType.defaultSize.toLong
+      }.sum).sum
+    }.sum
+  }
+
+  /** The decontamination family's side data (the ~1.2 MB eval bloom)
+    * must reach its probes by reference: every plan its batch gates
+    * run, and the plans of its stream transforms over a static frame,
+    * carry under 64 KB of literals. */
+  test("decontamination plans carry under 64 KB of literals") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val d = "/root/testdata/sf0.001"
+    val limit = 64L * 1024
+    // a fresh session rebuilds the memoized eval artifacts, so the
+    // listener sees the plans that build them too
+    val s = spark.newSession()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, LogicalPlan)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(f -> qe.optimizedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    val gates = Seq("q_text_decontaminate_bloom",
+      "q_text_curate_incremental", "q_text_curate_cleaned")
+    val marker = 8675309L
+    def markerSeen = seen.asScala.exists(_._2.exists {
+      case r: org.apache.spark.sql.catalyst.plans.logical.Range =>
+        r.start == marker
+      case _ => false
+    })
+    try {
+      gates.foreach(g => graft.SparkEntry.queries(g)(s, d).collect())
+      // listener events arrive asynchronously, in order: wait for a
+      // marker action run after the gates
+      s.range(marker, marker + 1).collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally s.listenerManager.unregister(listener)
+    assert(markerSeen, "the listener never saw the marker action")
+    assert(seen.size > gates.size, "the gates' own actions were not seen")
+    // the stream transforms, over a static frame
+    val docs = graft.Tables.documents(s, d)
+      .filter(col("source") =!= "src0").select("doc_id", "text")
+    val verify = graft.queries.TextQueries.evalHits(s, d)
+    val wins = (qs: DataFrame) => qs.select(col("doc_id"),
+      explode(call_function("word_gram_hashes60",
+        graft.functions.TextFunctions.tokens(col("text")), lit(8))).as("h"))
+    val decont = graft.streaming.TextStreams.decontaminateStream(docs, verify)
+    val curate = graft.streaming.TextStreams.curateStream(docs,
+      qs => qs.select(col("doc_id"), lit(0.5).as("qq"),
+        lit(true).as("gopher_keep")),
+      qs => qs.select("doc_id").limit(0),
+      qs => verify(wins(qs)).select("doc_id"), 0.25).toDF()
+    val plans = seen.asScala.toSeq ++ Seq(
+      "decontaminateStream" -> decont.queryExecution.optimizedPlan,
+      "curateStream" -> curate.queryExecution.optimizedPlan)
+    val heavy = plans.map { case (f, p) => (f, literalBytes(p)) }
+      .filter(_._2 >= limit)
+    assert(heavy.isEmpty, s"plans inlining >= $limit bytes of literals " +
+      s"(action or transform, bytes): ${heavy.mkString(", ")}")
+  }
+
   test("q_text_curate plan: composes three memoized artifacts with " +
       "two doc_id-keyed joins — no new corpus-wide work") {
     withStaticPlans {
