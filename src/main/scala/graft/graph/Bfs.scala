@@ -56,12 +56,7 @@ object Bfs {
     */
   def hopDistances(pages: DataFrame, edges: DataFrame,
                    source: String, maxRounds: Int = 16,
-                   knownVertexCount: Option[Long] = None,
-                   // each round's UN-truncated frontier plan (before the
-                   // eager checkpoint) — plan-shape specs inspect it;
-                   // must not execute the plan (PageRank.onIterationPlan
-                   // contract)
-                   onRoundPlan: (Int, DataFrame) => Unit = (_, _) => ())
+                   knownVertexCount: Option[Long] = None)
       : DataFrame = {
     val spark = pages.sparkSession
     val (und, ownPin) = Components.undirectedView(edges)
@@ -106,7 +101,7 @@ object Bfs {
         .join(vhint(seen), Seq("page"), "left_anti")
         .filter(bump())
         .select(col("page"), lit(d).as("dist"))
-      onRoundPlan(d, plan)
+      graft.plans.LoopExec.roundPlan.value(d, plan)
       val next = plan.localCheckpoint(eager = true)
       frontierSize = frontierAcc.value
       // visited stays a lazy union of checkpointed level sets: ≤

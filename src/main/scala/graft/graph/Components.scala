@@ -62,29 +62,19 @@ object Components {
     // above the gate — see LoopExec
     graft.plans.LoopExec.withSmallLoopExec(pages.sparkSession, nv) { vhint =>
 
-    var labels = pages.select(col("page"), col("page").as("lbl"))
-    val rounds_ = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (i <- 1 to rounds) {
+    // the step reads `labels` twice: every round is written (measured
+    // in LoopExec.LeafEvery)
+    val result = graft.plans.LoopExec.rounds(rounds,
+        pages.select(col("page"), col("page").as("lbl")),
+        leafEvery = 1) { labels =>
       val neighbor = undirected
         .join(vhint(labels), undirected("dst") === labels("page"))
         .select(undirected("src").as("page"), col("lbl"))
-      // lazy truncation per round, one eager materialization at the end
-      // (same pattern and rationale as the PageRank loop)
-      labels = neighbor.unionAll(labels)
+      neighbor.unionAll(labels)
         .groupBy("page").agg(min("lbl").as("lbl"))
-        .localCheckpoint(eager = i == rounds)
-      if (i < rounds) rounds_ += labels
     }
-    // the final eager checkpoint materialized every lazily-marked round
-    // in the chain; only the last is ever read again — free the rest
-    // (Dataset.unpersist can't reach localCheckpoint blocks, see
-    // [[graft.plans.Lineage]])
-    rounds_.foreach(graft.plans.Lineage.freeLocalCheckpoint)
-    // the FINAL checkpoint is the per-invocation result — scratch, freed
-    // by the harness after the caller materializes (ADVICE r7)
-    graft.plans.Lineage.registerScratch(labels)
     if (ownPin) undirected.unpersist()
-    labels.select(col("page"), col("lbl").as("comp"))
+    result.select(col("page"), col("lbl").as("comp"))
     } // withSmallLoopExec
   }
 
@@ -134,11 +124,8 @@ object Components {
       if (changed) changedAcc.add(1L); true
     }.asNondeterministic()
 
-    var labels = pages.select(col("page"), col("page").as("lbl"))
-      .localCheckpoint(eager = true)
-    var round = 0
-    var changed = 1L
-    while (changed > 0 && round < maxRounds) {
+    val result = graft.plans.LoopExec.untilStable(maxRounds,
+        pages.select(col("page"), col("page").as("lbl"))) { labels =>
       val neighbor = undirected
         .join(vhint(labels), undirected("dst") === labels("page"))
         .select(undirected("src").as("page"), col("lbl"))
@@ -149,7 +136,7 @@ object Components {
         .join(vhint(labels.as("l2")), col("l1.lbl") === col("l2.page"))
         .select(col("l1.page").as("page"), col("l2.lbl").as("lbl"))
       changedAcc.reset()
-      val next = neighbor.unionAll(jump).unionAll(labels)
+      neighbor.unionAll(jump).unionAll(labels)
         .groupBy("page").agg(min("lbl").as("lbl"))
         // left join (not inner): a page emitted by the agg but absent
         // from the old vector must count as changed, not vanish;
@@ -158,18 +145,9 @@ object Components {
           Seq("page"), "left")
         .filter(bump(!(col("lbl") <=> col("prev_lbl"))))
         .select(col("page"), col("lbl"))
-        .localCheckpoint(eager = true)
-      changed = changedAcc.value
-      // free the PREVIOUS round's checkpoint blocks for real —
-      // Dataset.unpersist can't reach them ([[graft.plans.Lineage]]),
-      // so this loop used to leak one |V| block set per round
-      graft.plans.Lineage.freeLocalCheckpoint(labels)
-      labels = next
-      round += 1
-    }
-    graft.plans.Lineage.registerScratch(labels) // final result = scratch
+    }(() => changedAcc.value > 0)
     if (ownPin) undirected.unpersist()
-    labels.select(col("page"), col("lbl").as("comp"))
+    result.select(col("page"), col("lbl").as("comp"))
     } // withSmallLoopExec
   }
 
@@ -256,30 +234,18 @@ object Components {
       inNext
     }.asNondeterministic()
 
-    var e = edges.select(col("src").as("a"), col("dst").as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(eager = true)
-    var round = 0
-    var changed = true
-    while (changed && round < maxRounds) {
+    val contracted = graft.plans.LoopExec.untilStable(maxRounds,
+        edges.select(col("src").as("a"), col("dst").as("b"))
+          .filter(col("a") =!= col("b")).distinct()) { e =>
       missNext.reset(); missPrev.reset()
-      val next =
-        star(star(e, large = true, dedup = false), large = false,
+      star(star(e, large = true, dedup = false), large = false,
           dedup = true)
-          .withColumn("in_next", lit(true))
-          .join(e.select(col("a"), col("b"), lit(true).as("in_prev")),
-            Seq("a", "b"), "full_outer")
-          .filter(bump(col("in_next").isNotNull, col("in_prev").isNotNull))
-          .select(col("a"), col("b"))
-          .localCheckpoint(eager = true)
-      changed = missNext.value > 0 || missPrev.value > 0
-      // same rationale as [[components]]: actually free the previous
-      // round's checkpoint blocks
-      graft.plans.Lineage.freeLocalCheckpoint(e)
-      e = next
-      round += 1
-    }
-    graft.plans.Lineage.registerScratch(e) // final contracted set = scratch
+        .withColumn("in_next", lit(true))
+        .join(e.select(col("a"), col("b"), lit(true).as("in_prev")),
+          Seq("a", "b"), "full_outer")
+        .filter(bump(col("in_next").isNotNull, col("in_prev").isNotNull))
+        .select(col("a"), col("b"))
+    }(() => missNext.value > 0 || missPrev.value > 0)
     // stars: (member → root); roots and isolated vertices map to self.
     // min() per page: if maxRounds is exhausted BEFORE convergence a
     // vertex can still hold edges to several candidate roots, and a
@@ -288,7 +254,7 @@ object Components {
     // degrade to deterministic-but-unconverged, like components();
     // ADVICE r4 item 2). At convergence each page has one root and the
     // partial agg is free.
-    val mapping = e.select(col("a").as("page"), col("b").as("root"))
+    val mapping = contracted.select(col("a").as("page"), col("b").as("root"))
       .groupBy("page").agg(min("root").as("root"))
     val out = pages
       .join(mapping, Seq("page"), "left")

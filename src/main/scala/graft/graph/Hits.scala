@@ -84,7 +84,6 @@ object Hits {
     // 1e-6-rounded gates absorb the small/above-gate ulp wiggle (the
     // PageRank.run rationale).
     graft.plans.LoopExec.withSmallLoopExec(spark, n) { vhint =>
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
     val zero = p.select(col("page"), lit(0.0).as("v"))
     val intermediates = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
@@ -106,15 +105,9 @@ object Hits {
       auths = aCached
       hubs =
         if (i == iters) h
-        else if (i % TruncateEvery == 0) {
-          // hard leaf: bounds cache nesting for plan rendering (scaladoc);
-          // scratch — dead once the final materializes (ADVICE r7)
-          val t =
-            if (reliable) h.checkpoint(eager = true)
-            else h.localCheckpoint(eager = true)
-          graft.plans.Lineage.registerScratch(t)
-          t
-        }
+        // hard leaf: bounds cache nesting for plan rendering (scaladoc);
+        // scratch — dead once the final materializes (ADVICE r7)
+        else if (i % TruncateEvery == 0) graft.plans.LoopExec.materialize(h)
         else {
           val c = h.persist(StorageLevel.MEMORY_AND_DISK)
           intermediates += c
@@ -128,14 +121,14 @@ object Hits {
     val norms = joined.agg(
       sqrt(sum(col("auth") * col("auth"))).as("na"),
       sqrt(sum(col("hub") * col("hub"))).as("nh"))
-    val out = joined.crossJoin(broadcast(norms))
-      .select(col("page"),
-        when(col("na") === 0.0, 0.0).otherwise(col("auth") / col("na"))
-          .as("auth"),
-        when(col("nh") === 0.0, 0.0).otherwise(col("hub") / col("nh"))
-          .as("hub"))
-      .localCheckpoint(eager = true)
-    graft.plans.Lineage.registerScratch(out) // memoized callers pin
+    // scratch; memoized callers pin
+    val out = graft.plans.Lineage.scratchCheckpoint(
+      joined.crossJoin(broadcast(norms))
+        .select(col("page"),
+          when(col("na") === 0.0, 0.0).otherwise(col("auth") / col("na"))
+            .as("auth"),
+          when(col("nh") === 0.0, 0.0).otherwise(col("hub") / col("nh"))
+            .as("hub")))
     intermediates.foreach(_.unpersist(blocking = false))
     if (eOwn) e.unpersist()
     if (pOwn) p.unpersist()

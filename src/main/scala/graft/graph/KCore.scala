@@ -35,10 +35,6 @@ object KCore {
     *         peeling, no tie-breaking anywhere).
     */
   def peel(edges: DataFrame, k: Int, rounds: Int,
-           // each round's UN-truncated survivor plan (before the eager
-           // checkpoint) — plan-shape specs inspect it; must not
-           // execute the plan (PageRank.onIterationPlan contract)
-           onRoundPlan: (Int, DataFrame) => Unit = (_, _) => (),
            // vertex-count bound for the small-state loop scope
            // (LoopExec); None (edges-only API default) = scope disabled
            knownVertexCount: Option[Long] = None)
@@ -72,26 +68,21 @@ object KCore {
 
     // round-0 vertex set: every edge endpoint (an isolated vertex has
     // degree 0 < k and would be peeled in round 1 anyway)
-    var v = undLoop.select(col("src").as("v")).distinct()
-      .localCheckpoint(eager = true)
-    for (r <- 1 to rounds) {
-      val surviving = undLoop
+    val survivors = graft.plans.LoopExec.untilStable(rounds,
+        undLoop.select(col("src").as("v")).distinct()) { v =>
+      undLoop
         .join(v, undLoop("src") === v("v"), "left_semi")
         .join(v.select(col("v").as("v2")), undLoop("dst") === col("v2"),
           "left_semi")
-      val plan = surviving.groupBy(col("src"))
+        .groupBy(col("src"))
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("src").as("v"))
-      onRoundPlan(r, plan)
-      val next = plan.localCheckpoint(eager = true)
-      graft.plans.Lineage.freeLocalCheckpoint(v)
-      v = next
-    }
+    }(() => true)
     val finalEdges = undLoop
-      .join(v, undLoop("src") === v("v"), "left_semi")
-      .join(v.select(col("v").as("v2")), undLoop("dst") === col("v2"),
-        "left_semi")
+      .join(survivors, undLoop("src") === survivors("v"), "left_semi")
+      .join(survivors.select(col("v").as("v2")),
+        undLoop("dst") === col("v2"), "left_semi")
     // a survivor whose last neighbors were peeled in the final round has
     // no induced edge and is absent here — the oracle's final unrolled
     // aggregation has the identical shape, so the contract matches
@@ -99,7 +90,10 @@ object KCore {
       finalEdges.groupBy(col("src").as("page"))
         .agg(count(lit(1)).as("deg")))
     if (ownPin) und.unpersist()
-    graft.plans.Lineage.freeLocalCheckpoint(v)
+    // peel owns the survivors: they are dead once `out` is written, so
+    // free them now; untilStable's scratch registration only covers
+    // loops that return their result
+    graft.plans.Lineage.freeLocalCheckpoint(survivors)
     out
     } // withSmallLoopExec
   }

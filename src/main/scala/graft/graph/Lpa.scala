@@ -29,8 +29,9 @@ import org.apache.spark.sql.functions._
   * labels collapse locally — then a second partial-agg'd struct-min
   * picks the winner per vertex. Isolated vertices keep their own label
   * via the left join against the previous vector (same shuffle key).
-  * No driver-side state; lineage lazily truncated per round with one
-  * eager materialization at the end (the PageRank loop pattern).
+  * No driver-side state; rounds run through
+  * [[graft.plans.LoopExec.rounds]], written every 2 rounds (the step
+  * reads the label vector twice — see [[graft.plans.LoopExec.LeafEvery]]).
   */
 object Lpa {
 
@@ -39,21 +40,20 @@ object Lpa {
     *              dst→src of the UNDIRECTED view (built here, persisted
     *              for the loop unless the caller already cached it)
     * @param rounds synchronous rounds (the oracle unrolls the same)
-    * @param onRoundPlan plan-shape spec hook: each round's UN-truncated
-    *                    label vector (must not execute the plan)
     * @return DataFrame["page", "lbl"] — the label after `rounds`
     *         rounds; vertices sharing a label form a community */
   def communities(pages: DataFrame, edges: DataFrame, rounds: Int,
-      onRoundPlan: (Int, DataFrame) => Unit = (_, _) => (),
       knownVertexCount: Option[Long] = None): DataFrame = {
     val (und, ownPin) = Components.undirectedView(edges)
     // small-state loop scope, |V|-gated (counted when unknown — the
     // labelPropagation contract); no-op above the gate — LoopExec
     val nv = knownVertexCount.getOrElse(pages.count())
     graft.plans.LoopExec.withSmallLoopExec(pages.sparkSession, nv) { _ =>
-    var labels = pages.select(col("page"), col("page").as("lbl"))
-    val scratch = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (r <- 1 to rounds) {
+    // the step reads `labels` twice: a write every 2 rounds bounds the
+    // cache nesting (measured in LoopExec.LeafEvery)
+    val result = graft.plans.LoopExec.rounds(rounds,
+        pages.select(col("page"), col("page").as("lbl")),
+        leafEvery = 2) { labels =>
       val votes = und
         .join(labels.select(col("page").as("nb"), col("lbl")),
           und("dst") === col("nb"))
@@ -63,17 +63,12 @@ object Lpa {
         .groupBy(col("page"))
         .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l"))).as("b"))
         .select(col("page"), col("b.l").as("winner"))
-      val next = labels.join(best, Seq("page"), "left")
+      labels.join(best, Seq("page"), "left")
         .select(col("page"),
           coalesce(col("winner"), col("lbl")).as("lbl"))
-      onRoundPlan(r, next)
-      labels = next.localCheckpoint(eager = r == rounds)
-      if (r < rounds) scratch += labels
     }
-    scratch.foreach(graft.plans.Lineage.freeLocalCheckpoint)
-    graft.plans.Lineage.registerScratch(labels)
     if (ownPin) und.unpersist()
-    labels
+    result
     } // withSmallLoopExec
   }
 }

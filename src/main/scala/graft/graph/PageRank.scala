@@ -36,13 +36,11 @@ import org.apache.spark.storage.StorageLevel
   * iteration (no stats), so the size gate of [[graft.plans.LoopExec]]
   * hints it explicitly from the known n.
   *
-  * Fault tolerance at scale: intermediate iterations truncate lineage
-  * with lazy `persist()` (recoverable through the cached chain — and,
-  * unlike a lazily-MARKED checkpoint, free of the doCheckpoint lock
-  * inversion a broadcast-exchange thread can deadlock on; see the loop
-  * comment). The FINAL vector is checkpointed eagerly: reliable `checkpoint()`
-  * when the session has a checkpoint dir configured
-  * (`spark.sparkContext.setCheckpointDir`, ADVICE r1 item 3),
+  * Fault tolerance at scale: the loop runs through
+  * [[graft.plans.LoopExec.rounds]] — intermediate iterations truncate
+  * lineage with lazy `persist()`, and the FINAL vector is written
+  * eagerly, reliably when the session has a checkpoint dir
+  * (`spark.sparkContext.setCheckpointDir`, ADVICE r1 item 3) and to
   * executor-local blocks otherwise; production runs should always set
   * a dir.
   */
@@ -57,7 +55,7 @@ object PageRank {
     * @param onIteration called after each iteration with (i, ranks-so-far);
     * the reference's job12 (rank snapshot after iteration 1 only,
     * PageRank.java:480-487) plugs in here — consuming the DataFrame
-    * inside the hook materializes that iteration's checkpoint, exactly
+    * inside the hook materializes that iteration's cache, exactly
     * like the reference's extra blocking MR job at that point.
     * @param redistributeDangling the reference LOSES the rank mass of
     * pages with no out-links each iteration (PageRank.java:305-316) —
@@ -77,8 +75,8 @@ object PageRank {
     * passed to `onIteration` carry the extra internal `dang` column.
     * @param teleportTo personalized PageRank: when set, ALL teleport
     * mass lands on this page (r0 = the source's indicator vector, the
-    * per-iteration teleport term is resetProb·[page == src] instead of
-    * resetProb/N) — ranks become proximity-to-src scores, the standard
+    * per-iteration teleport term is ResetProb·[page == src] instead of
+    * ResetProb/N) — ranks become proximity-to-src scores, the standard
     * seeded-relevance variant. Same loop, same shuffles; the teleport
     * is a per-row CASE, not an extra join. Mutually exclusive with
     * `redistributeDangling` (personalized dangling mass conventionally
@@ -107,16 +105,9 @@ object PageRank {
     * @return DataFrame["page", "rank"] — one row per page.
     */
   def run(pages: DataFrame, edges: DataFrame, iters: Int = DefaultIters,
-          damping: Double = Damping, resetProb: Double = ResetProb,
           onIteration: (Int, DataFrame) => Unit = (_, _) => (),
           redistributeDangling: Boolean = false,
           teleportTo: Option[String] = None,
-          // called with each iteration's UN-truncated update plan (the
-          // `next` DataFrame BEFORE persist/checkpoint) — plan-shape
-          // specs inspect it; `onIteration` can't serve this purpose
-          // because the redistribute branch hands it an already
-          // checkpointed leaf. Must not execute the plan.
-          onIterationPlan: (Int, DataFrame) => Unit = (_, _) => (),
           weightCol: Option[String] = None,
           initRanks: Option[DataFrame] = None):
       DataFrame = {
@@ -181,7 +172,6 @@ object PageRank {
     val edgesWithDeg = edges.join(vhint(deg), "src")
       .persist(StorageLevel.MEMORY_AND_DISK) // first iteration fills the cache
 
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
     // zero-contribution row per page: unioned into the contribution
     // aggregation so every page is a group key — this FUSES the
     // reference's `$%$` keep-alive trick (PageRank.java:281,317-319)
@@ -208,8 +198,7 @@ object PageRank {
         .select(p("page").as("dst"), lit(0.0).as("contrib"),
           when(deg("src").isNull, lit(1.0)).otherwise(lit(0.0)).as("dang"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    val intermediates = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var ranks = initRanks match {
+    val init = initRanks match {
       case Some(r0) => r0.select(col("page"), col("rank"))
       case None => teleportTo match {
         case Some(src) => p.select(col("page"),
@@ -220,25 +209,26 @@ object PageRank {
           (lit(1.0) / lit(n)).as("rank"), col("dang"))
       }
     }
-    for (i <- 1 to iters) {
+    val result = graft.plans.LoopExec.rounds(iters, init, onIteration) {
+        ranks =>
       val contribJoin = edgesWithDeg
         .join(vhint(ranks), edgesWithDeg("src") === ranks("page"))
-      val next = if (!redistributeDangling) {
+      if (!redistributeDangling) {
         val contribs = contribJoin
           .select(col("dst"), contribExpr.as("contrib"))
         val mass = contribs.unionAll(zero)
           .groupBy("dst").agg(sum("contrib").as("mass"))
-        // teleport from the exact resetProb constant, NOT 1 - damping:
+        // teleport from the exact ResetProb constant, NOT 1 - Damping:
         // (1 - 0.85) is 0.15000000000000002 in double fp, while the
         // reference, the DuckDB oracle, and GraphX all use exact 0.15
         // (ADVICE r2 item 1 — keeps parity without relying on rounding).
         val teleport = teleportTo match {
           case Some(src) =>
-            when(col("dst") === lit(src), lit(resetProb)).otherwise(lit(0.0))
-          case None => lit(resetProb / n)
+            when(col("dst") === lit(src), lit(ResetProb)).otherwise(lit(0.0))
+          case None => lit(ResetProb / n)
         }
         mass.select(col("dst").as("page"),
-          (teleport + lit(damping) * col("mass")).as("rank"))
+          (teleport + lit(Damping) * col("mass")).as("rank"))
       }
       else {
         // Σ rank over dangling pages = sum(rank·dang) over the whole
@@ -266,65 +256,17 @@ object PageRank {
         val mass = contribs.unionAll(zero).groupBy("dst")
           .agg(sum("contrib").as("mass"), max("dang").as("dang"))
         mass.select(col("dst").as("page"),
-            (lit(resetProb / n) +
-              lit(damping) * (col("mass") + lit(dm) / lit(n))).as("rank"),
+            (lit(ResetProb / n) +
+              lit(Damping) * (col("mass") + lit(dm) / lit(n))).as("rank"),
             col("dang"))
       }
-      onIterationPlan(i, next)
-      // Truncate lineage EVERY iteration but materialize only ONCE, at the
-      // final iteration. Intermediates use LAZY persist(): the cached
-      // Dataset substitutes as an InMemoryRelation LEAF in the next
-      // iteration's plan (CacheManager.useCachedData), so Catalyst never
-      // sees an 8-deep accumulated plan, yet nothing executes until the
-      // final action fills the whole chain in one pass.
-      // Eager-per-iteration was 8 separate actions — each paying AQE
-      // re-planning, broadcast build, and a full scheduler sync barrier
-      // (~4× slower end-to-end, measured at sf0.1: 17 s eager vs 4.5 s
-      // lazy). NOT checkpoint(eager = false): an RDD left in the
-      // checkpoint-MARKED state deadlocks when a broadcast-exchange
-      // thread (the rank-vector or dangling-mass broadcast) collects
-      // through the marked lineage concurrently with the main action's
-      // doCheckpoint — observed in the wild as markCheckpointed (held by
-      // dag-scheduler-event-loop) vs RDDCheckpointData (held by
-      // broadcast-exchange) lock inversion, hanging the driver. persist
-      // involves no checkpoint monitors; only the
-      // FINAL iteration is checkpointed, eagerly, on the main thread.
-      // Reliable checkpoint
-      // (HDFS/alluxio) when a dir is configured, executor-local blocks
-      // otherwise (local runs only). The intermediate caches are |V|
-      // rows each and dropped once the result is materialized.
-      // The redistribute branch needs the per-iteration persist too: the
-      // next iteration's dangling-mass scalar re-reads the vector, so
-      // an un-persisted iteration would recompute its whole chain for
-      // that 1-row aggregate. Since round 21 (dm as a driver scalar,
-      // single `ranks` reference per iteration) the branch no longer
-      // needs its old every-iteration EAGER checkpoint — the plan
-      // grows linearly like the plain branch and the scalar agg itself
-      // fills each cache in turn.
-      ranks =
-        if (i == iters) {
-          val fin =
-            if (reliable) next.checkpoint(eager = true)
-            else next.localCheckpoint(eager = true)
-          // scratch unless the caller memoizes (GraphCatalog pins);
-          // registerScratch is a no-op for reliable checkpoints
-          graft.plans.Lineage.registerScratch(fin)
-          intermediates.foreach(_.unpersist(blocking = false))
-          fin
-        }
-        else {
-          val c = next.persist(StorageLevel.MEMORY_AND_DISK)
-          intermediates += c
-          c
-        }
-      onIteration(i, ranks)
     }
     edgesWithDeg.unpersist()
     if (redistributeDangling) zero.unpersist()
     if (pOwn) p.unpersist()
     // drop the internal dangling indicator (narrow projection over the
     // final checkpoint leaf — free)
-    if (redistributeDangling) ranks.select("page", "rank") else ranks
+    if (redistributeDangling) result.select("page", "rank") else result
     } // withSmallLoopExec
   }
 

@@ -44,7 +44,6 @@ object PageRankGraphX {
     * `false` keeps reference parity (mass lost).
     */
   def run(pages: DataFrame, edges: DataFrame, iters: Int = PageRank.DefaultIters,
-          resetProb: Double = PageRank.ResetProb,
           normalized: Boolean = false): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
@@ -118,10 +117,10 @@ object PageRankGraphX {
         g0.partitionBy(org.apache.spark.graphx.PartitionStrategy.EdgePartition2D)
       else g0
     val n = nIds.toDouble // |V| already counted by the id materialization
-    // normalized = false by default — see class doc; resetProb passed
+    // normalized = false by default — see class doc; ResetProb passed
     // exactly (0.15), not recomputed as 1 - 0.85 (fp: 0.15000000000000002).
     val ranked = GXPageRank.runWithOptions(
-      g, numIter = iters, resetProb = resetProb, srcId = None,
+      g, numIter = iters, resetProb = PageRank.ResetProb, srcId = None,
       normalized = normalized).vertices
 
     // map ids back to pages with a DataFrame join (AQE broadcasts the
@@ -134,12 +133,9 @@ object PageRankGraphX {
     // materialize the result BEFORE dropping the pinned ids: `out`
     // otherwise keeps a lineage through the nondeterministic id column,
     // and an unpersist+recompute would silently corrupt the mapping
-    val out =
-      if (reliable) out0.checkpoint(eager = true)
-      else out0.localCheckpoint(eager = true)
-    // per-invocation scratch unless memoized (GraphCatalog.wikiRanks
-    // pins); no-op for the reliable-checkpoint branch (ADVICE r7)
-    graft.plans.Lineage.registerScratch(out)
+    // (reliably when a dir is set; scratch unless memoized —
+    // GraphCatalog.wikiRanks pins)
+    val out = graft.plans.LoopExec.materialize(out0)
     edgeIds.unpersist()
     if (!reliable) ids.unpersist()
     // `out` is self-contained (its own checkpoint) — the ids checkpoint

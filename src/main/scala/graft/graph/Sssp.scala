@@ -44,13 +44,9 @@ object Sssp {
     *              weights must be non-negative longs
     * @param source the source vertex id (must type-match src/dst)
     * @param rounds relaxation rounds (the oracle unrolls the same count)
-    * @param onRoundPlan plan-shape spec hook: receives each round's
-    *                    UN-truncated new distance vector (must not
-    *                    execute the plan — the PageRank contract)
     * @return DataFrame["page", "dist"] — vertices reachable within
     *         `rounds` relaxation rounds and their shortest known cost */
   def distances(edges: DataFrame, source: Any, rounds: Int,
-      onRoundPlan: (Int, DataFrame) => Unit = (_, _) => (),
       // vertex-count bound for the small-state loop scope (LoopExec);
       // None (the edges-only API default) = scope disabled — there is
       // no vertex frame here to count
@@ -69,7 +65,7 @@ object Sssp {
           (col("f.dist") + col("e.w")).as("dist"))
       val newDist = dist.unionAll(cand)
         .groupBy("page").agg(min("dist").as("dist"))
-      onRoundPlan(r, newDist)
+      graft.plans.LoopExec.roundPlan.value(r, newDist)
       val next = newDist.localCheckpoint(eager = r == rounds)
       if (r < rounds) {
         // changed rows only: the next round's relax frontier (the final

@@ -1,9 +1,11 @@
 package graft.plans
 
+import scala.collection.mutable.ArrayBuffer
 import scala.util.DynamicVariable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.storage.StorageLevel
 
 /** The one size gate of the iterative graph/training loops (PageRank,
   * HITS, components, BFS, SSSP, LPA, k-core, the BPE merge trainer):
@@ -48,6 +50,20 @@ import org.apache.spark.sql.functions.broadcast
   * session mid-loop — the assumption the streaming gates already make
   * when they pin state-store partitions (EventQueries). Catalog
   * queries run loops sequentially.
+  *
+  * Also the one iteration driver (the reference's D1 loop): [[rounds]]
+  * and [[untilStable]] own how a round is truncated, which round
+  * materializes, where the result is written ([[materialize]]), who
+  * frees the intermediate rounds and who owns the result. Four loops
+  * keep their own bookkeeping, because their state is not one frame
+  * replaced per round:
+  *   - BFS keeps every level set alive: its result is their union.
+  *   - SSSP truncates a second frame, the relax frontier, each round.
+  *   - HITS carries two vectors and hard-truncates every
+  *     [[graft.graph.Hits.TruncateEvery]] iterations to bound cache
+  *     nesting in plan rendering; that leaf is a [[materialize]] call.
+  *   - The BPE merge trainer collects a driver value every merge.
+  * BFS and SSSP hand each round's plan to [[roundPlan]] themselves.
   */
 object LoopExec {
 
@@ -135,4 +151,114 @@ object LoopExec {
         savedSp.fold(spark.conf.unset(spKey))(spark.conf.set(spKey, _))
       }
     }
+
+  /** Receives each round's UN-truncated plan (round, frame) — a no-op
+    * but in plan-shape specs, which bind it to inspect the plans. Must
+    * not execute the frame. */
+  private[graft] val roundPlan =
+    new DynamicVariable[(Int, DataFrame) => Unit]((_, _) => ())
+
+  /** Eagerly write `df` where a loop's result belongs — a reliable
+    * `checkpoint` when the context has a checkpoint dir (it survives
+    * executor loss; production runs should set one), executor-local
+    * blocks otherwise — and register it as scratch: the harness frees
+    * it after the query unless a memoizing caller pins it. */
+  def materialize(df: DataFrame): DataFrame = {
+    val out =
+      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+        df.checkpoint(eager = true)
+      else df.localCheckpoint(eager = true)
+    Lineage.registerScratch(out)
+    out
+  }
+
+  /** [[rounds]]' default cadence: write the chain eagerly every this
+    * many rounds. A lazy `persist` chain nests each round's cached plan
+    * inside the next; for a step that reads its state once (PageRank)
+    * that nesting grows by one level a round, and 8 keeps PageRank's
+    * default 8 iterations one action. A step that reads its state
+    * TWICE (label propagation, LPA) doubles the nesting every round,
+    * and above the gate AQE renders each level twice again: at cadence
+    * 8, 8 rounds above the gate took labelPropagation 10–12 s and ~2 GB
+    * of driver heap on a 5-page graph (1.9–2.3 s with the lazy
+    * `localCheckpoint` loop it had), and 20 rounds ran LPA out of heap.
+    * So those loops pass their own cadence, measured at 1, 2 and 8 over
+    * 3–20 rounds on both sides of the gate: labelPropagation 1 (its old
+    * times everywhere), LPA 2. LPA at 1 writes round 1 before round 2
+    * is planned; the filled edge-view cache then shows the planner a
+    * small edge list, which it broadcasts, and round 2 drops from 3
+    * shuffles to 2 (PlanShapeSpec pins 3). */
+  val LeafEvery = 8
+
+  /** Fixed-round loop with one action per `leafEvery` rounds: `n`
+    * rounds of `step` from `init`, every `leafEvery`-th and the last
+    * one [[materialize]]d.
+    * `onRound(i, state)` sees each round's truncated state (consuming
+    * it executes the chain so far; read it within the call, since a
+    * later write frees it). `n = 0` returns `init` unexecuted.
+    *
+    * Other rounds truncate lineage with LAZY `persist`: the cached
+    * frame stands in as an InMemoryRelation leaf in the next round's
+    * plan, so Catalyst never re-optimizes an n-deep plan, yet nothing
+    * runs until the next write fills the whole chain in one pass.
+    * Eager rounds were n separate actions, each paying re-planning, a
+    * broadcast build and a scheduler barrier (PageRank at sf0.1: 17 s
+    * eager vs 4.5 s lazy). Not a lazily MARKED checkpoint either: an
+    * RDD left checkpoint-marked deadlocks when a broadcast-exchange
+    * thread collects through it while the main action runs
+    * doCheckpoint (markCheckpointed, held by the DAG scheduler loop, vs
+    * RDDCheckpointData, held by the broadcast thread). `persist` takes
+    * no checkpoint monitor, and every write runs eagerly on the calling
+    * thread. Each write drops the caches and the earlier write it
+    * made dead. */
+  def rounds(n: Int, init: DataFrame,
+      onRound: (Int, DataFrame) => Unit = (_, _) => (),
+      leafEvery: Int = LeafEvery)(
+      step: DataFrame => DataFrame): DataFrame = {
+    val cached = ArrayBuffer.empty[DataFrame]
+    var written: Option[DataFrame] = None
+    var state = init
+    for (i <- 1 to n) {
+      val next = step(state)
+      roundPlan.value(i, next)
+      if (i < n && i % leafEvery != 0) {
+        state = next.persist(StorageLevel.MEMORY_AND_DISK)
+        cached += state
+      } else {
+        state = materialize(next)
+        cached.foreach(_.unpersist(blocking = false))
+        cached.clear()
+        written.foreach(Lineage.freeLocalCheckpoint)
+        written = Some(state)
+      }
+      onRound(i, state)
+    }
+    state
+  }
+
+  /** Convergence loop of EAGER rounds: `init` and every round are
+    * `localCheckpoint(eager = true)`, and each round frees the state
+    * it replaced ([[Lineage.freeLocalCheckpoint]] — `unpersist` cannot
+    * reach checkpoint blocks). Stops once `changed()`, read after the
+    * round materialized, is false, or after `maxRounds` rounds; the
+    * last state is registered as scratch. Eager because the stop test
+    * reads what the round's own action counted (an accumulator bumped
+    * during the write), so every round is one action anyway. */
+  def untilStable(maxRounds: Int, init: DataFrame)(
+      step: DataFrame => DataFrame)(changed: () => Boolean): DataFrame = {
+    var state = init.localCheckpoint(eager = true)
+    var round = 0
+    var more = true
+    while (more && round < maxRounds) {
+      round += 1
+      val plan = step(state)
+      roundPlan.value(round, plan)
+      val next = plan.localCheckpoint(eager = true)
+      more = changed()
+      Lineage.freeLocalCheckpoint(state)
+      state = next
+    }
+    Lineage.registerScratch(state)
+    state
+  }
 }

@@ -800,7 +800,7 @@ object TextQueries {
     * TextBpeTrainSpec (replay equality, plan-depth cadence pin,
     * learned-table application through BpeSymbolsUtil's
     * alternate-table seam). `onSyms` observes the symbol frame after
-    * each merge, the PageRank `onIterationPlan` pattern. */
+    * each merge, the PageRank `onIteration` pattern. */
   private[graft] def bpeTrain(docs: DataFrame, k: Int,
       onSyms: (Int, DataFrame) => Unit = (_, _) => ()): DataFrame =
     bpeTrainLoop(wordSymVocab(docs), k, BpeBatchM, onSyms)

@@ -40,19 +40,22 @@ class ReliableCheckpointSpec extends SparkSpec {
     assert(written > 0, s"no checkpoint files under $dir")
   }
 
+  /** The `rdd-*` checkpoint directories under the context's checkpoint
+    * dir, which is set here when no earlier test set it. */
+  private def rddDirs(): Set[String] = {
+    val sc = spark.sparkContext
+    if (sc.getCheckpointDir.isEmpty)
+      sc.setCheckpointDir(Files.createTempDirectory("graft-chk-gx").toString)
+    val ckDir = new org.apache.hadoop.fs.Path(sc.getCheckpointDir.get)
+    val fs = ckDir.getFileSystem(sc.hadoopConfiguration)
+    if (!fs.exists(ckDir)) Set.empty
+    else fs.listStatus(ckDir).map(_.getPath.getName)
+      .filter(_.startsWith("rdd-")).toSet
+  }
+
   test("GraphX reliable run deletes its ids checkpoint, keeps the result's") {
     val s = spark
     import s.implicits._
-    if (s.sparkContext.getCheckpointDir.isEmpty)
-      s.sparkContext.setCheckpointDir(
-        Files.createTempDirectory("graft-chk-gx").toString)
-    val ckDir = new org.apache.hadoop.fs.Path(
-      s.sparkContext.getCheckpointDir.get)
-    val fs = ckDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def rddDirs(): Set[String] =
-      if (!fs.exists(ckDir)) Set.empty
-      else fs.listStatus(ckDir).map(_.getPath.getName)
-        .filter(_.startsWith("rdd-")).toSet
     val before = rddDirs()
     val pages = Seq("a", "b", "c", "d").toDF("page")
     val edges = Seq("a" -> "b", "b" -> "c", "c" -> "a", "a" -> "d")
@@ -64,5 +67,21 @@ class ReliableCheckpointSpec extends SparkSpec {
     val added = rddDirs() -- before
     assert(added.size == 1,
       s"expected exactly the result checkpoint to remain, got $added")
+  }
+
+  test("label propagation writes its final labels as a reliable " +
+      "checkpoint") {
+    val s = spark
+    import s.implicits._
+    val before = rddDirs()
+    val pages = Seq("a", "b", "c", "d").toDF("page")
+    val edges = Seq("a" -> "b", "b" -> "c", "c" -> "a", "a" -> "d")
+      .toDF("src", "dst")
+    val comps = Components.labelPropagation(pages, edges, rounds = 2)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    // every page is one undirected hop from "a", the minimum label
+    assert(comps == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a"))
+    assert((rddDirs() -- before).nonEmpty,
+      "the final label vector wrote no checkpoint directory")
   }
 }

@@ -1,7 +1,11 @@
 package graft.plans
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
 import graft.graph.{Bfs, Components, Hits, PageRank}
@@ -11,7 +15,8 @@ import graft.graph.{Bfs, Components, Hits, PageRank}
   * partition count, and — the part that matters — result invariance of
   * every loop on the small-state path vs the above-gate path (shuffled
   * joins, session AQE and partitioning), which the catalog never runs
-  * at test scale. */
+  * at test scale. Also the block hygiene of the two iteration drivers:
+  * what they leave persisted, and when they run a round at all. */
 class LoopExecSpec extends SparkSpec {
 
   private val AqeKey = "spark.sql.adaptive.enabled"
@@ -141,4 +146,75 @@ class LoopExecSpec extends SparkSpec {
     test(s"small-state path ≡ above-gate path: $name") {
       assertPathsAgree(exact)(loop)
     }
+
+  // ---- the iteration drivers ----
+
+  private def persisted(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def checkpointLeaves(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case l: LogicalRDD if l.rdd.isCheckpointed => l.rdd.id
+    }.toSet
+
+  private def plusOne(df: DataFrame): DataFrame =
+    df.select((col("id") + 1).as("id"))
+
+  private def ids(df: DataFrame): Seq[Long] =
+    df.collect().map(_.getLong(0)).sorted.toSeq
+
+  /** After a driver returns, only the result's own blocks stay
+    * persisted (none for a reliable checkpoint, which lives in files),
+    * and the harness's freeScratch releases those. */
+  private def assertOnlyResultHeld(before: Set[Int], out: DataFrame,
+      local: Boolean): Unit = {
+    val held = persisted() -- before
+    assert(held.subsetOf(checkpointLeaves(out)),
+      s"intermediate rounds still persisted: $held")
+    if (local) assert(held.nonEmpty, "the local result lives in blocks")
+    Lineage.freeScratch(spark)
+    assert((persisted() -- before).isEmpty,
+      "freeScratch must release the result")
+  }
+
+  test("rounds: intermediate rounds released, result owned as scratch") {
+    val before = persisted()
+    val seen = ArrayBuffer.empty[Int]
+    // past LeafEvery, so a mid-loop write is made and released too
+    val n = LoopExec.LeafEvery + 2
+    val out = LoopExec.rounds(n, spark.range(10).toDF(),
+      (i, _) => seen += i)(plusOne)
+    assert(seen.toSeq == (1 to n))
+    assert(ids(out) == (n.toLong until n + 10L))
+    assertOnlyResultHeld(before, out,
+      local = spark.sparkContext.getCheckpointDir.isEmpty)
+  }
+
+  test("rounds(0, init) returns init unexecuted") {
+    val init = spark.range(3).toDF()
+    assert(LoopExec.rounds(0, init)(_ => fail("no round may run")) eq init)
+  }
+
+  test("untilStable: stops when changed() reads false, frees every " +
+      "replaced round") {
+    val before = persisted()
+    var reads = 0
+    val out = LoopExec.untilStable(5, spark.range(10).toDF())(plusOne) {
+      () => reads += 1; reads < 3
+    }
+    assert(reads == 3)
+    assert(ids(out) == (3L until 13L))
+    assertOnlyResultHeld(before, out, local = true)
+  }
+
+  test("untilStable whose first changed() is false runs exactly one " +
+      "round") {
+    var steps = 0
+    val out = LoopExec.untilStable(5, spark.range(4).toDF()) { df =>
+      steps += 1; plusOne(df)
+    }(() => false)
+    assert(steps == 1)
+    assert(ids(out) == (1L until 5L))
+    Lineage.freeScratch(spark)
+  }
 }

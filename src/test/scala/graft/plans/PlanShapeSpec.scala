@@ -1,5 +1,7 @@
 package graft.plans
 
+import scala.collection.mutable.ArrayBuffer
+
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
@@ -60,6 +62,15 @@ class PlanShapeSpec extends SparkSpec {
          _: BroadcastHashJoinExec => ()
   }
 
+  /** Runs `loop` and returns each round's prepared (unexecuted) plan,
+    * as [[LoopExec.roundPlan]] receives them. */
+  private def roundPlans(loop: => DataFrame): Seq[(Int, SparkPlan)] = {
+    val plans = ArrayBuffer.empty[(Int, SparkPlan)]
+    LoopExec.roundPlan.withValue(
+      (i, df) => plans += ((i, df.queryExecution.executedPlan)))(loop)
+    plans.toSeq
+  }
+
   private def assertNoAllPairs(name: String, p: SparkPlan): Unit = {
     assert(count(p) { case _: CartesianProductExec => () } == 0,
       s"$name: a join degenerated to a cartesian product:\n${p.toString.take(2000)}")
@@ -70,9 +81,8 @@ class PlanShapeSpec extends SparkSpec {
   test("q_pagerank iteration plan: 1 shuffle, broadcast rank join, no SMJ") {
     withStaticPlans {
     val g = graft.graph.GraphCatalog.tpch(spark, Dir)
-    val plans = scala.collection.mutable.ArrayBuffer.empty[(Int, SparkPlan)]
-    graft.graph.PageRank.run(g.pages, g.edges, iters = 2,
-      onIterationPlan = (i, df) => plans += ((i, df.queryExecution.executedPlan)))
+    val plans =
+      roundPlans(graft.graph.PageRank.run(g.pages, g.edges, iters = 2))
     assert(plans.size == 2)
     for ((i, p) <- plans) {
       // contributions join + keep-alive union + groupBy(dst): the agg's
@@ -94,10 +104,8 @@ class PlanShapeSpec extends SparkSpec {
       "never a plan subtree") {
     withStaticPlans {
     val g = graft.graph.GraphCatalog.tpch(spark, Dir)
-    val plans = scala.collection.mutable.ArrayBuffer.empty[(Int, SparkPlan)]
-    graft.graph.PageRank.run(g.pages, g.edges, iters = 2,
-      redistributeDangling = true,
-      onIterationPlan = (i, df) => plans += ((i, df.queryExecution.executedPlan)))
+    val plans = roundPlans(graft.graph.PageRank.run(g.pages, g.edges,
+      iters = 2, redistributeDangling = true))
     assert(plans.size == 2)
     for ((i, p) <- plans) {
       // the contribution agg is the iteration's ONLY shuffle (round 21:
@@ -158,10 +166,8 @@ class PlanShapeSpec extends SparkSpec {
     val g = graft.graph.GraphCatalog.tpch(spark, Dir)
     val src = g.pages.agg(org.apache.spark.sql.functions.min(
       org.apache.spark.sql.functions.col("page"))).first().getString(0)
-    val plans = scala.collection.mutable.ArrayBuffer.empty[(Int, SparkPlan)]
-    graft.graph.Bfs.hopDistances(g.pages, g.edges, src, maxRounds = 3,
-      knownVertexCount = Some(g.n),
-      onRoundPlan = (d, df) => plans += ((d, df.queryExecution.executedPlan)))
+    val plans = roundPlans(graft.graph.Bfs.hopDistances(g.pages, g.edges,
+      src, maxRounds = 3, knownVertexCount = Some(g.n)))
     assert(plans.size == 3)
     for ((d, p) <- plans) {
       // the candidate distinct is the round's ONLY shuffle — frontier
@@ -188,9 +194,7 @@ class PlanShapeSpec extends SparkSpec {
       "per undirected branch, all broadcast") {
     withStaticPlans {
     val g = graft.graph.GraphCatalog.tpch(spark, Dir)
-    val plans = scala.collection.mutable.ArrayBuffer.empty[(Int, SparkPlan)]
-    graft.graph.KCore.peel(g.edges, k = 3, rounds = 2,
-      onRoundPlan = (r, df) => plans += ((r, df.queryExecution.executedPlan)))
+    val plans = roundPlans(graft.graph.KCore.peel(g.edges, k = 3, rounds = 2))
     assert(plans.size == 2)
     for ((r, p) <- plans) {
       // the partial-agg'd degree count is the round's only shuffle
@@ -282,9 +286,7 @@ class PlanShapeSpec extends SparkSpec {
         w.select(col("s2").as("src"), col("s1").as("dst"), col("w")))
       .persist()
     val src = und.agg(mn(col("src"))).first().getLong(0)
-    val plans = scala.collection.mutable.ArrayBuffer.empty[(Int, SparkPlan)]
-    graft.graph.Sssp.distances(und, src, rounds = 3,
-      onRoundPlan = (r, df) => plans += ((r, df.queryExecution.executedPlan)))
+    val plans = roundPlans(graft.graph.Sssp.distances(und, src, rounds = 3))
     und.unpersist()
     assert(plans.size == 3)
     for ((r, p) <- plans) {
@@ -315,9 +317,7 @@ class PlanShapeSpec extends SparkSpec {
       .select(col("s_suppkey").as("page"))
     val e = coEdges(45)
       .select(col("s1").as("src"), col("s2").as("dst"))
-    val plans = scala.collection.mutable.ArrayBuffer.empty[(Int, SparkPlan)]
-    graft.graph.Lpa.communities(pages, e, rounds = 2,
-      onRoundPlan = (r, df) => plans += ((r, df.queryExecution.executedPlan)))
+    val plans = roundPlans(graft.graph.Lpa.communities(pages, e, rounds = 2))
     assert(plans.size == 2)
     for ((r, p) <- plans) {
       // votes join on dst (1) + the (vertex, label) count agg (2) + the

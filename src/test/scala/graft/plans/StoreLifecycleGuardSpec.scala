@@ -11,8 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * registry live in [[Lineage]] alone. Thirty hand copies of the
   * lifecycle and 81 per-artifact caches once grew from one original;
   * these scans fail the build when a copy reappears in `src/main`. The
-  * last scan keeps graft's tuning in code: six `spark.graft.*` session
-  * keys once carried settings no caller changed. */
+  * `spark.graft.*` scan keeps graft's tuning in code: six session keys
+  * once carried settings no caller changed. The loop scan keeps the
+  * iteration bookkeeping in [[LoopExec]]: six graph loops once chose
+  * their own truncation and checkpoint target, and five took a
+  * test-only per-round plan parameter. */
 class StoreLifecycleGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src", "main", "scala")
@@ -118,5 +121,26 @@ class StoreLifecycleGuardSpec extends AnyFunSuite {
     assert(imports.isEmpty,
       "call the registry as Lineage.<method> so this scan sees it:\n" +
         imports.mkString("\n"))
+  }
+
+  /** The only readers of the checkpoint-dir choice: the drivers'
+    * [[LoopExec.materialize]], and the GraphX id table, which needs the
+    * checkpoint's path to delete it. */
+  private val checkpointDirReaders = Set("LoopExec.scala",
+    "PageRankGraphX.scala")
+
+  test("no per-round plan parameter; checkpoint dir read only by the " +
+      "loop driver") {
+    val hits = for {
+      f <- sources :+ home
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      pat <- Seq("onRoundPlan", "onIterationPlan", "getCheckpointDir")
+      if line.contains(pat) && !(pat == "getCheckpointDir" &&
+        checkpointDirReaders(f.getFileName.toString))
+    } yield s"$f:${i + 1}: $pat"
+    assert(hits.isEmpty,
+      "inspect round plans through LoopExec.roundPlan and write loop " +
+        "results through LoopExec.materialize / rounds / untilStable:\n" +
+        hits.mkString("\n"))
   }
 }
